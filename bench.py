@@ -29,12 +29,11 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 HEADLINE = [
     "flagship_featurize",
     "asof_join_union",
-    "asof_join_cogroup",
     "sessionize",
     "sliding_windows",
     "time_range_window",
@@ -53,7 +52,6 @@ HEADLINE = [
     "sampled_time_windows",
     # added round 5: the composed corpus-prep flagship
     "llm_corpus_prep",
-    "ann_brute_topk_arrow",
     # added round 6: zero-copy window refs (vs sliding_windows'
     # materialized form — the per-round delta shows the amplification
     # saving at driver-bench scale)

@@ -11,40 +11,36 @@ Reference semantics being reproduced (SURVEY.md §2.3 J1–J3):
   end-inclusive per the reference's searchsorted sides
   (fishing_feature_generation.py:59-60); -1.0 (UNCLASSIFIED) elsewhere.
 
-Four physical strategies, same results (all gate-checked against the
+Three physical strategies, same results (all gate-checked against the
 same DuckDB ASOF oracle):
 
 1. ``asof_join_union`` — pure DataFrame plan: union facts+annotations,
    one window `last(value, ignorenulls=True)` over
    (entity, ts) rowsBetween(unboundedPreceding, 0).  One shuffle, fully
-   JVM-side, whole-stage-codegen'd; the default at scale.
-2. ``asof_join_cogroup`` — cogroup().applyInPandas(pd.merge_asof):
-   per-entity Arrow-batched sort-merge, linear like the reference's
-   searchsorted.  Used when the payload is wide (many annotation
-   columns) or semantics exceed what the window trick expresses
-   (e.g. tolerance).
-3. ``asof_join_broadcast`` — map-side searchsorted against a broadcast
+   JVM-side, whole-stage-codegen'd; the default at scale.  Over two
+   tables bucketed by entity (layout.write_bucketed) it still plans one
+   Exchange (Union discards its children's partitioning).
+2. ``asof_join_broadcast`` — map-side searchsorted against a broadcast
    per-entity annotation index: ZERO shuffle of the fact table.  The
    pick when the annotation dim is small, which at 10^12 fact rows is
    the difference between moving nothing and moving everything.
-4. ``asof_join_chunked`` — time-salted + re-merged: for SKEWED
-   entities, where strategies 1-2 serialize each entity into one task.
+3. ``asof_join_chunked`` — time-salted + re-merged: for SKEWED
+   entities, where the union form serializes each entity into one task.
    Salt = time chunk; local union-form merge per (entity, chunk);
    terminal annotation state re-merged through a tiny per-chunk carry
    frame.  Measured on one 12.8M-row hot entity at 8 cores: 11.3 s
    (union, serial window) -> 4.1 s (2.8x; the gap grows linearly with
    hot-entity size).
+
+NULL entities group like any other value (SQL grouping semantics): a
+NULL-entity fact takes the latest NULL-entity annotation in every
+strategy.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-
-# NULL-entity stand-in for pandas merge_asof(by=...) — an object()
-# singleton no data value can equal (see asof_join_cogroup)
-_NULL_BY_KEY = object()
 
 
 def asof_join_union(
@@ -96,109 +92,6 @@ def asof_join_union(
     return out.filter(F.col("_src") == 1).select(
         *fact_cols, *[f"asof_{c}" for c in value_cols]
     )
-
-
-def asof_join_cogroup(
-    facts: DataFrame,
-    annotations: DataFrame,
-    entity: str = "image_id",
-    ts: str = "ts",
-    ann_ts: str = "start_ts",
-    value_cols: tuple[str, ...] = ("label",),
-    tolerance: pd.Timedelta | None = None,
-    coarse_buckets: int | None = -1,
-) -> DataFrame:
-    """Backward as-of via cogroup + pd.merge_asof (Arrow sort-merge).
-
-    Both sides shuffle once on the grouping key; each cogroup arrives
-    as pandas frames and merge_asof runs the linear backward scan.
-    This is the direct Spark analog of the reference's per-vessel
-    searchsorted kernel.
-
-    ``coarse_buckets`` — per-ENTITY cogroups pay the Arrow + Python
-    call overhead once per entity (~3 ms), which dominates when
-    entities are small (1500 entities x 67 rows: 4.8 s vs 0.3 s for
-    the union form).  The default cogroups on crc32(entity) %
-    (4 x defaultParallelism) buckets instead and lets ONE
-    merge_asof(by=entity) handle every entity in the bucket —
-    identical semantics (pandas `by` matching = per-entity backward
-    scan), overhead amortized across the bucket, skew no worse (a hot
-    entity still occupies one bucket, exactly as it occupied one
-    cogroup).  -1 = auto (4 x defaultParallelism); None/0 = one
-    cogroup per entity.
-
-    Pass None when both sides are AT-REST bucketed by entity
-    (layout.write_bucketed): per-entity grouping is satisfied by the
-    scan's hashpartitioning(entity) — ZERO Exchange (plan-pinned in
-    tests/test_layout.py) — while the coarse crc32 key would force a
-    re-shuffle.  Coarse is for ad-hoc inputs that shuffle anyway.
-    """
-    import pyspark.sql.types as T
-
-    out_fields = list(facts.schema.fields) + [
-        T.StructField(f"asof_{c}", annotations.schema[c].dataType) for c in value_cols
-    ]
-    out_schema = T.StructType(out_fields)
-    fact_names = [f.name for f in facts.schema.fields]
-
-    if coarse_buckets == -1:
-        coarse_buckets = 4 * facts.sparkSession.sparkContext.defaultParallelism
-
-    def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        left = left.sort_values(ts, kind="mergesort")
-        if right.empty:
-            out = left.copy()
-            for c in value_cols:
-                out[f"asof_{c}"] = None
-            return out
-        right = right.sort_values(ann_ts, kind="mergesort")[
-            [entity, ann_ts, *value_cols]
-        ]
-        right = right.rename(columns={c: f"asof_{c}" for c in value_cols})
-        # pandas `by` hash-matching skips NaN/None keys, but SQL group
-        # semantics must match NULL entities to NULL annotations (the
-        # dirty-data hot key).  The fill value is a process-local
-        # object() singleton, which no data value can collide with (a
-        # string sentinel would conflate a legitimate entity equal to
-        # it with the NULL group).
-        by_l, by_r = left[entity], right[entity]
-        if by_l.isna().any() or by_r.isna().any():
-            null_key = _NULL_BY_KEY
-            left = left.assign(
-                **{entity: by_l.astype(object).where(by_l.notna(), null_key)}
-            )
-            right = right.assign(
-                **{entity: by_r.astype(object).where(by_r.notna(), null_key)}
-            )
-            restore_null = True
-        else:
-            restore_null = False
-        merged = pd.merge_asof(
-            left,
-            right,
-            left_on=ts,
-            right_on=ann_ts,
-            by=entity,
-            direction="backward",
-            tolerance=tolerance,
-        )
-        if restore_null:
-            col = merged[entity]
-            merged[entity] = col.where([v is not _NULL_BY_KEY for v in col], None)
-        return merged[fact_names + [f"asof_{c}" for c in value_cols]]
-
-    if coarse_buckets:
-        key = (
-            F.crc32(F.coalesce(F.col(entity).cast("string"), F.lit("\x00__null__")))
-            % coarse_buckets
-        ).alias("_cg")
-        grouped = facts.groupBy(key).cogroup(annotations.groupBy(key))
-    else:
-        # one entity per cogroup: `by` matching is vacuous, same kernel
-        grouped = facts.groupBy(entity).cogroup(annotations.groupBy(entity))
-    return grouped.applyInPandas(merge, schema=out_schema)
 
 
 def interval_label_join(
@@ -360,8 +253,8 @@ def asof_join_broadcast(
     batch — any fact partitioning works, nothing moves.
 
     The driver-side collect is guarded: more than `max_broadcast_rows`
-    annotation rows raises ValueError (use asof_join_union /
-    asof_join_cogroup for large annotation sides) instead of silently
+    annotation rows raises ValueError (use asof_join_union or
+    asof_join_chunked for large annotation sides) instead of silently
     OOMing the driver.  No-match rows get SQL NULL; values round-trip
     in the annotation column's own dtype (ints/strings/bools stay
     exact — nothing is funneled through float64).
@@ -370,7 +263,13 @@ def asof_join_broadcast(
     fused with J1's binary search.
     """
     import numpy as np
+    import pandas as pd
     import pyspark.sql.types as T
+
+    def index_key(eid):
+        # groupby(dropna=False) keys the NULL group by NaN, which never
+        # equals itself; None stands in for it on both sides
+        return None if pd.isna(eid) else eid
 
     ann_rows = (
         annotations.select(entity, ann_ts, value_col)
@@ -382,11 +281,11 @@ def asof_join_broadcast(
         raise ValueError(
             f"asof_join_broadcast: annotation side exceeds "
             f"max_broadcast_rows={max_broadcast_rows}; use asof_join_union "
-            f"or asof_join_cogroup for large annotation tables"
+            f"or asof_join_chunked for large annotation tables"
         )
-    index: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for eid, grp in ann_rows.groupby(entity):
-        index[eid] = (
+    index: dict[object, tuple[np.ndarray, np.ndarray]] = {}
+    for eid, grp in ann_rows.groupby(entity, dropna=False):
+        index[index_key(eid)] = (
             grp[ann_ts].astype("datetime64[us]").astype("int64").to_numpy(),
             # object dtype: preserves the annotation dtype exactly
             # (int64 > 2^53, strings, bools) and admits None
@@ -404,8 +303,8 @@ def asof_join_broadcast(
         for pdf in batches:
             ts_us = pdf[ts].astype("datetime64[us]").astype("int64").to_numpy()
             out = np.full(len(pdf), None, dtype=object)
-            for eid, rows in pdf.groupby(entity).groups.items():
-                hit = idx.get(eid)
+            for eid, rows in pdf.groupby(entity, dropna=False).indices.items():
+                hit = idx.get(index_key(eid))
                 if hit is None:
                     continue
                 ann_us, vals = hit
@@ -579,7 +478,6 @@ def asof_join(
     observationally identical (shared DuckDB ASOF oracle + goldens):
 
     - ``'union'``    — asof_join_union (default at scale; one shuffle).
-    - ``'cogroup'``  — asof_join_cogroup (Arrow merge_asof; wide payloads).
     - ``'broadcast'``— asof_join_broadcast (zero fact shuffle; small
       annotation dims only — raises past its row cap).  Single value
       column (the broadcast index carries one payload array).
@@ -612,8 +510,6 @@ def asof_join(
     """
     if strategy == "union":
         return asof_join_union(facts, annotations, entity, ts, ann_ts, value_cols)
-    if strategy == "cogroup":
-        return asof_join_cogroup(facts, annotations, entity, ts, ann_ts, value_cols)
     if strategy == "broadcast":
         if len(value_cols) != 1:
             raise ValueError(

@@ -74,63 +74,39 @@ def _stage_frames(
 ) -> list[DataFrame]:
     """The pipeline, one frame per completed stage (len == 7, indexed
     by STAGES order).  ``materialize_stages`` additionally
-    localCheckpoints the per-stage outputs (1-6; 7 reuses 6's block)
-    so an audit that counts every stage touches each subtree exactly
-    once and each stage builds from its predecessor's materialized
-    blocks — the production audit configuration; without it the stages
-    stay one lazy plan."""
+    localCheckpoints the per-stage outputs (the gate block serves 1-2;
+    3-6 get one each; 7 reuses 6's block) so an audit that counts
+    every stage touches each subtree exactly once and each stage
+    builds from its predecessor's materialized blocks — the production
+    audit configuration; without it the stages stay one lazy plan."""
     frames: list[DataFrame] = []
-    d = docs
+    # 1-2: row-local quality + repetition gates (no shuffle beyond the
+    # explode-parallelism repartition), both gate columns computed in
+    # one projection and then filtered in stage order.
     # Gate barrier (materializing runs only): Catalyst pushes a filter
     # on a computed column below Exchanges all the way to the scan,
     # (a) re-deriving the gate expression inside the predicate — the
     # built-in analog of the guide's duplicated-UDF pushdown — and
     # (b) evaluating it at SCAN parallelism, which for a small-file
-    # corpus is ONE task.  A localCheckpoint between computing the gate
-    # column and filtering on it pins the expensive expression to one
-    # evaluation at repartitioned parallelism (measured at sf1.0:
-    # repetition gate 31 s -> ~3 s on local[32]).  Lazy (default)
-    # builds keep the one-plan contract for oracle replay.
-    barrier = materialize_survivors or materialize_stages
-    # 1-2: row-local quality + repetition gates (no shuffle beyond the
-    # explode-parallelism repartition)
-    if barrier and not materialize_stages:
-        # fused gate barrier: compute BOTH gate columns in one
-        # projection behind one checkpoint, then filter in stage order.
-        # dup_2gram_frac is evaluated on the (few) quality-rejected
-        # rows too, but one checkpoint pass beats two; the staged-audit
-        # path below keeps one checkpoint per stage so each count reads
-        # its own materialized frame.
-        d = text.with_repetition_stats(
-            text.with_quality_score(_ensure_parallelism(d), text_col),
-            text_col,
-            ns=(2,),
-        ).localCheckpoint(eager=True)
-        d = d.filter(F.col("quality") >= quality_min)
-        frames.append(d)
-        d = d.filter(F.col("dup_2gram_frac") <= max_dup_2gram)
-        frames.append(d)
-    else:
-        if barrier:
-            d = _ensure_parallelism(d)
-        d = text.with_quality_score(d, text_col)
-        if barrier:
-            d = d.localCheckpoint(eager=True)
-        d = d.filter(F.col("quality") >= quality_min)
-        if materialize_stages:
-            # without this, the audit's n1/n2 counts re-run the
-            # raw-corpus scan + gates that the stage-3 build also runs;
-            # checkpointing here also lets every later stage read from
-            # this block instead of rescanning the source
-            d = d.localCheckpoint(eager=True)
-        frames.append(d)
-        d = text.with_repetition_stats(d, text_col, ns=(2,))
-        if barrier:
-            d = d.localCheckpoint(eager=True)
-        d = d.filter(F.col("dup_2gram_frac") <= max_dup_2gram)
-        if materialize_stages:
-            d = d.localCheckpoint(eager=True)
-        frames.append(d)
+    # corpus is ONE task.  One localCheckpoint between computing the
+    # gate columns and filtering on them pins the expensive expressions
+    # to one evaluation at repartitioned parallelism (measured at
+    # sf1.0: repetition gate 31 s -> ~3 s on local[32]).
+    # dup_2gram_frac is evaluated on the (few) quality-rejected rows
+    # too, but one checkpoint pass beats two; the audit's stage-1 and
+    # stage-2 counts are two filters over the same block.  Lazy
+    # (default) builds keep the one-plan contract for oracle replay.
+    d = text.with_repetition_stats(
+        text.with_quality_score(_ensure_parallelism(docs), text_col),
+        text_col,
+        ns=(2,),
+    )
+    if materialize_survivors or materialize_stages:
+        d = d.localCheckpoint(eager=True)
+    d = d.filter(F.col("quality") >= quality_min)
+    frames.append(d)
+    d = d.filter(F.col("dup_2gram_frac") <= max_dup_2gram)
+    frames.append(d)
     # 3: exact dedup — keep the smallest id per content hash
     w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
     d = (

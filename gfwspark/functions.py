@@ -46,16 +46,6 @@ def clip(col: str | Column, lo: float, hi: float) -> Column:
     return F.least(F.greatest(c, F.lit(lo)), F.lit(hi))
 
 
-def parse_flexible_timestamp(col: str | Column) -> Column:
-    """F3: ISO string or unix epoch-seconds number, forced UTC
-    (metadata.py:405-415)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(
-        c.cast("string").rlike(r"^\d+(\.\d+)?$"),
-        F.timestamp_seconds(c.cast("double")),
-    ).otherwise(F.to_timestamp(c))
-
-
 def split_multilabel(col: str | Column, sep: str = r"\|") -> Column:
     """F6: '|'-separated multi-label → trimmed non-empty array
     (metadata.py:318-321)."""

@@ -9,7 +9,7 @@ hold many entities, so the equivalent invariant is:
 
 After this, every per-entity kernel (as-of merge, sliding windows,
 sessionization) sees its entity's rows contiguous and time-ascending —
-searchsorted/merge_asof run linear, exactly like the reference's numpy
+searchsorted runs linear, exactly like the reference's numpy
 hot path.
 
 Skew: a hot entity (millions of rows at 100 TB) would overflow one

@@ -50,21 +50,21 @@ def register(name: str, oracle: str | None):
 # rows plus the local dtype-strict gate in tests/test_oracle_parity.py
 # (which replays ALL oracles at the driver's sf0.01 every session).
 #
-# Round-6 rotation: (a) the only three queries with no driver row
+# Round-6 rotation: (a) the only queries with no driver row
 # EVER (registered late-r5 after the window filled); (b) debut rows
 # for the queries NEW this round (int8 IVF composition, corpus-prep
 # stage audit); (c) re-gates for queries whose code paths CHANGED
 # this round (upsert schema-evolution manifest fix, corpus audit
 # wiring); (d) all 43 queries whose last driver row is round 4 —
-# they would otherwise go two rounds stale.  3 never-gated +
-# 2 debut + 2 changed-code + 43 refresh = 50.  With r5's rows,
+# they would otherwise go two rounds stale.  2 never-gated +
+# 2 debut + 2 changed-code + 43 refresh = 49; the first query in
+# registration order takes the 50th slot.  With r5's rows,
 # r5 ∪ r6 covers every registered query at most one round stale.
 # ---------------------------------------------------------------------
 
 _DRIVER_PRIORITY: tuple[str, ...] = (
     # never driver-gated (registered late-r5, window was full)
     "zorder_key",
-    "ann_brute_topk_arrow",
     "ann_int8_topk",
     # new this round — debut rows
     "ann_ivf_int8",
@@ -258,14 +258,6 @@ def q_asof_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         img, _ann_dedup(spark, sf_dir), value_cols=("label",)
     )
     return out.withColumnRenamed("asof_label", "asof_label")
-
-
-@register("asof_join_cogroup", _ASOF_ORACLE)
-def q_asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    img = tables.image_caption_from_events(spark, sf_dir).select(
-        "image_id", "ts", "event_id"
-    )
-    return asof.asof_join_cogroup(img, _ann_dedup(spark, sf_dir), value_cols=("label",))
 
 
 # ---------------------------------------------------------------------

@@ -287,8 +287,8 @@ SELECT q_id, vec_id, cosine, rank FROM r WHERE rank <= 5
 def q_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r7: served by the Arrow/BLAS kernel — bit-identical scores and
     # tie-break to the JVM aggregate() fold (the kernel rounds with
-    # util.round_half_up, proven by the shared oracle and the twin
-    # query's r6 driver row), at one matmul per partition instead of a
+    # util.round_half_up, proven by the shared oracle), at one matmul
+    # per partition instead of a
     # per-(query,row) scalar fold: measured 3.7 s -> 0.5 s at the
     # driver's sf1.0.  The fold form stays available as
     # similarity.brute_force_topk (plan-shape tests + NL baseline).
@@ -1734,24 +1734,6 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("w_punct", float(w["x_punct"])),
     ]
     return spark.createDataFrame(rows, "coef string, value double")
-
-
-# ---------------------------------------------------------------------
-# Arrow/BLAS twin of the brute-force ANN (similarity.brute_force_topk_
-# arrow): one float64 matmul per corpus partition against the
-# broadcast query matrix + local top-k, instead of a per-(row, query)
-# aggregate() fold.  Same oracle as ann_brute_topk — results verified
-# identical after round-6 (measured 6.7x at 100 queries, flat in Q).
-# ---------------------------------------------------------------------
-
-
-@register("ann_brute_topk_arrow", _BRUTE_TOPK_ORACLE)
-def q_brute_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = tables.load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    return similarity.brute_force_topk_arrow(emb, q, k=5)
 
 
 # ---------------------------------------------------------------------

@@ -27,11 +27,15 @@ def get_spark(
     cluster contract — a builder .master() call would silently override
     it and run the job local on the driver node.  Standalone scripts
     and tests get local[$SPARK_GRAFT_CPUS] only when no master is
-    configured anywhere.
+    configured anywhere.  Defaults fit the host: the process's CPU set
+    and half of physical RAM for the driver ($SPARK_GRAFT_DRIVER_MEM
+    overrides).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
+    # local mode runs every task inside the driver: half of RAM
+    half_ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
 
     b = SparkSession.builder.appName(app_name)
     if master is not None:
@@ -64,16 +68,13 @@ def get_spark(
         # task granularity; 128 MB is the classic sweet spot.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{half_ram_mb}m"),
+        )
         .config("spark.ui.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():
             b = b.config(k, v)
     return b.getOrCreate()
-
-
-def stop_spark() -> None:
-    s = SparkSession.getActiveSession()
-    if s is not None:
-        s.stop()

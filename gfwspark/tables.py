@@ -33,19 +33,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-TPCH_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view (idempotent)."""
-    for name in TPCH_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 # --------------------------------------------------------------------------

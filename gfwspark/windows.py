@@ -10,7 +10,8 @@ where it can't (repeat-pad, alignment padding):
 - W7  month-grid sliding time ranges           → month grid + interval join
 - W9  sessionization                           → see sessionize.py
 - W11 tumbling windows                         → date_trunc / F.window
-- W12 per-window min/max bounds                → F.min/F.max over frame
+- W12 per-window min/max bounds                → win_start_ts/win_end_ts of
+                                                 sliding_feature_windows
 
 All frames are backward-only (rowsBetween(-k, 0)) — zero temporal
 leakage by construction (north rule).
@@ -183,16 +184,6 @@ def with_sliding_agg_large(
         )
         drop += ["_cum2", "_s2"]
     return out.drop(*drop)
-
-
-def with_window_bounds(
-    df: DataFrame, entity: str = "image_id", ts: str = "ts", window_size: int = 16
-) -> DataFrame:
-    """W12: [min_ts, max_ts] of the backward fixed-count frame."""
-    w = Window.partitionBy(entity).orderBy(ts).rowsBetween(-(window_size - 1), 0)
-    return df.withColumn("win_start_ts", F.min(ts).over(w)).withColumn(
-        "win_end_ts", F.max(ts).over(w)
-    )
 
 
 # ------------------------------------------------------------------
@@ -866,29 +857,10 @@ def month_grid_ranges(
     )
 
 
-def range_slice_join(
-    df: DataFrame,
-    ranges: DataFrame,
-    entity: str = "image_id",
-    ts: str = "ts",
-    start: str = "range_start",
-    end: str = "range_end",
-) -> DataFrame:
-    """J3: assign each fact row to every (broadcast) range covering it —
-    start-inclusive, end-exclusive like
-    np_array_extract_slices_for_time_ranges (feature_utilities.py:330-331)."""
-    return df.join(
-        F.broadcast(ranges),
-        (F.col(ts) >= F.col(start)) & (F.col(ts) < F.col(end)),
-        "inner",
-    )
-
-
 # ------------------------------------------------------------------
-# Backfill / forward-fill of missing values (north-rule "backfill"):
-# ffill carries the last non-null observation forward (backward-only
-# frame → no leakage); bfill looks *forward* and is therefore only
-# legal for label/target construction (documented leakage boundary).
+# Forward-fill of missing values (north-rule "backfill"): ffill carries
+# the last non-null observation forward (backward-only frame → no
+# leakage).
 # ------------------------------------------------------------------
 
 def with_ffill(
@@ -907,25 +879,6 @@ def with_ffill(
     out = df
     for c in cols:
         out = out.withColumn(f"{c}_ffill", F.last(c, ignorenulls=True).over(w))
-    return out
-
-
-def with_bfill(
-    df: DataFrame,
-    cols: list[str],
-    entity: str = "image_id",
-    ts: str = "ts",
-    order_tiebreak: str | None = None,
-) -> DataFrame:
-    order = [F.col(ts).asc()] + ([F.col(order_tiebreak).asc()] if order_tiebreak else [])
-    w = (
-        Window.partitionBy(entity)
-        .orderBy(*order)
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    out = df
-    for c in cols:
-        out = out.withColumn(f"{c}_bfill", F.first(c, ignorenulls=True).over(w))
     return out
 
 

@@ -34,7 +34,7 @@ def main() -> None:
     ap.add_argument("--phash-from-bytes", action="store_true")
     ap.add_argument(
         "--asof-strategy", default="union",
-        choices=["union", "cogroup", "auto"],
+        choices=["union", "auto"],
         help="as-of physical strategy; 'auto' salts hot entities "
              "through the chunked kernel (skewed tables)",
     )

@@ -100,20 +100,6 @@ def test_asof_union_matches_oracle(img_df, ann_df, img_pdf):
         assert np.allclose(got, want, equal_nan=True), eid
 
 
-def test_asof_cogroup_equals_union(img_df, ann_df):
-    ann1 = ann_df.groupBy("image_id", "start_ts").agg(F.max("value").alias("value"))
-    small = img_df.select("image_id", "ts", "phash")
-    a = (
-        asof.asof_join_union(small, ann1, value_cols=("value",))
-        .toPandas().sort_values(["image_id", "ts"]).reset_index(drop=True)
-    )
-    b = (
-        asof.asof_join_cogroup(small, ann1, value_cols=("value",))
-        .toPandas().sort_values(["image_id", "ts"]).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-
 def test_interval_labels_match_oracle(img_df, ann_df, img_pdf):
     out = (
         asof.interval_label_join(img_df.select("image_id", "ts"), ann_df)
@@ -746,7 +732,6 @@ def test_asof_auto_explicit_strategies(img_df, ann_df):
         .toPandas().sort_values(["image_id", "ts"]).reset_index(drop=True)
     )
     for kw in (
-        dict(strategy="cogroup"),
         dict(strategy="broadcast"),
         dict(strategy="chunked", chunk_s=86400),
     ):
@@ -761,8 +746,9 @@ def test_asof_auto_explicit_strategies(img_df, ann_df):
         asof.asof_join(
             small, ann1, value_cols=("value", "value"), strategy="broadcast"
         )
-    with _pytest.raises(ValueError, match="strategy"):
-        asof.asof_join(small, ann1, strategy="nope")
+    for removed in ("nope", "cogroup"):
+        with _pytest.raises(ValueError, match="strategy"):
+            asof.asof_join(small, ann1, strategy=removed)
 
 
 def test_asof_auto_null_hot_entity(spark):
@@ -862,7 +848,7 @@ def test_featurize_full_with_annotations(img_df, ann_df):
         )
         .toPandas().sort_values(["image_id", "ts"]).reset_index(drop=True)
     )
-    for strat in ("union", "cogroup"):
+    for strat in ("union", "auto"):
         out = features.featurize_full(
             img_df, annotations=ann1, window_sizes=(4,), asof_strategy=strat
         )
@@ -873,18 +859,29 @@ def test_featurize_full_with_annotations(img_df, ann_df):
         pd.testing.assert_frame_equal(want, got, check_dtype=False)
 
 
-def test_cogroup_coarse_buckets_equal_including_nulls(spark, img_df, ann_df):
-    """Bucketed cogroup (one merge_asof(by=entity) per crc32 bucket —
-    the Arrow-overhead amortization) must equal both the per-entity
-    cogroup and the union form, including NULL entities (pandas `by`
-    skips NaN keys; the kernel sentinel-fills to keep SQL group
-    semantics)."""
+@pytest.mark.parametrize(
+    "join",
+    [
+        lambda f, a: asof.asof_join_union(f, a, value_cols=("value",)),
+        lambda f, a: asof.asof_join_chunked(
+            f, a, 86400, value_cols=("value",), hot_ids=[None]
+        ),
+        lambda f, a: asof.asof_join_broadcast(f, a, value_col="value"),
+    ],
+    ids=["union", "chunked", "broadcast"],
+)
+def test_asof_null_entity_matches_null_annotation(spark, img_df, ann_df, join):
+    """NULL entities group like any value (SQL grouping semantics): a
+    NULL-entity fact takes the latest NULL-entity annotation, or NULL
+    before the first one, in every strategy; every other entity still
+    matches the numpy oracle."""
     import datetime as dt
 
     ann1 = ann_df.groupBy("image_id", "start_ts").agg(F.max("value").alias("value"))
     facts = img_df.select("image_id", "ts", "phash").unionByName(
         spark.createDataFrame(
-            [(None, dt.datetime(2024, 1, 1, 0, 0, 5), 1)],
+            [(None, dt.datetime(2024, 1, 1, 0, 0, 0), 0),
+             (None, dt.datetime(2024, 1, 1, 0, 0, 5), 1)],
             "image_id string, ts timestamp, phash long",
         )
     )
@@ -894,22 +891,21 @@ def test_cogroup_coarse_buckets_equal_including_nulls(spark, img_df, ann_df):
             "image_id string, start_ts timestamp, value double",
         )
     )
-    want = (
-        asof.asof_join_union(facts, ann2, value_cols=("value",))
-        .toPandas()
-        .sort_values(["image_id", "ts"], na_position="first")
-        .reset_index(drop=True)
-    )
-    for cb in (-1, 4, None):
-        got = (
-            asof.asof_join_cogroup(
-                facts, ann2, value_cols=("value",), coarse_buckets=cb
-            )
-            .toPandas()
-            .sort_values(["image_id", "ts"], na_position="first")
-            .reset_index(drop=True)
+    out = join(facts, ann2).toPandas()
+    got_null = out[out.image_id.isna()].sort_values("ts")["asof_value"].tolist()
+    assert len(got_null) == 2 and pd.isna(got_null[0]) and got_null[1] == 7.0, got_null
+
+    ann_pdf = ann2.toPandas()
+    for eid, grp in out[out.image_id.notna()].groupby("image_id"):
+        grp = grp.sort_values("ts")
+        a = ann_pdf[ann_pdf.image_id == eid].sort_values("start_ts")
+        want = oracle.asof_backward(
+            grp["ts"].astype("int64").to_numpy(),
+            a["start_ts"].astype("int64").to_numpy(),
+            a["value"].to_numpy(dtype=np.float64),
         )
-        pd.testing.assert_frame_equal(want, got[want.columns], check_dtype=False)
+        got = grp["asof_value"].to_numpy(dtype=np.float64)
+        assert np.allclose(got, want, equal_nan=True), eid
 
 
 def test_sliding_window_refs_reconstruct(img_df, img_pdf):

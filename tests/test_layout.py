@@ -179,21 +179,18 @@ def test_zorder_key_interleave_locality():
         assert r["z"] == want, (r["x"], r["y"], r["z"], want)
 
 
-def test_bucketed_asof_zero_shuffle(spark, tmp_path):
-    """The at-rest answer to the as-of shuffle: with BOTH sides written
-    bucketed by entity (layout.write_bucketed), the PER-ENTITY cogroup
-    (coarse_buckets=None — coarse bucketing groups on a derived
-    crc32 key the scan's partitioning cannot satisfy) meets its
-    clustering requirement straight from the scan — ZERO Exchange in
-    the plan (the union form cannot: Union discards children's
-    partitioning, so it re-shuffles even over bucketed reads).
-    Results equal the union form exactly."""
-    import pyspark.sql.functions as F
-
-    from gfwspark import asof, layout, tables
-
+def test_bucketed_asof_union_equals_adhoc(spark):
+    """The as-of over an at-rest layout: with BOTH sides written
+    bucketed by entity (layout.write_bucketed), the union form equals
+    the union form over the same ad-hoc frames.  The bucketing does not
+    remove its shuffle: Union discards its children's partitioning, so
+    the window still plans one Exchange (pinned on Spark 4.1.2)."""
     import shutil
     from urllib.parse import urlparse
+
+    import pandas as pd
+
+    from gfwspark import asof
 
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     for t in ("zb_facts", "zb_ann"):
@@ -213,18 +210,17 @@ def test_bucketed_asof_zero_shuffle(spark, tmp_path):
     layout.write_bucketed(ann, "zb_ann", ["image_id"], 4, sort_cols=["image_id", "start_ts"])
     f, a = spark.table("zb_facts"), spark.table("zb_ann")
 
-    out = asof.asof_join_cogroup(f, a, value_cols=("label",), coarse_buckets=None)
+    out = asof.asof_join_union(f, a, value_cols=("label",))
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 0, plan
+    assert plan.count("Exchange") == 1, plan
 
-    import pandas as pd
-
+    key = ["image_id", "ts", "event_id"]
     want = (
-        asof.asof_join_union(f, a, value_cols=("label",))
-        .toPandas().sort_values(["image_id", "ts", "event_id"]).reset_index(drop=True)
+        asof.asof_join_union(img, ann, value_cols=("label",))
+        .toPandas().sort_values(key).reset_index(drop=True)
     )
-    got = out.toPandas().sort_values(["image_id", "ts", "event_id"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(want, got[want.columns], check_dtype=False)
+    got = out.toPandas().sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(want, got, check_dtype=False)
 
 
 def test_entity_stats_roundtrip_feeds_asof_auto(spark, tmp_path):
