@@ -177,8 +177,8 @@ def _featurize_full_geometry(spark) -> float:
        ROW: the naive with_sliding_agg at this geometry measured 111 s
        on this exact input — ~25x slower than this whole job.)
     2. materialized window extraction at W=12800 / shift=767 via
-       sliding_feature_windows — the anchor-explode plan (fan-out
-       W/shift ~ 16.7, never W).
+       sliding_feature_windows — the block-assembled plan (fan-out
+       W/shift ~ 16.7 block copies, never W).
 
     All window stages reuse one entity hashpartitioning."""
     import pyspark.sql.functions as F

@@ -20,9 +20,9 @@ is what keeps the plan scalable at 10^12 rows.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
-from gfwspark.util import epoch_s
+from gfwspark.util import entity_time_window, epoch_s
 
 from gfwspark import asof, sessionize
 
@@ -48,8 +48,7 @@ def with_lag_features(
     order_tiebreak: str | None = None,
 ) -> DataFrame:
     """Neighbor-based derived features (lag over the entity time order)."""
-    order = [F.col(ts).asc()] + ([F.col(order_tiebreak).asc()] if order_tiebreak else [])
-    w = Window.partitionBy(entity).orderBy(*order)
+    w = entity_time_window(entity, ts, order_tiebreak)
     prev_phash = F.lag("phash").over(w)
     prev_ts = F.lag(epoch_s(ts)).over(w)
     return df.withColumn(
@@ -119,9 +118,8 @@ def featurize(
 
     feat = with_lag_features(feat, entity=entity, ts=ts, order_tiebreak=order_tiebreak)
 
-    order = [F.col(ts).asc()] + ([F.col(order_tiebreak).asc()] if order_tiebreak else [])
-    wslide = (
-        Window.partitionBy(entity).orderBy(*order).rowsBetween(-(window_size - 1), 0)
+    wslide = entity_time_window(entity, ts, order_tiebreak).rowsBetween(
+        -(window_size - 1), 0
     )
     feat = (
         feat.withColumn("ham_w_avg", F.avg("phash_hamming").over(wslide))
@@ -162,9 +160,9 @@ def featurize_full(
         )
     feat = with_lag_features(feat, entity=entity, ts=ts, order_tiebreak=order_tiebreak)
 
-    order = [F.col(ts).asc()] + ([F.col(order_tiebreak).asc()] if order_tiebreak else [])
+    w_time = entity_time_window(entity, ts, order_tiebreak)
     for ws in window_sizes:
-        w = Window.partitionBy(entity).orderBy(*order).rowsBetween(-(ws - 1), 0)
+        w = w_time.rowsBetween(-(ws - 1), 0)
         feat = (
             feat.withColumn(f"ham_w{ws}_avg", F.avg("phash_hamming").over(w))
             .withColumn(f"ham_w{ws}_max", F.max("phash_hamming").over(w))

@@ -64,7 +64,8 @@ def encode_png(pixels: np.ndarray) -> bytes:
 
 
 def decode_png(data: bytes) -> np.ndarray:
-    assert data[:8] == _PNG_SIG, "not a PNG"
+    if data[:8] != _PNG_SIG:
+        raise ValueError("not a PNG")
     pos, idat, w = 8, b"", 0
     while pos < len(data):
         (ln,) = struct.unpack(">I", data[pos : pos + 4])
@@ -72,7 +73,10 @@ def decode_png(data: bytes) -> np.ndarray:
         body = data[pos + 8 : pos + 8 + ln]
         if tag == b"IHDR":
             w, h, bits, ctype = struct.unpack(">IIBB", body[:10])
-            assert bits == 8 and ctype == 2, "only 8-bit RGB supported"
+            if bits != 8 or ctype != 2:
+                raise ValueError(
+                    f"only 8-bit RGB PNG supported, got bits={bits} ctype={ctype}"
+                )
         elif tag == b"IDAT":
             idat += body
         pos += 12 + ln
@@ -108,7 +112,8 @@ def encode_qnt(pixels: np.ndarray) -> bytes:
 
 
 def decode_qnt(data: bytes) -> np.ndarray:
-    assert data[:4] == _QNT_MAGIC, "not QNT"
+    if data[:4] != _QNT_MAGIC:
+        raise ValueError("not QNT")
     w, h = struct.unpack(">II", data[4:12])
     q = np.frombuffer(zlib.decompress(data[12:]), dtype=np.uint8).reshape(h, w, 3)
     # dequantize to bin centers
@@ -314,78 +319,3 @@ def resize_images(df, out_w: int, out_h: int, fmt_out: str = "png"):
             yield out
 
     return df.mapInPandas(kernel, schema=out_schema)
-
-
-# ------------------------------------------- video / audio stubs ----
-#
-# No av/audio codecs exist in this container.  The Spark-side plumbing
-# (schema, Arrow batching, frame-index arithmetic) is real and tested
-# against the deterministic fake codec; the true decoders raise
-# NotImplementedError exactly where ffmpeg/soundfile would plug in.
-
-_FAKE_VIDEO_MAGIC = b"FVID"
-
-
-def encode_fake_video(frames: np.ndarray) -> bytes:
-    """Deterministic fake container: (n, h, w, 3) uint8 → bytes."""
-    n, h, w, _ = frames.shape
-    return _FAKE_VIDEO_MAGIC + struct.pack(">III", n, w, h) + zlib.compress(
-        frames.tobytes(), 1
-    )
-
-
-def decode_video(data: bytes, fmt: str) -> np.ndarray:
-    if fmt == "fvid":
-        assert data[:4] == _FAKE_VIDEO_MAGIC
-        n, w, h = struct.unpack(">III", data[4:16])
-        raw = zlib.decompress(data[16:])
-        return np.frombuffer(raw, dtype=np.uint8).reshape(n, h, w, 3)
-    raise NotImplementedError(
-        f"video codec {fmt!r}: real decode needs ffmpeg/PyAV (not in container)"
-    )
-
-
-def sample_video_frames(df, every_n: int = 2, video_col: str = "video", fmt_col: str = "vfmt"):
-    """Frame sampling: decode → take frames [0, n, 2n, …] → per-frame
-    mean luminance.  Output one row per sampled frame (UDTF-style 1→N
-    explode through mapInPandas)."""
-    import pyspark.sql.types as T
-
-    keep = [f for f in df.schema.fields if f.name not in (video_col, fmt_col)]
-    out_schema = T.StructType(
-        keep
-        + [
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame_lum", T.DoubleType()),
-        ]
-    )
-    keep_names = [f.name for f in keep]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # decode is inherently per-row (one opaque blob each); the
-            # explode + metadata replication below is vectorized —
-            # frames are sampled in one strided slice per video, and
-            # the output assembles via pdf.iloc[src] (no iterrows)
-            src_idx, f_idx, f_lum = [], [], []
-            vids = pdf[video_col].to_numpy()
-            fmts = pdf[fmt_col].to_numpy()
-            for j in range(len(pdf)):
-                frames = decode_video(bytes(vids[j]), fmts[j])
-                sampled = frames[::every_n]
-                lums = sampled.astype(np.float64).mean(axis=(1, 2, 3))
-                src_idx.extend([j] * len(sampled))
-                f_idx.extend(range(0, len(frames), every_n))
-                f_lum.extend(lums.tolist())
-            out = pdf.iloc[src_idx][keep_names].reset_index(drop=True)
-            out["frame_idx"] = pd.array(f_idx, dtype="int32")
-            out["frame_lum"] = f_lum
-            yield out
-
-    return df.mapInPandas(kernel, schema=out_schema)
-
-
-def decode_audio(data: bytes, fmt: str) -> np.ndarray:
-    raise NotImplementedError(
-        f"audio codec {fmt!r}: real decode needs soundfile/librosa (not in container)"
-    )

@@ -123,13 +123,12 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
 #
 # DEFERRED DEBUT (explicit, per the r5 ADVICE convention): the window
 # above was already exactly full (3 never-gated + 2 debut + 2
-# changed-code + 43 r4-stale = 50) when `sliding_window_refs`,
-# `windows_from_blocks`, and `append_blocks_windows` were registered
-# mid-r6; they ship this round
-# with DuckDB oracles (replayed dtype-strict by
-# tests/test_oracle_parity.py every session) plus golden
-# reconstruction-equality and zero-Exchange plan tests, and are FIRST
-# in line for the r7 driver window.
+# changed-code + 43 r4-stale = 50) when `sliding_window_refs` and
+# `append_blocks_windows` were registered mid-r6; they ship with
+# DuckDB oracles (replayed dtype-strict by tests/test_oracle_parity.py
+# on every test run) plus golden reconstruction-equality and
+# zero-Exchange plan tests, and are FIRST in line for the next gated
+# window.
 
 
 def _ordered(mapping: dict) -> dict:

@@ -737,6 +737,25 @@ FROM joined
 """
 
 
+def _exploded_windows(w: DataFrame) -> DataFrame:
+    """Materialized windows exploded to one scalar row per window
+    position — the row shape _SFW_ORACLE emits."""
+    return w.select(
+        "user_id",
+        "win_end_ts",
+        "win_start_ts",
+        F.col("n_points").cast("int").alias("n_points"),
+        F.posexplode("features").alias("pos", "feature"),
+    ).select(
+        "user_id",
+        "win_end_ts",
+        "win_start_ts",
+        "n_points",
+        F.col("pos").cast("int").alias("pos"),
+        "feature",
+    )
+
+
 @register("sliding_feature_windows", _SFW_ORACLE)
 def q_sliding_feature_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = tables.load_table(spark, sf_dir, "events")
@@ -752,20 +771,7 @@ def q_sliding_feature_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         entity="user_id",
         ts="ts",
     )
-    return w.select(
-        "user_id",
-        "win_end_ts",
-        "win_start_ts",
-        F.col("n_points").cast("int").alias("n_points"),
-        F.posexplode("features").alias("pos", "feature"),
-    ).select(
-        "user_id",
-        "win_end_ts",
-        "win_start_ts",
-        "n_points",
-        F.col("pos").cast("int").alias("pos"),
-        "feature",
-    )
+    return _exploded_windows(w)
 
 
 # ---------------------------------------------------------------------
@@ -798,38 +804,6 @@ JOIN f s ON s.user_id = a.user_id AND s.rn = a.end_rn - {_SFW_W - 1}
 """
 
 
-@register("windows_from_blocks", _SFW_ORACLE)
-def q_windows_from_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same window semantics as `sliding_feature_windows` (same oracle)
-    but through the decomposed at-rest path: stride_blocks ->
-    windows_from_stride_blocks — the assemble stage that runs with
-    ZERO Exchange over a bucketed blocks table
-    (tests/test_layout.py pins the plan; here the blocks are built
-    in-line so the driver gate checks the value contract)."""
-    ev = tables.load_table(spark, sf_dir, "events")
-    blocks = windows.stride_blocks(
-        ev.select("user_id", "ts", "value"), "value", shift=_SFW_SHIFT,
-        entity="user_id", ts="ts",
-    )
-    w = windows.windows_from_stride_blocks(
-        blocks, window_size=_SFW_W, shift=_SFW_SHIFT, entity="user_id"
-    )
-    return w.select(
-        "user_id",
-        "win_end_ts",
-        "win_start_ts",
-        F.col("n_points").cast("int").alias("n_points"),
-        F.posexplode("features").alias("pos", "feature"),
-    ).select(
-        "user_id",
-        "win_end_ts",
-        "win_start_ts",
-        "n_points",
-        F.col("pos").cast("int").alias("pos"),
-        "feature",
-    )
-
-
 @register("append_blocks_windows", _SFW_ORACLE)
 def q_append_blocks_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental-maintenance path end-to-end against the SAME
@@ -859,20 +833,7 @@ def q_append_blocks_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = windows.windows_from_stride_blocks(
         blocks, window_size=_SFW_W, shift=_SFW_SHIFT, entity="user_id"
     )
-    return w.select(
-        "user_id",
-        "win_end_ts",
-        "win_start_ts",
-        F.col("n_points").cast("int").alias("n_points"),
-        F.posexplode("features").alias("pos", "feature"),
-    ).select(
-        "user_id",
-        "win_end_ts",
-        "win_start_ts",
-        "n_points",
-        F.col("pos").cast("int").alias("pos"),
-        "feature",
-    )
+    return _exploded_windows(w)
 
 
 @register("sliding_window_refs", _SWR_ORACLE)

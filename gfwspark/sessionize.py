@@ -15,7 +15,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from gfwspark.util import epoch_s, epoch_us
+from gfwspark.util import entity_time_window, epoch_us
 
 
 def with_session_id(
@@ -28,8 +28,7 @@ def with_session_id(
     """New session when the gap to the previous point exceeds
     `gap_seconds`.  Adds `session_id` (0-based per entity, stable under
     any partitioning: pure function of the ordered series)."""
-    order = [F.col(ts).asc()] + ([F.col(order_tiebreak).asc()] if order_tiebreak else [])
-    w = Window.partitionBy(entity).orderBy(*order)
+    w = entity_time_window(entity, ts, order_tiebreak)
     gap = epoch_us(ts) - F.lag(epoch_us(ts)).over(w)
     is_new = F.when(gap.isNull() | (gap > gap_seconds * 1_000_000), 1).otherwise(0)
     wc = w.rowsBetween(Window.unboundedPreceding, 0)
@@ -59,10 +58,7 @@ def consolidate_runs(
     ties).  Pass `order_tiebreak` when (entity, ts) is not unique —
     without it duplicate timestamps make run segmentation
     partition-order-dependent."""
-    order = [F.col(ts).asc()] + (
-        [F.col(order_tiebreak).asc()] if order_tiebreak else []
-    )
-    w = Window.partitionBy(entity).orderBy(*order)
+    w = entity_time_window(entity, ts, order_tiebreak)
     first_row = F.row_number().over(w) == 1
     changed = F.when(
         first_row | ~F.lag(value_col).over(w).eqNullSafe(F.col(value_col)), 1

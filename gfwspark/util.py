@@ -3,7 +3,8 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column
+from pyspark.sql import Column, Window
+from pyspark.sql.window import WindowSpec
 
 
 def epoch_s(col: str | Column) -> Column:
@@ -24,6 +25,16 @@ def epoch_us(col: str | Column) -> Column:
     truncates (off-by-one at sub-second boundaries)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c.cast("timestamp"))
+
+
+def entity_time_window(
+    entity: str, ts: str, order_tiebreak: str | None = None
+) -> WindowSpec:
+    """Per-entity window in deterministic time order: ts ascending, ties
+    broken by `order_tiebreak` so results do not depend on the partition
+    count (SURVEY.md §7 determinism)."""
+    order = [F.col(ts).asc()] + ([F.col(order_tiebreak).asc()] if order_tiebreak else [])
+    return Window.partitionBy(entity).orderBy(*order)
 
 
 def round_half_up(x: float, nd: int = 6) -> float:

@@ -4,14 +4,18 @@ Maps the reference's window kernels (SURVEY.md §2.5) onto Spark Window
 specs where SQL can express them, and onto Arrow grouped-map kernels
 where it can't (repeat-pad, alignment padding):
 
-- W1  sliding fixed-count windows with stride  → rowsBetween + stride filter
-- W2  edge backfill (repeat first/last row)    → applyInPandas kernel
+- W1  sliding fixed-count windows with stride  → stride_blocks → shared
+                                                 anchor stage → assemble
+                                                 (or zero-copy refs)
+- W2  edge backfill (repeat first/last row)    → closed-form source-row
+                                                 join (aligned_windows)
 - W5  repeat-pad of short series               → applyInPandas kernel
 - W7  month-grid sliding time ranges           → month grid + interval join
 - W9  sessionization                           → see sessionize.py
 - W11 tumbling windows                         → date_trunc / F.window
-- W12 per-window min/max bounds                → win_start_ts/win_end_ts of
-                                                 sliding_feature_windows
+- W12 per-window ts bounds                     → win_start_ts/win_end_ts of
+                                                 every W1 form (endpoint
+                                                 element_at, _ts_at)
 
 All frames are backward-only (rowsBetween(-k, 0)) — zero temporal
 leakage by construction (north rule).
@@ -23,6 +27,8 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+from gfwspark.util import entity_time_window
 
 
 def with_lag_lead(
@@ -41,8 +47,7 @@ def with_lag_lead(
     Leads look forward: only for label/target construction, never
     features (documented leakage boundary).
     """
-    order = [F.col(ts).asc()] + ([F.col(order_tiebreak).asc()] if order_tiebreak else [])
-    w = Window.partitionBy(entity).orderBy(*order)
+    w = entity_time_window(entity, ts, order_tiebreak)
     out = df
     for c in cols:
         for k in lags:
@@ -68,12 +73,7 @@ def with_sliding_agg(
     consumer wants per-point statistics rather than materialized
     windows.  Whole-stage-codegen'd; one shuffle on entity.
     """
-    order = [F.col(ts).asc()] + ([F.col(order_tiebreak).asc()] if order_tiebreak else [])
-    w = (
-        Window.partitionBy(entity)
-        .orderBy(*order)
-        .rowsBetween(-(window_size - 1), 0)
-    )
+    w = entity_time_window(entity, ts, order_tiebreak).rowsBetween(-(window_size - 1), 0)
     p = prefix or f"{agg_col}_w{window_size}"
     fns = {"avg": F.avg, "min": F.min, "max": F.max, "sum": F.sum,
            "count": F.count, "stddev": F.stddev}
@@ -122,10 +122,7 @@ def with_sliding_agg_large(
     by the quantization error.  Min/max need order statistics that
     have no difference form — at big W use chunked_time_range_agg's
     two-stack kernel instead."""
-    order = [F.col(ts).asc()] + (
-        [F.col(order_tiebreak).asc()] if order_tiebreak else []
-    )
-    w_row = Window.partitionBy(entity).orderBy(*order)
+    w_row = entity_time_window(entity, ts, order_tiebreak)
     w_cum = w_row.rowsBetween(Window.unboundedPreceding, 0)
     p = prefix or f"{agg_col}_W{window_size}"
     dec = "decimal(38,6)"
@@ -198,13 +195,17 @@ def with_sliding_agg_large(
 # a W-element array for EVERY input row and throws away
 # (shift-1)/shift of them.  At the reference's vessel-char geometry
 # (W=12800, shift=767) that is ~12,800x row amplification, 99.87%
-# discarded.  Instead each input row computes, in closed form, the
-# set of stride anchors whose window covers it (at most
-# ceil(W/shift) of them), explodes into those anchors, and a
-# groupBy(entity, anchor) rebuilds each window once.  Row
-# amplification is exactly W/shift — the information-theoretic
-# minimum for materialized overlapping windows — and the groupBy
-# reuses the entity hash-partitioning from the row_number stage
+# discarded.  Instead the pipeline is three stages, each built once:
+#   stride_blocks      rows -> ordered stride-sized blocks (each input
+#                      row aggregated exactly once);
+#   _window_anchors    each block explodes, in closed form, into the
+#                      anchors whose window covers it (at most
+#                      ceil(W/shift)+1 of them);
+#   groupBy(entity, anchor)  slices/flattens the covered blocks
+#                      (windows_from_stride_blocks) or reads only the
+#                      endpoint timestamps (sliding_feature_window_refs).
+# Fan-out is W/shift block copies, never W row copies, and every stage
+# reuses the entity hash-partitioning of the block build
 # (HashPartitioning(entity) satisfies ClusteredDistribution(entity,
 # anchor)), so the whole operator is a single exchange.
 # ------------------------------------------------------------------
@@ -216,7 +217,6 @@ def sliding_feature_windows(
     shift: int,
     entity: str = "image_id",
     ts: str = "ts",
-    min_points: int | None = None,
 ) -> DataFrame:
     """All full windows of `window_size` points stepping back from the
     series end by `shift`.  Output: (entity, win_end_ts, win_start_ts,
@@ -228,61 +228,23 @@ def sliding_feature_windows(
 
     anchor rule: row i (1-based from series start, length n) hosts a
     window iff (n - i) % shift == 0 and i >= window_size — the same
-    index set as the reference's  `range(end, start, -shift)` walk.
+    index set as the reference's  `range(end, start, -shift)` walk.  A
+    series shorter than window_size therefore emits no window.
 
-    Block-assembled plan: rows are first aggregated ONCE into
+    Block-assembled plan: stride_blocks aggregates rows ONCE into
     stride-sized blocks (block k = rows with (rn-1) div shift == k,
-    ordered), then each anchor's window is assembled by slicing the
-    <= ceil(W/shift)+1 blocks it covers and flattening.  Overlapping
-    windows SHARE blocks, so the heavy per-element aggregation touches
-    each input row exactly once (the earlier anchor-explode form
-    pushed W/shift copies of every row through the hash aggregate —
-    ~2x slower at the reference geometry; the round-2 per-row
-    collect_list form was ~12x slower still).  Every stage reuses the
-    entity hashpartitioning: one exchange total.
+    ordered), then windows_from_stride_blocks assembles each anchor's
+    window by slicing the <= ceil(W/shift)+1 blocks it covers and
+    flattening.  Overlapping windows SHARE blocks, so the heavy
+    per-element aggregation touches each input row exactly once (the
+    earlier anchor-explode form pushed W/shift copies of every row
+    through the hash aggregate — ~2x slower at the reference geometry;
+    the round-2 per-row collect_list form was ~12x slower still).
+    Every stage reuses the entity hashpartitioning: one exchange total.
     """
-    W, S = window_size, shift
-    multi = isinstance(feature_col, (list, tuple))
-    if multi:
-        val_expr = F.array(*[F.col(c).cast("double") for c in feature_col]).alias("_val")
-    else:
-        val_expr = F.col(feature_col).alias("_val")
-    w_order = Window.partitionBy(entity).orderBy("_ts")
-    rows = df.select(
-        F.col(entity),
-        F.col(ts).alias("_ts"),
-        val_expr,
-    ).select(
-        "*",
-        F.row_number().over(w_order).alias("_rn"),
+    return windows_from_stride_blocks(
+        stride_blocks(df, feature_col, shift, entity, ts), window_size, shift, entity
     )
-    # stride-sized ordered blocks: one value array + one ts array per
-    # (entity, block).  Values and timestamps are split on purpose: the
-    # assemble stage below slices/flattens every covered block copy, but
-    # each window reads ts at only TWO positions (win start / end), so
-    # carrying ts per element through the W/shift block copies would
-    # double the bytes pushed through the DRAM-bound object aggregate.
-    blocks = (
-        rows.withColumn("_blk", F.floor((F.col("_rn") - 1) / S))
-        .groupBy(entity, "_blk")
-        .agg(
-            F.expr(
-                "sort_array(collect_list(struct(_rn, _val, _ts)))"
-            ).alias("_s")
-        )
-        .select(
-            entity,
-            "_blk",
-            F.expr("transform(_s, x -> x._val)").alias("_arr"),
-            F.expr("transform(_s, x -> x._ts)").alias("_tss"),
-        )
-    )
-    # n per entity via a window-sum over the (already entity-
-    # partitioned) blocks — ONE lineage branch, so the plan has exactly
-    # one exchange (a join against a separately-derived anchor frame
-    # would duplicate the fact shuffle: column pruning makes the two
-    # subtrees physically different and defeats ReuseExchange).
-    return _assemble_windows(blocks, W, S, entity, min_points)
 
 
 def windows_from_stride_blocks(
@@ -290,106 +252,26 @@ def windows_from_stride_blocks(
     window_size: int,
     shift: int,
     entity: str = "image_id",
-    min_points: int | None = None,
 ) -> DataFrame:
-    """Materialize sliding windows FROM an at-rest stride_blocks table
-    (schema: entity, block_id, values, ts_arr — what stride_blocks()
-    emits), skipping the per-row block-build stage entirely.
+    """Materialize sliding windows FROM a stride_blocks table (schema:
+    entity, block_id, values, ts_arr — what stride_blocks() emits).
 
-    This is the 100 TB shape the --w1m-sweep measurement points at:
-    the sweep showed the scaling floor of the one-shot extractor is
-    the W-INDEPENDENT block build (row_number + collect_list over
-    every input row), not the W/shift assemble amplification.  Persist
+    At rest this skips the per-row block-build stage entirely — the
+    100 TB shape the --w1m-sweep measurement points at: the sweep
+    showed the scaling floor of the one-shot extractor is the
+    W-INDEPENDENT block build (row_number + collect_list over every
+    input row), not the W/shift assemble amplification.  Persist
     stride_blocks ONCE — layout.write_bucketed(..., [entity], n) — and
     every window job over it (any W stepping by the same shift) reads
     pre-grouped blocks whose bucketed scan already provides
     hashpartitioning(entity): the whole materialization then plans
     with ZERO Exchange (pinned in tests/test_layout.py), amortizing
-    the floor across consumers exactly like the bucketed as-of."""
-    b = blocks.select(
-        F.col(entity),
-        F.col("block_id").alias("_blk"),
-        F.col("values").alias("_arr"),
-        F.col("ts_arr").alias("_tss"),
-    )
-    return _assemble_windows(b, window_size, shift, entity, min_points)
+    the floor across consumers exactly like the bucketed as-of.
 
-
-def _assemble_windows(
-    blocks: DataFrame, W: int, S: int, entity: str, min_points: int | None
-) -> DataFrame:
-    """Shared assemble stage: stride blocks (entity, _blk, _arr, _tss)
-    -> materialized windows.  Every operation needs only
-    ClusteredDistribution(entity), so whatever partitioning the blocks
-    arrive with (the row-stage exchange in sliding_feature_windows, or
-    a bucketed scan in windows_from_stride_blocks) is reused
-    throughout — this stage itself adds zero exchanges."""
-    blocks = blocks.withColumn(
-        "_n", F.sum(F.size("_arr")).over(Window.partitionBy(entity))
-    )
-    if min_points is not None:
-        blocks = blocks.filter(F.col("_n") >= min_points)
-    # anchors a = n - j*S, a >= W.  Block k holds rns
-    # [k*S+1, k*S+size]; anchor a covers the block iff
-    # a >= k*S+1 and a-W+1 <= k*S+size, giving the closed j-range
-    # (same arithmetic as the per-row form, applied to block bounds):
-    lo_rn = F.col("_blk") * S + 1
-    hi_rn = F.col("_blk") * S + F.size("_arr")
-    j_hi = F.floor((F.col("_n") - F.greatest(lo_rn, F.lit(W).cast("long"))) / S)
-    j_lo = F.greatest(
-        F.lit(0).cast("long"),
-        -F.floor((hi_rn + F.lit(W - 1) - F.col("_n")) / S),
-    )
-    win_blocks = (
-        blocks.select(
-            entity,
-            "_blk",
-            "_arr",
-            "_tss",
-            "_n",
-            j_lo.alias("_jlo"),
-            j_hi.alias("_jhi"),
-        )
-        .filter(F.col("_jhi") >= F.col("_jlo"))
-        .select(
-            entity,
-            "_blk",
-            "_arr",
-            "_tss",
-            "_n",
-            F.explode(F.sequence("_jlo", "_jhi")).alias("_j"),
-        )
-        .select(
-            entity,
-            "_blk",
-            "_arr",
-            "_tss",
-            (F.col("_n") - F.col("_j") * S).alias("_arn"),
-        )
-        .withColumn("_lo", F.col("_arn") - F.lit(W - 1))
-        # ts is needed only from the block(s) holding rn = _lo or
-        # rn = _arn — null it out everywhere else so the aggregate's
-        # hash map carries one ts array per window, not W/shift copies.
-        .withColumn(
-            "_tss",
-            F.when(
-                (
-                    (F.col("_arn") >= F.col("_blk") * S + 1)
-                    & (F.col("_arn") <= F.col("_blk") * S + F.size("_arr"))
-                )
-                | (
-                    (F.col("_lo") >= F.col("_blk") * S + 1)
-                    & (F.col("_lo") <= F.col("_blk") * S + F.size("_arr"))
-                ),
-                F.col("_tss"),
-            ),
-        )
-    )
-    # assemble: slice each block to the window's [lo, arn] sub-range
-    # (block k holds rns k*S+1 .. k*S+len), then flatten in block order.
-    # Endpoint timestamps come from conditional element_at against the
-    # (≤2) unmasked per-block ts arrays — the `when` guard both keeps
-    # ANSI element_at in bounds and skips the masked copies.
+    Assemble: slice each covered block to the window's [lo, arn]
+    sub-range (block k holds rns k*S+1 .. k*S+len), then flatten in
+    block order."""
+    S = shift
     slice_expr = (
         "flatten(transform(sort_array(collect_list(struct(_blk, _arr))),"
         " b -> slice(b._arr,"
@@ -397,18 +279,13 @@ def _assemble_windows(
         "  int(least(CAST(size(b._arr) AS bigint), _arn - b._blk * CAST_S)"
         "      - greatest(1L, _lo - b._blk * CAST_S) + 1L))))"
     ).replace("CAST_S", f"CAST({S} AS bigint)")
-    ts_at = (
-        "max(CASE WHEN _tss IS NOT NULL"
-        " AND {rn} >= _blk * CAST_S + 1"
-        " AND {rn} <= _blk * CAST_S + CAST(size(_tss) AS bigint)"
-        " THEN element_at(_tss, int({rn} - _blk * CAST_S)) END)"
-    ).replace("CAST_S", f"CAST({S} AS bigint)")
     return (
-        win_blocks.groupBy(entity, "_arn", "_lo")
+        _window_anchors(blocks, window_size, S, entity)
+        .groupBy(entity, "_arn", "_lo")
         .agg(
             F.expr(slice_expr).alias("_w"),
-            F.expr(ts_at.format(rn="_arn")).alias("win_end_ts"),
-            F.expr(ts_at.format(rn="_lo")).alias("win_start_ts"),
+            _ts_at("_arn", S).alias("win_end_ts"),
+            _ts_at("_lo", S).alias("win_start_ts"),
         )
         .select(
             F.col(entity),
@@ -420,6 +297,78 @@ def _assemble_windows(
     )
 
 
+def _window_anchors(blocks: DataFrame, W: int, S: int, entity: str) -> DataFrame:
+    """The anchor stage shared by the materialized and the refs form:
+    stride blocks (entity, block_id, ts_arr[, values]) -> one row per
+    (window anchor, covered block) with columns (entity, _blk, [_arr,]
+    _tss, _arn, _lo), where _arn/_lo are the window's end/start row
+    numbers and _tss is nulled except on the (<= 2) blocks holding an
+    endpoint.  Blocks are sized from ts_arr (one element per source
+    row, like values), so the refs form never needs a value array.
+
+    Every operation needs only ClusteredDistribution(entity), so
+    whatever partitioning the blocks arrive with (the block-build
+    exchange, or a bucketed scan at rest) is reused throughout — this
+    stage adds zero exchanges.  n per entity is a window-sum over the
+    blocks — ONE lineage branch (a join against a separately-derived
+    anchor frame would duplicate the fact shuffle: column pruning makes
+    the two subtrees physically different and defeats ReuseExchange)."""
+    carry = ["_arr"] if "values" in blocks.columns else []
+    blocks = blocks.select(
+        F.col(entity),
+        F.col("block_id").alias("_blk"),
+        F.col("ts_arr").alias("_tss"),
+        *[F.col("values").alias(c) for c in carry],
+    ).withColumn("_n", F.sum(F.size("_tss")).over(Window.partitionBy(entity)))
+    # anchors a = n - j*S, a >= W.  Block k holds rns
+    # [k*S+1, k*S+size]; anchor a covers the block iff
+    # a >= k*S+1 and a-W+1 <= k*S+size, giving the closed j-range:
+    lo_rn = F.col("_blk") * S + 1
+    hi_rn = F.col("_blk") * S + F.size("_tss")
+    j_hi = F.floor((F.col("_n") - F.greatest(lo_rn, F.lit(W).cast("long"))) / S)
+    j_lo = F.greatest(
+        F.lit(0).cast("long"),
+        -F.floor((hi_rn + F.lit(W - 1) - F.col("_n")) / S),
+    )
+
+    def in_block(rn: str):
+        return (F.col(rn) >= lo_rn) & (F.col(rn) <= hi_rn)
+
+    return (
+        blocks.select(
+            entity, "_blk", *carry, "_tss", "_n",
+            j_lo.alias("_jlo"), j_hi.alias("_jhi"),
+        )
+        .filter(F.col("_jhi") >= F.col("_jlo"))
+        .select(
+            entity, "_blk", *carry, "_tss", "_n",
+            F.explode(F.sequence("_jlo", "_jhi")).alias("_j"),
+        )
+        .select(
+            entity, "_blk", *carry, "_tss",
+            (F.col("_n") - F.col("_j") * S).alias("_arn"),
+        )
+        .withColumn("_lo", F.col("_arn") - F.lit(W - 1))
+        # ts is needed only from the block(s) holding rn = _lo or
+        # rn = _arn — null it out everywhere else so the aggregate's
+        # hash map carries one ts array per window, not W/shift copies.
+        .withColumn("_tss", F.when(in_block("_arn") | in_block("_lo"), F.col("_tss")))
+    )
+
+
+def _ts_at(rn: str, S: int):
+    """Aggregate over _window_anchors rows: the timestamp at row number
+    `rn`, read by conditional element_at from the (<= 2) unmasked
+    per-block ts arrays — the guard both keeps ANSI element_at in
+    bounds and skips the masked copies."""
+    return F.expr(
+        "max(CASE WHEN _tss IS NOT NULL"
+        f" AND {rn} >= _blk * CAST({S} AS bigint) + 1"
+        f" AND {rn} <= _blk * CAST({S} AS bigint) + CAST(size(_tss) AS bigint)"
+        f" THEN element_at(_tss, int({rn} - _blk * CAST({S} AS bigint))) END)"
+    )
+
+
 def stride_blocks(
     df: DataFrame,
     feature_col: str | list[str],
@@ -427,15 +376,15 @@ def stride_blocks(
     entity: str = "image_id",
     ts: str = "ts",
 ) -> DataFrame:
-    """The shared block table behind the refs form of the sliding
-    extractor: one row per (entity, block_id) holding the stride-sized
-    ordered value slice (block k = rows with (row_number-1) div shift
-    == k) and its timestamps.  Written once — e.g. bucketed by entity
-    via layout.write_bucketed — it serves EVERY window of any W that
-    steps by `shift`: a window [lo, end] (1-based row numbers) is
-    reconstructed by slicing blocks floor((lo-1)/shift) ..
-    floor((end-1)/shift), which is what sliding_feature_window_refs'
-    output addresses."""
+    """The shared block table behind every W1 form: one row per
+    (entity, block_id) holding the stride-sized ordered value slice
+    (block k = rows with (row_number-1) div shift == k) and its
+    timestamps.  Written once — e.g. bucketed by entity via
+    layout.write_bucketed — it serves EVERY window of any W that steps
+    by `shift`: windows_from_stride_blocks materializes them, and a
+    window [lo, end] (1-based row numbers) is reconstructed by slicing
+    blocks floor((lo-1)/shift) .. floor((end-1)/shift), which is what
+    sliding_feature_window_refs' output addresses."""
     rows = _block_rows(df, feature_col, entity, ts).withColumn(
         "_rn", F.row_number().over(Window.partitionBy(entity).orderBy("_ts"))
     )
@@ -458,17 +407,26 @@ def _block_rows(
 
 
 def _block_agg(rows: DataFrame, shift: int, entity: str) -> DataFrame:
-    """(entity, _ts, _val, _rn) -> one row per (entity, block_id) with
-    ordered values/ts_arr slices.  `_rn` is the 1-based GLOBAL row
-    number (the incremental builder passes stored-count offsets)."""
+    """(entity, _ts[, _val], _rn) -> one row per (entity, block_id) with
+    ordered ts_arr[/values] slices.  `_rn` is the 1-based GLOBAL row
+    number (the incremental builder passes stored-count offsets).
+    Without a `_val` column (the refs form) no values array is built.
+
+    Values and timestamps are split on purpose: the assemble stage
+    slices/flattens every covered block copy, but each window reads ts
+    at only TWO positions (win start / end), so carrying ts per element
+    through the W/shift block copies would double the bytes pushed
+    through the DRAM-bound object aggregate."""
+    vals = ["_val"] if "_val" in rows.columns else []
+    fields = ", ".join(["_rn", *vals, "_ts"])
     return (
         rows.withColumn("_blk", F.floor((F.col("_rn") - 1) / shift))
         .groupBy(entity, "_blk")
-        .agg(F.expr("sort_array(collect_list(struct(_rn, _val, _ts)))").alias("_s"))
+        .agg(F.expr(f"sort_array(collect_list(struct({fields})))").alias("_s"))
         .select(
             entity,
             F.col("_blk").alias("block_id"),
-            F.expr("transform(_s, x -> x._val)").alias("values"),
+            *[F.expr(f"transform(_s, x -> x.{c})").alias("values") for c in vals],
             F.expr("transform(_s, x -> x._ts)").alias("ts_arr"),
         )
     )
@@ -645,7 +603,6 @@ def sliding_feature_window_refs(
     shift: int,
     entity: str = "image_id",
     ts: str = "ts",
-    min_points: int | None = None,
 ) -> DataFrame:
     """The ZERO-COPY form of sliding_feature_windows: the same window
     index set (anchor rule: row i hosts a window iff (n-i) % shift == 0
@@ -665,76 +622,20 @@ def sliding_feature_window_refs(
     (test_sliding_window_refs_reconstruct) proves refs ⋈ blocks
     reconstructs the materialized output bit-identically.
 
-    Plan: identical block/anchor enumeration to the materialized form
-    (one entity exchange), but the explode fan-out carries ONLY
-    scalars + the <=2 endpoint-masked ts arrays — the W/shift value
-    amplification never happens."""
+    Plan: the materialized form's anchor stage (one entity exchange)
+    over ts-only blocks, so the explode fan-out carries ONLY scalars +
+    the <=2 endpoint-masked ts arrays — no value array is ever built
+    and the W/shift value amplification never happens."""
     W, S = window_size, shift
-    w_order = Window.partitionBy(entity).orderBy("_ts")
-    rows = df.select(F.col(entity), F.col(ts).alias("_ts")).select(
-        "*", F.row_number().over(w_order).alias("_rn")
+    rows = df.select(F.col(entity), F.col(ts).alias("_ts")).withColumn(
+        "_rn", F.row_number().over(Window.partitionBy(entity).orderBy("_ts"))
     )
-    blocks = (
-        rows.withColumn("_blk", F.floor((F.col("_rn") - 1) / S))
-        .groupBy(entity, "_blk")
-        .agg(F.expr("sort_array(collect_list(struct(_rn, _ts)))").alias("_s"))
-        .select(entity, "_blk", F.expr("transform(_s, x -> x._ts)").alias("_tss"))
-    )
-    blocks = blocks.withColumn(
-        "_n", F.sum(F.size("_tss")).over(Window.partitionBy(entity))
-    )
-    if min_points is not None:
-        blocks = blocks.filter(F.col("_n") >= min_points)
-    # same closed-form j-range as sliding_feature_windows (size(_tss)
-    # == size(_arr): one element per source row either way)
-    lo_rn = F.col("_blk") * S + 1
-    hi_rn = F.col("_blk") * S + F.size("_tss")
-    j_hi = F.floor((F.col("_n") - F.greatest(lo_rn, F.lit(W).cast("long"))) / S)
-    j_lo = F.greatest(
-        F.lit(0).cast("long"),
-        -F.floor((hi_rn + F.lit(W - 1) - F.col("_n")) / S),
-    )
-    win_blocks = (
-        blocks.select(
-            entity, "_blk", "_tss", "_n",
-            j_lo.alias("_jlo"), j_hi.alias("_jhi"),
-        )
-        .filter(F.col("_jhi") >= F.col("_jlo"))
-        .select(
-            entity, "_blk", "_tss", "_n",
-            F.explode(F.sequence("_jlo", "_jhi")).alias("_j"),
-        )
-        .select(
-            entity, "_blk", "_tss",
-            (F.col("_n") - F.col("_j") * S).alias("_arn"),
-        )
-        .withColumn("_lo", F.col("_arn") - F.lit(W - 1))
-        .withColumn(
-            "_tss",
-            F.when(
-                (
-                    (F.col("_arn") >= F.col("_blk") * S + 1)
-                    & (F.col("_arn") <= F.col("_blk") * S + F.size("_tss"))
-                )
-                | (
-                    (F.col("_lo") >= F.col("_blk") * S + 1)
-                    & (F.col("_lo") <= F.col("_blk") * S + F.size("_tss"))
-                ),
-                F.col("_tss"),
-            ),
-        )
-    )
-    ts_at = (
-        "max(CASE WHEN _tss IS NOT NULL"
-        " AND {rn} >= _blk * CAST_S + 1"
-        " AND {rn} <= _blk * CAST_S + CAST(size(_tss) AS bigint)"
-        " THEN element_at(_tss, int({rn} - _blk * CAST_S)) END)"
-    ).replace("CAST_S", f"CAST({S} AS bigint)")
     return (
-        win_blocks.groupBy(entity, "_arn", "_lo")
+        _window_anchors(_block_agg(rows, S, entity), W, S, entity)
+        .groupBy(entity, "_arn", "_lo")
         .agg(
-            F.expr(ts_at.format(rn="_arn")).alias("win_end_ts"),
-            F.expr(ts_at.format(rn="_lo")).alias("win_start_ts"),
+            _ts_at("_arn", S).alias("win_end_ts"),
+            _ts_at("_lo", S).alias("win_start_ts"),
         )
         .select(
             F.col(entity),
@@ -870,11 +771,8 @@ def with_ffill(
     ts: str = "ts",
     order_tiebreak: str | None = None,
 ) -> DataFrame:
-    order = [F.col(ts).asc()] + ([F.col(order_tiebreak).asc()] if order_tiebreak else [])
-    w = (
-        Window.partitionBy(entity)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    w = entity_time_window(entity, ts, order_tiebreak).rowsBetween(
+        Window.unboundedPreceding, 0
     )
     out = df
     for c in cols:
@@ -1128,11 +1026,8 @@ def with_expanding_zscore(
     ts: str = "ts",
     order_tiebreak: str | None = None,
 ) -> DataFrame:
-    order = [F.col(ts).asc()] + ([F.col(order_tiebreak).asc()] if order_tiebreak else [])
-    w = (
-        Window.partitionBy(entity)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    w = entity_time_window(entity, ts, order_tiebreak).rowsBetween(
+        Window.unboundedPreceding, 0
     )
     dec = F.col(value_col).cast("decimal(18,6)")
     n = F.count(value_col).over(w)
@@ -1206,7 +1101,10 @@ def chunked_time_range_agg(
 
     from gfwspark.util import epoch_us
 
-    assert chunk_s >= duration_s, "chunk must cover the window duration"
+    if chunk_s < duration_s:
+        raise ValueError(
+            f"chunk_s={chunk_s} must cover the window duration_s={duration_s}"
+        )
     p = prefix or f"{agg_col}_t{duration_s}"
     dur_us = duration_s * 1_000_000
     chunk_us = chunk_s * 1_000_000

@@ -4,12 +4,14 @@ leakage invariant."""
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
-from gfwspark import asof, features, oracle, sessionize, tables, windows
+from gfwspark import asof, features, multimodal, oracle, sessionize, tables, windows
 
 N_ENTITIES = 20
 SEED = 42
@@ -299,6 +301,42 @@ def test_chunked_time_range_agg_equals_window(spark, img_df):
         .distinct().count()
     )
     assert n_chunks > 1
+
+
+def _png_16bit() -> bytes:
+    ihdr = struct.pack(">IIBBBBB", 1, 1, 16, 2, 0, 0, 0)
+    return multimodal._PNG_SIG + multimodal._chunk(b"IHDR", ihdr)
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        pytest.param(
+            lambda df: windows.chunked_time_range_agg(
+                df, "phash", duration_s=7200, chunk_s=1800
+            ),
+            id="chunked_time_range_agg_chunk_shorter_than_duration",
+        ),
+        pytest.param(
+            lambda df: multimodal.decode_png(b"nope"),
+            id="decode_png_bad_signature",
+        ),
+        pytest.param(
+            lambda df: multimodal.decode_png(_png_16bit()),
+            id="decode_png_16bit",
+        ),
+        pytest.param(
+            lambda df: multimodal.decode_qnt(b"nope"),
+            id="decode_qnt_bad_magic",
+        ),
+    ],
+)
+def test_input_contracts_raise_value_error(img_df, call):
+    """Input contracts are checked with ValueError, not `assert`: an
+    assert vanishes under `python -O`, where a too-short chunk_s would
+    silently return wrong counts and a decoder would parse garbage."""
+    with pytest.raises(ValueError):
+        call(img_df)
 
 
 def test_chunked_time_range_agg_duplicate_ts(spark):

@@ -84,31 +84,6 @@ def test_resize_images_roundtrip(spark):
     assert px.shape == (16, 16, 3)
 
 
-def test_video_frame_sampling_plumbing(spark):
-    import numpy as np
-    import pandas as pd
-
-    frames = (np.arange(5 * 8 * 8 * 3, dtype=np.int64) % 256).astype("uint8").reshape(5, 8, 8, 3)
-    payload = multimodal.encode_fake_video(frames)
-    df = spark.createDataFrame(
-        pd.DataFrame({"vid_id": [1], "video": [payload], "vfmt": ["fvid"]}),
-        schema="vid_id long, video binary, vfmt string",
-    )
-    out = multimodal.sample_video_frames(df, every_n=2).toPandas()
-    assert list(out["frame_idx"]) == [0, 2, 4]
-    for i in (0, 2, 4):
-        want = float(frames[i].mean())
-        got = float(out[out.frame_idx == i]["frame_lum"].iloc[0])
-        assert abs(want - got) < 1e-9
-
-
-def test_real_video_audio_codecs_stubbed():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_video(b"\x00\x00\x00\x00", "mp4")
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_audio(b"", "wav")
-
-
 def _ham64(a: int, b: int) -> int:
     return bin((a ^ b) & (2**64 - 1)).count("1")
 

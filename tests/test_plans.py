@@ -6,6 +6,7 @@ from __future__ import annotations
 import re
 
 import pyspark.sql.functions as F
+import pytest
 
 from gfwspark import queries, tables
 from tests.conftest import SF_MED
@@ -93,29 +94,39 @@ def test_samplers_stay_jvm_side(spark):
     assert "BroadcastNestedLoopJoin" in w4 or "BroadcastHashJoin" in w4
 
 
-def test_sliding_feature_windows_no_prestride_materialization(spark):
-    """W1m scale invariant: the materialized sliding-window extractor
-    must NOT build a W-element array per input row and then discard
-    (shift-1)/shift of them (fatal at the reference geometry W=12800,
-    shift=767).  The scalable plan explodes each row into only the
-    anchors that cover it (fan-out <= ceil(W/shift)) and rebuilds each
-    window once in a groupBy — so collect_list may appear only inside
-    an Aggregate, never inside a Window node, and the whole operator
-    is a single exchange (the groupBy on (entity, anchor) reuses the
-    entity hashpartitioning)."""
+@pytest.mark.parametrize("form", ["materialized", "refs"])
+def test_sliding_feature_windows_no_prestride_materialization(spark, form):
+    """W1m scale invariant: the sliding-window extractor must NOT build
+    a W-element array per input row and then discard (shift-1)/shift
+    of them (fatal at the reference geometry W=12800, shift=767).  The
+    scalable plan aggregates rows once into stride blocks, explodes
+    each block into only the anchors that cover it (fan-out
+    <= ceil(W/shift)+1) and rebuilds each window once in a groupBy — so
+    collect_list may appear only inside an Aggregate, never inside a
+    Window node, and the whole operator is a single exchange (the
+    groupBy on (entity, anchor) reuses the entity hashpartitioning).
+
+    The refs form shares that anchor stage but exists to skip the
+    W/shift value amplification: no value array may appear anywhere in
+    its plan, even when the input carries a value column."""
     from gfwspark import tables as t, windows as w
 
     ev = t.load_table(spark, SF_MED, "events").select("user_id", "ts", "value")
-    df = w.sliding_feature_windows(
-        ev, "value", window_size=12, shift=4, entity="user_id", ts="ts"
-    )
+    if form == "refs":
+        df = w.sliding_feature_window_refs(
+            ev, window_size=12, shift=4, entity="user_id", ts="ts"
+        )
+    else:
+        df = w.sliding_feature_windows(
+            ev, "value", window_size=12, shift=4, entity="user_id", ts="ts"
+        )
     plan = _plan(df)
     assert plan.count("Exchange") == 1
     for line in plan.splitlines():
         if "Window [" in line:
             assert "collect_list" not in line, "pre-stride materialization"
     # row-count sanity: output rows = number of stride anchors, and the
-    # exploded intermediate is bounded by ceil(W/shift) * n_input
+    # exploded intermediate is bounded by ceil(W/shift) * n_blocks
     assert "Generate explode" in plan
     # split-ts assemble: the final window aggregate collects value
     # blocks only — per-element timestamps must not ride through the
@@ -130,6 +141,9 @@ def test_sliding_feature_windows_no_prestride_materialization(spark):
         "endpoint ts read from per-element structs — ts is riding "
         "through the block copies again"
     )
+    if form == "refs":
+        for token in ("_arr", "_val", "values", "value#"):
+            assert token not in plan, f"value array {token!r} in the refs plan"
 
 
 def test_aligned_windows_stays_jvm_side(spark):
