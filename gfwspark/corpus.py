@@ -101,7 +101,7 @@ def _stage_frames(
         text_col,
         ns=(2,),
     )
-    if materialize_survivors or materialize_stages:
+    if materialize_survivors:
         d = d.localCheckpoint(eager=True)
     d = d.filter(F.col("quality") >= quality_min)
     frames.append(d)
@@ -114,11 +114,8 @@ def _stage_frames(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    if materialize_survivors or materialize_stages:
-        # stage-3 output feeds 4 branches (and the audit's n3 count);
-        # under materialize_stages the audit contract is every stage
-        # builds from its predecessor's blocks, regardless of the
-        # survivor-materialization setting
+    if materialize_survivors:
+        # stage-3 output feeds 4 branches (and the audit's n3 count)
         d = d.localCheckpoint(eager=True)
     frames.append(d)
     # 4: MinHash-LSH near dedup (exact-Jaccard verified) — drop doc_b.
@@ -234,7 +231,6 @@ def prepare_corpus_audit(
     horizon_s: int = 100 * 3600,
     embargo_s: int = 40 * 3600,
     token_budget: int = 512,
-    materialize_survivors: bool = True,
 ) -> DataFrame:
     """The pipeline's data-loss accounting as a first-class frame:
     one row per stage — (stage_idx int, stage string, rows_in long,
@@ -255,7 +251,7 @@ def prepare_corpus_audit(
     frames = _stage_frames(
         docs, benchmark, id_col, text_col, entity, ts, quality_min,
         max_dup_2gram, near_dup_threshold, decontam_n, horizon_s,
-        embargo_s, token_budget, materialize_survivors,
+        embargo_s, token_budget, materialize_survivors=True,
         materialize_stages=True,
     )
 

@@ -285,18 +285,14 @@ SELECT q_id, vec_id, cosine, rank FROM r WHERE rank <= 5
 
 @register("ann_brute_topk", _BRUTE_TOPK_ORACLE)
 def q_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: served by the Arrow/BLAS kernel — bit-identical scores and
-    # tie-break to the JVM aggregate() fold (the kernel rounds with
-    # util.round_half_up, proven by the shared oracle), at one matmul
-    # per partition instead of a
-    # per-(query,row) scalar fold: measured 3.7 s -> 0.5 s at the
-    # driver's sf1.0.  The fold form stays available as
-    # similarity.brute_force_topk (plan-shape tests + NL baseline).
+    # the Arrow/BLAS kernel: one matmul per partition instead of a
+    # per-(query, row) scalar aggregate() fold; its scores are rounded
+    # exactly as the oracle's round(), so the check is value-for-value
     emb = tables.load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    return similarity.brute_force_topk_arrow(emb, q, k=5)
+    return similarity.brute_force_topk(emb, q, k=5)
 
 
 @register("ann_lsh_topk", None)  # approximate: rows-only check
@@ -469,7 +465,7 @@ def q_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    return similarity.lsh_topk_multiprobe(emb, q, k=5, dim=_EMB_DIM, probe_hamming=2)
+    return similarity.lsh_topk(emb, q, k=5, dim=_EMB_DIM, probe_hamming=2)
 
 
 _IVF_N_CENT, _IVF_N_PROBE = 16, 4

@@ -1,18 +1,24 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``brute_force_topk``: exact cosine top-k of each query vector against
-  the corpus.  Dot products via F.aggregate/zip_with (JVM-side fold, no
-  Python); top-k via window row_number.  The correctness baseline.
+  the corpus.  An Arrow/BLAS kernel: one float64 matmul per corpus
+  partition against the broadcast query matrix, local top-k per query,
+  then the shared re-rank.  Scores are rounded exactly as Spark and
+  DuckDB round, so the DuckDB oracle checks it value for value.
 - ``lsh_topk``: random-hyperplane LSH bucketing — each vector hashed to
   a signbit bucket by H fixed hyperplanes (deterministic public
-  constants); candidates share a bucket; exact cosine re-rank inside
-  buckets.  The scale path: the candidate join is linear in bucket
-  occupancy, not |corpus| × |queries|.
+  constants); each query probes its own bucket and, at
+  ``probe_hamming`` 1 or 2, the buckets one or two bit flips away;
+  exact cosine re-rank over the candidates.  The scale path: the
+  candidate join is linear in bucket occupancy, not
+  |corpus| × |queries|.
 - ``embedding_near_dups``: cosine >= threshold near-duplicate pairs via
   the same bucketing (axis for dedup.py).
 
-At 100 TB the corpus side is bucketed once (write-side partitioning by
-bucket id); queries broadcast when small.
+Every JVM-side score is ``_cosine`` and every top-k ends in
+``_top_k`` (cosine desc, corpus id asc).  At 100 TB the corpus side is
+bucketed once (write-side partitioning by bucket id); queries
+broadcast when small.
 """
 
 from __future__ import annotations
@@ -40,36 +46,22 @@ def _dot(a: str, b: str):
     )
 
 
-def with_cosine(df: DataFrame, a: str = "embedding", b: str = "q_embedding") -> DataFrame:
-    """cosine(a,b) rounded to 6 (cross-engine float guard)."""
-    return df.withColumn(
-        "cosine", F.round(_dot(a, b) / (_norm_col(a) * _norm_col(b)), 6)
-    )
+def _cosine(a: str, b: str):
+    """cosine(a, b) rounded to 6 (cross-engine float guard)."""
+    return F.round(_dot(a, b) / (_norm_col(a) * _norm_col(b)), 6)
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    q_id_col: str = "q_id",
-    vec_col: str = "embedding",
+def _top_k(
+    scored: DataFrame, k: int, q_id_col: str, id_col: str, carry: tuple = ()
 ) -> DataFrame:
-    """Exact top-k: broadcast queries × corpus, cosine, row_number<=k.
-    Ties broken by corpus id — fully deterministic."""
-    q = queries.select(
-        F.col(q_id_col), F.col(vec_col).alias("q_embedding")
-    )
-    scored = with_cosine(
-        corpus.join(F.broadcast(q), F.col(id_col) != F.col(q_id_col)),
-        vec_col,
-        "q_embedding",
-    )
+    """Per query, the k rows of highest `cosine`; ties go to the smaller
+    `id_col`, so every search is fully deterministic.  Returns
+    (q_id, *carry, id, cosine, rank)."""
     w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "cosine", "rank")
+        .select(q_id_col, *carry, id_col, "cosine", "rank")
     )
 
 
@@ -127,53 +119,25 @@ def lsh_topk(
     vec_col: str = "embedding",
     n_planes: int = 8,
     dim: int = 64,
+    probe_hamming: int = 0,
 ) -> DataFrame:
-    """Approximate top-k: candidates = same bucket; exact cosine re-rank
-    within.  Recall < 1 by construction; multiprobe = union over extra
-    plane subsets if needed (not implemented yet).  `dim` must match the
-    embedding width — no driver-side inference job is fired."""
-    c = with_lsh_bucket(corpus, dim, vec_col, n_planes)
-    q = with_lsh_bucket(
-        queries.select(F.col(q_id_col), F.col(vec_col).alias("q_embedding")),
-        dim,
-        "q_embedding",
-        n_planes,
-    )
-    cand = c.join(F.broadcast(q), "bucket").filter(F.col(id_col) != F.col(q_id_col))
-    scored = with_cosine(cand, vec_col, "q_embedding")
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "cosine", "rank")
-    )
-
-
-def lsh_topk_multiprobe(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    q_id_col: str = "q_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    probe_hamming: int = 1,
-) -> DataFrame:
-    """Multiprobe LSH top-k: each query probes its own bucket PLUS all
-    buckets within `probe_hamming` bit flips (Hamming-1: one plane
-    flipped; Hamming-2 adds every two-plane flip).  The standard fix
-    for single-probe's recall cliff — a near neighbor that lands just
-    across one (or two) hyperplanes is still found — at the cost of
-    more candidate lookups per QUERY: 1+n probes at Hamming-1,
-    1+n+n(n-1)/2 at Hamming-2, i.e. a fraction (1+n+...)/2^n of the
-    corpus scanned per query instead of brute force's all of it.  The
-    corpus is untouched: each corpus vector still lives in exactly one
-    bucket, and the probe set is distinct buckets, so a pair can match
-    through at most one probe and needs no dedup.
+    """Approximate top-k: each query probes its own bucket PLUS all
+    buckets within `probe_hamming` bit flips (0: its own bucket only;
+    1: every one-plane flip too; 2: every two-plane flip too), then an
+    exact cosine re-rank over the candidates.  Recall < 1 by
+    construction; multiprobe is the standard fix for single-probe's
+    recall cliff — a near neighbor that lands just across one (or two)
+    hyperplanes is still found — at the cost of more candidate lookups
+    per QUERY: 1+n probes at Hamming-1, 1+n+n(n-1)/2 at Hamming-2, i.e.
+    a fraction (1+n+...)/2^n of the corpus scanned per query instead of
+    brute force's all of it.  The corpus is untouched: each corpus
+    vector still lives in exactly one bucket, and the probe set is
+    distinct buckets, so a pair can match through at most one probe and
+    needs no dedup.  `dim` must match the embedding width — no
+    driver-side inference job is fired.
     cf. Lv et al., Multi-Probe LSH (VLDB'07)."""
-    if probe_hamming not in (1, 2):
-        raise ValueError(f"probe_hamming must be 1 or 2, got {probe_hamming}")
+    if probe_hamming not in (0, 1, 2):
+        raise ValueError(f"probe_hamming must be 0, 1 or 2, got {probe_hamming}")
     c = with_lsh_bucket(corpus, dim, vec_col, n_planes)
     q = with_lsh_bucket(
         queries.select(F.col(q_id_col), F.col(vec_col).alias("q_embedding")),
@@ -181,7 +145,9 @@ def lsh_topk_multiprobe(
         "q_embedding",
         n_planes,
     )
-    flips = [0] + [1 << h for h in range(n_planes)]
+    flips = [0]
+    if probe_hamming >= 1:
+        flips += [1 << h for h in range(n_planes)]
     if probe_hamming == 2:
         flips += [
             (1 << i) | (1 << j)
@@ -193,12 +159,8 @@ def lsh_topk_multiprobe(
         q_id_col, "q_embedding", F.explode(probes).alias("bucket")
     )
     cand = c.join(F.broadcast(qp), "bucket").filter(F.col(id_col) != F.col(q_id_col))
-    scored = with_cosine(cand, vec_col, "q_embedding")
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "cosine", "rank")
+    return _top_k(
+        cand.withColumn("cosine", _cosine(vec_col, "q_embedding")), k, q_id_col, id_col
     )
 
 
@@ -222,7 +184,7 @@ def ivf_assign(
         F.col("cid"), F.col(vec_col).alias("c_vec")
     )
     scored = df.crossJoin(F.broadcast(cent)).withColumn(
-        "_sim", F.round(_dot(vec_col, "c_vec") / (_norm_col(vec_col) * _norm_col("c_vec")), 6)
+        "_sim", _cosine(vec_col, "c_vec")
     )
     return (
         scored.groupBy(id_col)
@@ -259,12 +221,8 @@ def ivf_topk(
     c = ivf_assign(corpus, centroids, id_col, vec_col)
     probes = ivf_probes(queries, centroids, n_probe, q_id_col, vec_col)
     cand = c.join(F.broadcast(probes), "cid").filter(F.col(id_col) != F.col(q_id_col))
-    scored = with_cosine(cand, vec_col, "q_embedding")
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "cosine", "rank")
+    return _top_k(
+        cand.withColumn("cosine", _cosine(vec_col, "q_embedding")), k, q_id_col, id_col
     )
 
 
@@ -282,16 +240,10 @@ def ivf_probes(
     qs = (
         queries.select(F.col(q_id_col), F.col(vec_col).alias("q_embedding"))
         .crossJoin(F.broadcast(cent))
-        .withColumn(
-            "_sim",
-            F.round(_dot("q_embedding", "c_vec") / (_norm_col("q_embedding") * _norm_col("c_vec")), 6),
-        )
+        .withColumn("cosine", _cosine("q_embedding", "c_vec"))
     )
-    wq = Window.partitionBy(q_id_col).orderBy(F.col("_sim").desc(), F.col("cid"))
-    return (
-        qs.withColumn("_pr", F.row_number().over(wq))
-        .filter(F.col("_pr") <= n_probe)
-        .select(q_id_col, "q_embedding", "cid")
+    return _top_k(qs, n_probe, q_id_col, "cid", carry=("q_embedding",)).drop(
+        "cosine", "rank"
     )
 
 
@@ -312,18 +264,7 @@ def embedding_near_dups(
         F.col("bucket"), F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
     )
     pairs = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    scored = pairs.withColumn(
-        "cosine",
-        F.round(
-            F.aggregate(
-                F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x.cast("double") * y.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / (_norm_col("va") * _norm_col("vb")),
-            6,
-        ),
-    )
+    scored = pairs.withColumn("cosine", _cosine("va", "vb"))
     return (
         scored.filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -471,19 +412,13 @@ def kmeans_fit(
             eager=True
         )
     if init is None:
-        w = Window.orderBy(id_col)
-        init = (
-            df.orderBy(id_col)
-            .limit(k)
-            .select(
-                (F.row_number().over(w) - 1).alias("cid"),
-                F.expr(f"transform({vec_col}, x -> cast(x AS double))").alias(
-                    vec_col
-                ),
-            )
-        )
+        cent_rows = [
+            {"cid": cid, vec_col: [float(x) for x in r[0]]}
+            for cid, r in enumerate(df.orderBy(id_col).limit(k).select(vec_col).collect())
+        ]
+    else:
+        cent_rows = init.select("cid", vec_col).collect()
     spark = df.sparkSession
-    cent_rows = init.select("cid", vec_col).collect()
     schema = "cid int, embedding array<double>"
     for _ in range(n_iter):
         cent = spark.createDataFrame(
@@ -585,16 +520,12 @@ def ivf_topk_at_rest(
     cand = lists.select(id_col, "cid", vec_col).join(
         F.broadcast(probes), "cid"
     ).filter(F.col(id_col) != F.col(q_id_col))
-    scored = with_cosine(cand, vec_col, "q_embedding")
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "cosine", "rank")
+    return _top_k(
+        cand.withColumn("cosine", _cosine(vec_col, "q_embedding")), k, q_id_col, id_col
     )
 
 
-def brute_force_topk_arrow(
+def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
@@ -603,21 +534,20 @@ def brute_force_topk_arrow(
     vec_col: str = "embedding",
     max_broadcast_rows: int = 100_000,
 ) -> DataFrame:
-    """Exact top-k via an Arrow/BLAS kernel — the vectorized twin of
-    brute_force_topk for when Python IS the fast path: the JVM form
-    evaluates the cosine as a per-(query, row) aggregate() fold
-    (scalar expression per dimension), while here each corpus
-    partition does ONE float64 matmul against the broadcast query
-    matrix (mapInPandas, BLAS) and emits only its local top-k per
-    query; the global top-k then ranks |partitions| x k x |queries|
-    rows — never the full score matrix.
+    """Exact top-k via an Arrow/BLAS kernel: each corpus partition does
+    ONE float64 matmul against the broadcast query matrix (mapInPandas,
+    BLAS) and emits only its local top-k per query; the global top-k
+    then ranks |partitions| x k x |queries| rows — never the full score
+    matrix.  A JVM aggregate() fold would instead evaluate the cosine
+    as a scalar expression per dimension for every (query, row) pair.
 
-    Same semantics and tie-break (cosine desc, corpus id asc) and the
-    same round-6 scores: candidates within 1e-6 of the raw kth value
-    are kept (a superset of every 6-dp tie) and the kept few are
-    rounded with util.round_half_up — the exact Spark/DuckDB rounding
-    — so results are bit-identical to the fold kernel (np.round would
-    be half-even on the binary double and is NOT used on scores).
+    Tie-break is cosine desc, corpus id asc, on round-6 scores:
+    candidates within 1e-6 of the raw kth value are kept (a superset of
+    every 6-dp tie) and the kept few are rounded with
+    util.round_half_up — the exact Spark/DuckDB rounding, so scores
+    equal ``_cosine``'s (np.round would be half-even on the binary
+    double and is NOT used on scores).  An empty query side yields an
+    empty result.
 
     ``max_broadcast_rows`` guards the driver collect of the query side
     (same contract as asof_join_broadcast): this kernel is for many
@@ -626,23 +556,23 @@ def brute_force_topk_arrow(
 
     from gfwspark.util import round_half_up
 
-    n_q = queries.count()
-    if n_q > max_broadcast_rows:
+    qrows = queries.select(q_id_col, vec_col).limit(max_broadcast_rows + 1).collect()
+    if len(qrows) > max_broadcast_rows:
         raise ValueError(
-            f"brute_force_topk_arrow: {n_q} query rows exceed "
+            f"brute_force_topk: query side exceeds "
             f"max_broadcast_rows={max_broadcast_rows}; the query side "
             "is driver-collected and broadcast"
         )
     spark = corpus.sparkSession
-    qrows = queries.select(q_id_col, vec_col).collect()
+    id_t = corpus.schema[id_col].dataType.simpleString()
+    qid_t = queries.schema[q_id_col].dataType.simpleString()
+    out_schema = f"{q_id_col} {qid_t}, {id_col} {id_t}, cosine double"
+    if not qrows:  # no (Q, D) matrix to build, nothing to rank
+        return spark.createDataFrame([], f"{out_schema}, rank int")
     q_ids = [r[0] for r in qrows]
     qm = np.array([r[1] for r in qrows], dtype=np.float64)  # (Q, D)
     qn = np.linalg.norm(qm, axis=1)
     bq = spark.sparkContext.broadcast((q_ids, qm, qn))
-
-    id_t = corpus.schema[id_col].dataType.simpleString()
-    qid_t = queries.schema[q_id_col].dataType.simpleString()
-    out_schema = f"{q_id_col} {qid_t}, {id_col} {id_t}, cosine double"
 
     def _part(batches):
         q_ids_b, qm_b, qn_b = bq.value
@@ -681,12 +611,7 @@ def brute_force_topk_arrow(
                 yield _pd.concat(res, ignore_index=True)
 
     local = corpus.select(id_col, vec_col).mapInPandas(_part, out_schema)
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "cosine", "rank")
-    )
+    return _top_k(local, k, q_id_col, id_col)
 
 
 def quantization_params(emb: DataFrame, dim: int, vec_col: str = "embedding"):

@@ -182,7 +182,7 @@ def test_multiprobe_recall_dominates_single_probe(spark):
     q = emb.filter(F.col("vec_id") < 20).select(F.col("vec_id").alias("q_id"), "embedding")
     truth = similarity.brute_force_topk(emb, q, k=5).toPandas()
     single = similarity.lsh_topk(emb, q, k=5, dim=64).toPandas()
-    multi = similarity.lsh_topk_multiprobe(emb, q, k=5, dim=64).toPandas()
+    multi = similarity.lsh_topk(emb, q, k=5, dim=64, probe_hamming=1).toPandas()
 
     def recall(approx):
         t = truth.groupby("q_id")["vec_id"].apply(set)
@@ -264,7 +264,7 @@ def test_multiprobe_recall_on_clustered_corpus(spark):
     )
     k = 5
     truth = similarity.brute_force_topk(corpus, q, k=k).toPandas()
-    multi = similarity.lsh_topk_multiprobe(
+    multi = similarity.lsh_topk(
         corpus, q, k=k, dim=dim, n_planes=8, probe_hamming=2
     ).toPandas()
     t = truth.groupby("q_id")["vec_id"].apply(set)
@@ -624,11 +624,16 @@ def test_logreg_round6_half_away_ties():
     assert _round6(1.25) == 1.25
 
 
-def test_brute_force_arrow_equals_jvm(spark):
-    """The BLAS kernel must reproduce the JVM fold kernel EXACTLY
-    (same round-6 scores, same id tie-breaks) — including a planted
-    exact tie (scaled copy, cosine 1.0) where ordering is id-only."""
+def test_brute_force_topk_equals_numpy_reference(spark):
+    """The BLAS kernel must reproduce an exhaustive reference EXACTLY:
+    every cosine rounded half-up to 6 dp (the Spark/DuckDB rounding),
+    ties ordered by corpus id — including a planted exact tie (scaled
+    copies, cosine 1.0) where ordering is id-only.  An empty query side
+    gives an empty frame, and the query-side guard raises past
+    max_broadcast_rows."""
     import pandas as pd
+
+    from gfwspark.util import round_half_up
 
     rng = np.random.RandomState(5)
     vecs = rng.randn(200, 16).astype("float32")
@@ -639,18 +644,30 @@ def test_brute_force_arrow_equals_jvm(spark):
     q = corpus.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    a = (
+    got = (
         similarity.brute_force_topk(corpus, q, k=5)
         .toPandas().sort_values(["q_id", "rank"]).reset_index(drop=True)
     )
-    b = (
-        similarity.brute_force_topk_arrow(corpus, q, k=5)
-        .toPandas().sort_values(["q_id", "rank"]).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b[a.columns], check_dtype=False)
+    m = vecs.astype(np.float64)
+    unit = m / np.linalg.norm(m, axis=1)[:, None]
+    ref = []
+    for qi in range(8):
+        scored = sorted(
+            (-round_half_up(float(unit[i] @ unit[qi])), i)
+            for i in range(200) if i != qi
+        )
+        ref += [(qi, i, -c, r) for r, (c, i) in enumerate(scored[:5], start=1)]
+    ref = pd.DataFrame(ref, columns=["q_id", "vec_id", "cosine", "rank"])
+    pd.testing.assert_frame_equal(got[ref.columns], ref, check_dtype=False)
     # the planted ties both appear for query 3, id-ordered
-    q3 = a[a.q_id == 3]
+    q3 = got[got.q_id == 3]
     assert list(q3.vec_id[:2]) == [50, 51] and list(q3.cosine[:2]) == [1.0, 1.0]
+
+    empty = similarity.brute_force_topk(corpus, q.filter(F.col("q_id") < 0), k=5)
+    assert empty.columns == ["q_id", "vec_id", "cosine", "rank"]
+    assert empty.count() == 0
+    with pytest.raises(ValueError, match="max_broadcast_rows=7"):
+        similarity.brute_force_topk(corpus, q, k=5, max_broadcast_rows=7)
 
 
 def test_int8_quantization_reconstruction_and_recall(spark):

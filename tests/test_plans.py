@@ -62,8 +62,6 @@ def test_no_cartesian_products(spark):
     """No accidental nested-loop joins in any oracle-checked query
     (cross joins only against scalar/tiny broadcast frames)."""
     for name, fn in queries.all_queries().items():
-        if name in ("ann_brute_topk",):  # brute-force baseline is an
-            continue  # intentional broadcast NL join (exact top-k)
         df = fn(spark, SF_MED)
         plan = _plan(df)
         for bad in re.findall(r"CartesianProduct", plan):
