@@ -14,23 +14,31 @@ Reference semantics being reproduced (SURVEY.md §2.3 J1–J3):
 Three physical strategies, same results (all gate-checked against the
 same DuckDB ASOF oracle):
 
-1. ``asof_join_union`` — pure DataFrame plan: union facts+annotations,
-   one window `last(value, ignorenulls=True)` over
-   (entity, ts) rowsBetween(unboundedPreceding, 0).  One shuffle, fully
-   JVM-side, whole-stage-codegen'd; the default at scale.  Over two
-   tables bucketed by entity (layout.write_bucketed) it still plans one
-   Exchange (Union discards its children's partitioning).
+1. ``asof_join_union`` — pure DataFrame plan: interleave facts and
+   annotations on one timeline (``_interleave``), then one window
+   ``last(value, ignorenulls=True)`` over (entity, ts)
+   rowsBetween(unboundedPreceding, 0) (``_carried``).  One shuffle,
+   fully JVM-side, whole-stage-codegen'd; the default at scale.  Over
+   two tables bucketed by entity (layout.write_bucketed) it still
+   plans one Exchange (Union discards its children's partitioning).
+   ``interval_label_join`` is this join over interval starts plus a
+   coverage test.
 2. ``asof_join_broadcast`` — map-side searchsorted against a broadcast
    per-entity annotation index: ZERO shuffle of the fact table.  The
    pick when the annotation dim is small, which at 10^12 fact rows is
-   the difference between moving nothing and moving everything.
+   the difference between moving nothing and moving everything.  It
+   takes a streaming fact frame unchanged (stream-static as-of).
 3. ``asof_join_chunked`` — time-salted + re-merged: for SKEWED
    entities, where the union form serializes each entity into one task.
-   Salt = time chunk; local union-form merge per (entity, chunk);
-   terminal annotation state re-merged through a tiny per-chunk carry
-   frame.  Measured on one 12.8M-row hot entity at 8 cores: 11.3 s
-   (union, serial window) -> 4.1 s (2.8x; the gap grows linearly with
-   hot-entity size).
+   Salt = time chunk; the same interleave and carry per (entity,
+   chunk); terminal annotation state re-merged through a tiny
+   per-chunk carry frame.  Measured on one 12.8M-row hot entity at 8
+   cores: 11.3 s (union, serial window) -> 4.1 s (2.8x; the gap grows
+   linearly with hot-entity size).
+
+``asof_join`` is the front door: 'union', 'broadcast', or 'auto' — a
+layout.collect_entity_stats profile routes only the hot entities
+through the chunked kernel (chunk floor ``CHUNK_FLOOR_S``).
 
 NULL entities group like any other value (SQL grouping semantics): a
 NULL-entity fact takes the latest NULL-entity annotation in every
@@ -40,7 +48,62 @@ strategy.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
+
+
+#: floor of the chunk size asof_join(strategy='auto') derives: coarse
+#: chunks keep the carry frame tiny and amortize per-chunk overhead
+CHUNK_FLOOR_S = 3600
+
+
+def _interleave(
+    facts: DataFrame,
+    annotations: DataFrame,
+    entity: str,
+    ts: str,
+    ann_ts: str,
+    value_cols: tuple[str, ...],
+) -> DataFrame:
+    """facts UNION annotations on one timeline: annotation rows sit at
+    their ``ann_ts`` with ``_src`` 0 and carry ``_v_<c>``; fact rows
+    keep every column, get ``_src`` 1 and NULL ``_v_<c>``."""
+    a = annotations.select(
+        F.col(entity),
+        F.col(ann_ts).alias(ts),
+        F.lit(0).alias("_src"),
+        *[F.col(c).alias(f"_v_{c}") for c in value_cols],
+    )
+    f = facts.select(
+        "*",
+        F.lit(1).alias("_src"),
+        *[F.lit(None).cast(a.schema[f"_v_{c}"].dataType).alias(f"_v_{c}") for c in value_cols],
+    )
+    return f.unionByName(a, allowMissingColumns=True)
+
+
+def _carried(
+    partition_cols: list[str], ts: str, value_cols: tuple[str, ...], prefix: str
+) -> list[Column]:
+    """``last(_v_<c>, ignorenulls)`` over (ts, _src) up to the current
+    row, aliased ``<prefix><c>``: the latest annotation value at or
+    before each row of an interleaved frame (annotations sort first on
+    a ts tie, so a same-ts annotation is visible)."""
+    w = (
+        Window.partitionBy(*partition_cols)
+        .orderBy(F.col(ts).asc(), F.col("_src").asc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return [
+        F.last(F.col(f"_v_{c}"), ignorenulls=True).over(w).alias(f"{prefix}{c}")
+        for c in value_cols
+    ]
+
+
+def _check_chunk_s(chunk_s) -> None:
+    # a zero chunk divides by zero at action time, and a negative one
+    # flips the chunk order so later chunks carry into earlier ones
+    if chunk_s is None or chunk_s < 1:
+        raise ValueError(f"chunk_s must be a number of seconds >= 1, got {chunk_s!r}")
 
 
 def asof_join_union(
@@ -65,30 +128,8 @@ def asof_join_union(
     and AQE coalesces the output.
     """
     fact_cols = facts.columns
-    a = annotations.select(
-        F.col(entity),
-        F.col(ann_ts).alias(ts),
-        F.lit(0).alias("_src"),
-        *[F.col(c).alias(f"_v_{c}") for c in value_cols],
-    )
-    f = facts.select(
-        "*",
-        F.lit(1).alias("_src"),
-        *[F.lit(None).cast(a.schema[f"_v_{c}"].dataType).alias(f"_v_{c}") for c in value_cols],
-    )
-    unioned = f.unionByName(a, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(entity)
-        .orderBy(F.col(ts).asc(), F.col("_src").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = unioned.select(
-        "*",
-        *[
-            F.last(F.col(f"_v_{c}"), ignorenulls=True).over(w).alias(f"asof_{c}")
-            for c in value_cols
-        ],
-    )
+    out = _interleave(facts, annotations, entity, ts, ann_ts, value_cols)
+    out = out.select("*", *_carried([entity], ts, value_cols, "asof_"))
     return out.filter(F.col("_src") == 1).select(
         *fact_cols, *[f"asof_{c}" for c in value_cols]
     )
@@ -121,43 +162,15 @@ def interval_label_join(
     data) the two agree.  For reference-exact resolution on nested
     intervals use ``interval_label_join_covering``.
 
-    Implementation: backward as-of on interval starts carrying
-    (start,end,value), then a coverage filter — two window columns, one
-    shuffle, no join.
+    Implementation: ``asof_join_union`` on interval starts carrying
+    (end, value), then a coverage test — one shuffle, no join.
     """
-    fact_cols = facts.columns
-    a = intervals.select(
-        F.col(entity),
-        F.col(start).alias(ts),
-        F.lit(0).alias("_src"),
-        F.col(end).alias("_end"),
-        F.col(value).alias("_val"),
-    )
-    f = facts.select(
-        "*",
-        F.lit(1).alias("_src"),
-        F.lit(None).cast(a.schema["_end"].dataType).alias("_end"),
-        F.lit(None).cast(a.schema["_val"].dataType).alias("_val"),
-    )
-    unioned = f.unionByName(a)
-    w = (
-        Window.partitionBy(entity)
-        .orderBy(F.col(ts).asc(), F.col("_src").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    lab = unioned.select(
-        "*",
-        F.last("_end", ignorenulls=True).over(w).alias("_last_end"),
-        F.last("_val", ignorenulls=True).over(w).alias("_last_val"),
-    )
-    return (
-        lab.filter(F.col("_src") == 1)
-        .select(
-            *fact_cols,
-            F.when(F.col(ts) <= F.col("_last_end"), F.col("_last_val"))
-            .otherwise(F.lit(default))
-            .alias("label"),
-        )
+    lab = asof_join_union(facts, intervals, entity, ts, start, (end, value))
+    return lab.select(
+        *facts.columns,
+        F.when(F.col(ts) <= F.col(f"asof_{end}"), F.col(f"asof_{value}"))
+        .otherwise(F.lit(default))
+        .alias("label"),
     )
 
 
@@ -357,7 +370,9 @@ def asof_join_chunked(
     deduped to one row per (entity, ann_ts) — same contract as the
     other strategies.  Chunk sizing follows chunked_time_range_agg:
     pick chunk_s coarse (thousands of rows per chunk) so the summary
-    frame stays tiny and per-chunk Arrow/agg overhead is amortized.
+    frame stays tiny and per-chunk Arrow/agg overhead is amortized;
+    ``chunk_s`` < 1 raises ValueError (a zero chunk cannot salt, and a
+    negative one reverses the chunk order and leaks later labels).
 
     ``hot_ids``: when given (the layout.salted pattern: salt only the
     skewed keys), ONLY those entities are time-chunked; every other
@@ -369,22 +384,9 @@ def asof_join_chunked(
     """
     from gfwspark.util import epoch_us
 
+    _check_chunk_s(chunk_s)
     fact_cols = facts.columns
     chunk_us = int(chunk_s) * 1_000_000
-    a = annotations.select(
-        F.col(entity),
-        F.col(ann_ts).alias(ts),
-        F.lit(0).alias("_src"),
-        *[F.col(c).alias(f"_v_{c}") for c in value_cols],
-    )
-    f = facts.select(
-        "*",
-        F.lit(1).alias("_src"),
-        *[
-            F.lit(None).cast(a.schema[f"_v_{c}"].dataType).alias(f"_v_{c}")
-            for c in value_cols
-        ],
-    )
     chunk_expr = F.floor(epoch_us(ts) / F.lit(chunk_us))
     if hot_ids is not None:
         non_null = [h for h in hot_ids if h is not None]
@@ -395,20 +397,11 @@ def asof_join_chunked(
             # into the single chunk-0 window auto exists to prevent
             is_hot = is_hot | F.col(entity).isNull()
         chunk_expr = F.when(is_hot, chunk_expr).otherwise(F.lit(0).cast("long"))
-    u = f.unionByName(a, allowMissingColumns=True).withColumn("_chunk", chunk_expr)
+    u = _interleave(facts, annotations, entity, ts, ann_ts, value_cols).withColumn(
+        "_chunk", chunk_expr
+    )
     # local merge: the union-form carry, salted by (entity, chunk)
-    w_in = (
-        Window.partitionBy(entity, "_chunk")
-        .orderBy(F.col(ts).asc(), F.col("_src").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    within = u.select(
-        "*",
-        *[
-            F.last(F.col(f"_v_{c}"), ignorenulls=True).over(w_in).alias(f"_in_{c}")
-            for c in value_cols
-        ],
-    )
+    within = u.select("*", *_carried([entity, "_chunk"], ts, value_cols, "_in_"))
     # terminal annotation state per (entity, chunk) — max-of-struct so
     # fact rows (null value) and annotation-less chunks fold to NULL.
     # Every (entity, chunk) present in the union gets a summary row, so
@@ -468,7 +461,6 @@ def asof_join(
     strategy: str = "auto",
     hot_threshold_rows: int = 3_000_000,
     chunk_s: int | None = None,
-    min_chunk_s: int = 3600,
     entity_stats: DataFrame | None = None,
     max_hot_ids: int = 256,
 ) -> DataFrame:
@@ -481,32 +473,36 @@ def asof_join(
     - ``'broadcast'``— asof_join_broadcast (zero fact shuffle; small
       annotation dims only — raises past its row cap).  Single value
       column (the broadcast index carries one payload array).
-    - ``'chunked'``  — asof_join_chunked (time-salted; hot entities).
-      Requires ``chunk_s``.
-    - ``'auto'``     — measure per-entity fact counts once (a tiny
-      groupBy count + min/max-ts agg whose output is only the keys
-      above ``hot_threshold_rows``), then run ONE chunked pipeline in
-      which only the hot keys are time-salted (``hot_ids``) — cold
-      entities get the constant chunk 0, which degenerates to exactly
-      the union-form window per entity.  Single scan of the facts,
-      single (entity, chunk) shuffle, one tiny carry join; no second
-      pipeline over the input.  The crossover default (3M rows/entity)
-      is the measured break-even of chunked-vs-union on this engine
-      (BENCH/HISTORY.md r3: 2.8x at 12.8M rows/entity, ~parity at
-      3-5M).  Cold traffic pays only the salting CASE expression; hot
-      traffic stops serializing into single window tasks.
+    - ``'auto'``     — profile per-entity fact counts once
+      (layout.collect_entity_stats: a tiny groupBy count + min/max-ts
+      agg, of which only the keys above ``hot_threshold_rows`` are
+      collected), then run ONE asof_join_chunked pipeline in which
+      only the hot keys are time-salted (``hot_ids``) — cold entities
+      get the constant chunk 0, which degenerates to exactly the
+      union-form window per entity.  Single scan of the facts, single
+      (entity, chunk) shuffle, one tiny carry join; no second pipeline
+      over the input.  With no hot key it is asof_join_union.  The
+      crossover default (3M rows/entity) is the measured break-even of
+      chunked-vs-union on this engine (BENCH/HISTORY.md r3: 2.8x at
+      12.8M rows/entity, ~parity at 3-5M).  Cold traffic pays only the
+      salting CASE expression; hot traffic stops serializing into
+      single window tasks.
 
-    Auto's decision pass is one map-side-combined groupBy over the fact
-    table producing O(hot entities) rows — at 10^12 rows that is the
-    cheap pre-scan that saves the serialized hot-entity window.  When
-    the skew profile is already known, call the strategies directly
-    (or pre-filter with layout.detect_skew) and skip the pass.
+    The time-salted kernel has no strategy name: call
+    asof_join_chunked directly when the skew and chunk size are known.
+
+    ``entity_stats`` (auto mode): a precomputed profile in the
+    layout.collect_entity_stats shape (entity, n_rows, lo_us, hi_us),
+    e.g. read back with layout.read_entity_stats, skips the profile
+    pass over the facts.  Count-only stats (entity, n_rows) work too;
+    the time span is then probed from the facts only if ``chunk_s`` is
+    unset.
 
     ``chunk_s`` (auto mode): derived so each hot entity spans roughly
     ``4 x defaultParallelism`` chunks of its observed time span,
-    floored at ``min_chunk_s`` — coarse chunks, per the chunked-kernel
+    floored at ``CHUNK_FLOOR_S`` — coarse chunks, per the chunked-kernel
     sizing rule (thousands of rows per chunk; Arrow overhead amortized).
-    Pass an explicit ``chunk_s`` to override.
+    Pass an explicit ``chunk_s`` (>= 1 s, else ValueError) to override.
     """
     if strategy == "union":
         return asof_join_union(facts, annotations, entity, ts, ann_ts, value_cols)
@@ -519,49 +515,34 @@ def asof_join(
         return asof_join_broadcast(
             facts, annotations, entity, ts, ann_ts, value_col=value_cols[0]
         )
-    if strategy == "chunked":
-        if chunk_s is None:
-            raise ValueError("asof_join(strategy='chunked') requires chunk_s")
-        return asof_join_chunked(
-            facts, annotations, chunk_s, entity, ts, ann_ts, value_cols
-        )
     if strategy != "auto":
         raise ValueError(f"unknown as-of strategy {strategy!r}")
+    if chunk_s is not None:
+        _check_chunk_s(chunk_s)
 
+    from gfwspark import layout
     from gfwspark.util import epoch_us
 
-    if entity_stats is not None:
-        # caller already profiled the layout (layout.detect_skew, a
-        # checkpoint manifest, table stats) — don't re-scan the facts.
-        # Required columns: entity + n_rows; lo_us/hi_us optional
-        # (falls back to a global span probe only if chunk_s is unset).
-        stats = entity_stats
-        have_span = {"lo_us", "hi_us"} <= set(stats.columns)
-        sel = [entity, "n_rows"] + (["lo_us", "hi_us"] if have_span else [])
-        hot_rows = (
-            stats.select(*sel)
-            .filter(F.col("n_rows") > hot_threshold_rows)
-            .limit(max_hot_ids + 1)
-            .collect()
-        )
-    else:
-        have_span = True
-        hot_rows = (
-            facts.groupBy(entity)
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min(epoch_us(ts)).alias("lo_us"),
-                F.max(epoch_us(ts)).alias("hi_us"),
-            )
-            .filter(F.col("n_rows") > hot_threshold_rows)
-            .limit(max_hot_ids + 1)
-            .collect()
-        )
+    # a caller-supplied profile (layout.read_entity_stats, a checkpoint
+    # manifest, table stats) spares the scan of the facts
+    stats = (
+        layout.collect_entity_stats(facts, entity, ts)
+        if entity_stats is None
+        else entity_stats
+    )
+    have_span = {"lo_us", "hi_us"} <= set(stats.columns)
+    sel = [entity, "n_rows"] + (["lo_us", "hi_us"] if have_span else [])
+    hot_rows = (
+        stats.select(*sel)
+        .filter(F.col("n_rows") > hot_threshold_rows)
+        .limit(max_hot_ids + 1)
+        .collect()
+    )
     if not hot_rows:
         return asof_join_union(facts, annotations, entity, ts, ann_ts, value_cols)
 
     if chunk_s is None:
-        if have_span and hot_rows:
+        if have_span:
             span_s = max((r["hi_us"] - r["lo_us"]) // 1_000_000 for r in hot_rows)
         else:
             g = facts.agg(
@@ -569,7 +550,7 @@ def asof_join(
             ).first()
             span_s = (g["hi"] - g["lo"]) // 1_000_000
         n_chunks = 4 * facts.sparkSession.sparkContext.defaultParallelism
-        chunk_s = max(int(span_s // n_chunks) + 1, min_chunk_s)
+        chunk_s = max(int(span_s // n_chunks) + 1, CHUNK_FLOOR_S)
 
     if len(hot_rows) > max_hot_ids:
         # hot set too large to embed as an isin()/CASE literal on the

@@ -64,16 +64,24 @@ def with_lag_features(
     )
 
 
-def with_derived_features(
-    df: DataFrame,
-    entity: str = "image_id",
-    ts: str = "ts",
-    order_tiebreak: str | None = None,
+def _labelled_base(
+    images: DataFrame,
+    annotations: DataFrame | None,
+    entity: str,
+    ts: str,
+    order_tiebreak: str | None,
+    asof_strategy: str,
 ) -> DataFrame:
-    """Attach all per-image derived feature columns (native only)."""
-    return with_lag_features(
-        with_row_features(df), entity=entity, ts=ts, order_tiebreak=order_tiebreak
-    )
+    """Row features, payload drop, as-of label, then lag features: the
+    base both featurizations add their sliding aggregates to."""
+    feat = with_row_features(images).drop("caption", "bytes", "fmt")
+    if annotations is not None:
+        feat = asof.asof_join(
+            feat, annotations, entity=entity, ts=ts,
+            ann_ts="start_ts", value_cols=("label",),
+            strategy=asof_strategy,
+        )
+    return with_lag_features(feat, entity=entity, ts=ts, order_tiebreak=order_tiebreak)
 
 
 def featurize(
@@ -108,15 +116,7 @@ def featurize(
     are consumed map-side into per-row features and dropped before the
     shuffle — join them back post-hoc by (entity, ts) if needed.
     """
-    feat = with_row_features(images).drop("caption", "bytes", "fmt")
-    if annotations is not None:
-        feat = asof.asof_join(
-            feat, annotations, entity=entity, ts=ts,
-            ann_ts="start_ts", value_cols=("label",),
-            strategy=asof_strategy,
-        )
-
-    feat = with_lag_features(feat, entity=entity, ts=ts, order_tiebreak=order_tiebreak)
+    feat = _labelled_base(images, annotations, entity, ts, order_tiebreak, asof_strategy)
 
     wslide = entity_time_window(entity, ts, order_tiebreak).rowsBetween(
         -(window_size - 1), 0
@@ -151,14 +151,7 @@ def featurize_full(
     min/avg/max/stddev sliding aggregates at three window geometries
     (vessel-char 12800 / fishing 1024 / scored 256 analogs), all over
     the single entity shuffle."""
-    feat = with_row_features(images).drop("caption", "bytes", "fmt")
-    if annotations is not None:
-        feat = asof.asof_join(
-            feat, annotations, entity=entity, ts=ts,
-            ann_ts="start_ts", value_cols=("label",),
-            strategy=asof_strategy,
-        )
-    feat = with_lag_features(feat, entity=entity, ts=ts, order_tiebreak=order_tiebreak)
+    feat = _labelled_base(images, annotations, entity, ts, order_tiebreak, asof_strategy)
 
     w_time = entity_time_window(entity, ts, order_tiebreak)
     for ws in window_sizes:

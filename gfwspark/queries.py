@@ -253,10 +253,9 @@ def q_asof_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     img = tables.image_caption_from_events(spark, sf_dir).select(
         "image_id", "ts", "event_id"
     )
-    out = asof.asof_join_union(
+    return asof.asof_join_union(
         img, _ann_dedup(spark, sf_dir), value_cols=("label",)
     )
-    return out.withColumnRenamed("asof_label", "asof_label")
 
 
 # ---------------------------------------------------------------------

@@ -11,10 +11,12 @@ run incrementally:
   windows.tumbling_agg
 - ``stream_hamming_state``: applyInPandasWithState carrying the last
   phash per entity across micro-batches — twin of the lag(phash)
-  hamming delta in features.with_derived_features
-- ``stream_asof_label``:   stream-static backward as-of via the
-  broadcast searchsorted strategy — twin of asof.asof_join_broadcast
-  (zero shuffle, zero streaming state)
+  hamming delta in features.with_lag_features
+
+Stream-static backward as-of needs no twin: asof.asof_join_broadcast
+takes a streaming fact frame as is (the annotation index is built once
+on the driver; zero shuffle, zero streaming state, append-mode output
+with no watermark).
 
 Late data beyond the watermark is dropped (the batch engine has no
 late data; the watermark bound makes the streaming results converge to
@@ -236,38 +238,6 @@ def stream_sliding_mean(
         stateStructType=_SLMEAN_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_asof_label(
-    stream: DataFrame,
-    annotations: DataFrame,
-    entity: str = "image_id",
-    ts: str = "ts",
-    ann_ts: str = "start_ts",
-    value_col: str = "label",
-) -> DataFrame:
-    """Stream-static backward as-of — the streaming twin of J1.
-
-    Facts arrive as a stream; the annotation dim is static and small
-    (the production shape: a label/config table versioned over time).
-    The batch broadcast strategy (``asof.asof_join_broadcast``) applies
-    unchanged: the per-entity sorted annotation index is built once on
-    the driver and the fact micro-batches flow through the same
-    ``mapInPandas`` searchsorted — zero shuffle, zero streaming state,
-    append-mode output with no watermark needed (the lookup is
-    stateless per row, so late facts still get the correct
-    backward-only label).  Zero temporal leakage: the index holds only
-    start_ts <= fact ts matches, identical to the batch strategies."""
-    from gfwspark import asof
-
-    return asof.asof_join_broadcast(
-        stream,
-        annotations,
-        entity=entity,
-        ts=ts,
-        ann_ts=ann_ts,
-        value_col=value_col,
     )
 
 

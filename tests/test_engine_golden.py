@@ -102,12 +102,23 @@ def test_asof_union_matches_oracle(img_df, ann_df, img_pdf):
         assert np.allclose(got, want, equal_nan=True), eid
 
 
-def test_interval_labels_match_oracle(img_df, ann_df, img_pdf):
-    out = (
-        asof.interval_label_join(img_df.select("image_id", "ts"), ann_df)
-        .toPandas()
-        .sort_values(["image_id", "ts"])
-    )
+@pytest.mark.parametrize(
+    "fact_cols",
+    [("image_id", "ts"), ("image_id", "ts", "phash"), ("caption", "ts", "image_id")],
+    ids=["entity_ts", "payload", "payload_first"],
+)
+def test_interval_labels_match_oracle(img_df, ann_df, img_pdf, fact_cols):
+    """Dense interval labels equal the numpy oracle, and fact columns
+    beyond (entity, ts) come through unchanged in their own order."""
+    labelled = asof.interval_label_join(img_df.select(*fact_cols), ann_df)
+    assert labelled.columns == [*fact_cols, "label"]
+    out = labelled.toPandas().sort_values(["image_id", "ts"])
+    key = ["image_id", "ts"]
+    payload = [c for c in fact_cols if c not in key]
+    if payload:
+        want_payload = img_pdf[key + payload].sort_values(key).reset_index(drop=True)
+        got_payload = out[key + payload].reset_index(drop=True)
+        pd.testing.assert_frame_equal(want_payload, got_payload, check_dtype=False)
     ann_pdf = ann_df.toPandas()
     for eid, grp in img_pdf.groupby("image_id"):
         grp = grp.sort_values("ts")
@@ -760,33 +771,57 @@ def test_asof_auto_dispatch_equivalence(img_df, ann_df):
 
 def test_asof_auto_explicit_strategies(img_df, ann_df):
     """Explicit strategy names dispatch to the matching kernels and
-    agree; unknown names and chunked-without-chunk_s raise."""
-    import pytest as _pytest
-
+    agree; unknown and removed names raise."""
     ann1 = ann_df.groupBy("image_id", "start_ts").agg(F.max("value").alias("value"))
     small = img_df.select("image_id", "ts", "phash")
     a = (
         asof.asof_join(small, ann1, value_cols=("value",), strategy="union")
         .toPandas().sort_values(["image_id", "ts"]).reset_index(drop=True)
     )
-    for kw in (
-        dict(strategy="broadcast"),
-        dict(strategy="chunked", chunk_s=86400),
-    ):
-        b = (
-            asof.asof_join(small, ann1, value_cols=("value",), **kw)
-            .toPandas().sort_values(["image_id", "ts"]).reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(a, b, check_dtype=False)
-    with _pytest.raises(ValueError, match="chunk_s"):
-        asof.asof_join(small, ann1, strategy="chunked")
-    with _pytest.raises(ValueError, match="one"):
+    b = (
+        asof.asof_join(small, ann1, value_cols=("value",), strategy="broadcast")
+        .toPandas().sort_values(["image_id", "ts"]).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    with pytest.raises(ValueError, match="one"):
         asof.asof_join(
             small, ann1, value_cols=("value", "value"), strategy="broadcast"
         )
-    for removed in ("nope", "cogroup"):
-        with _pytest.raises(ValueError, match="strategy"):
-            asof.asof_join(small, ann1, strategy=removed)
+    for removed in ("nope", "cogroup", "chunked"):
+        with pytest.raises(ValueError, match="unknown as-of strategy"):
+            asof.asof_join(small, ann1, strategy=removed, chunk_s=86400)
+
+
+@pytest.mark.parametrize(
+    "entry, chunk_s",
+    [("chunked", None), ("chunked", 0), ("chunked", -43200), ("chunked", 0.5),
+     ("auto", 0), ("auto", -43200)],
+)
+def test_asof_chunk_s_must_be_positive(spark, entry, chunk_s):
+    """A chunk size below one second (or none at all for the chunked
+    kernel) raises ValueError when the join is built: a zero chunk
+    would divide by zero at action time, and a negative one reverses
+    the chunk order so facts before the first annotation take LATER
+    labels (leakage).  One second is accepted."""
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1)
+    facts = spark.createDataFrame(
+        [("e", base + dt.timedelta(hours=h)) for h in range(0, 48, 2)],
+        "image_id string, ts timestamp",
+    )
+    ann = spark.createDataFrame(
+        [("e", base + dt.timedelta(hours=20), "early"),
+         ("e", base + dt.timedelta(hours=40), "late")],
+        "image_id string, start_ts timestamp, label string",
+    )
+    with pytest.raises(ValueError, match="chunk_s"):
+        if entry == "chunked":
+            asof.asof_join_chunked(facts, ann, chunk_s)
+        else:
+            asof.asof_join(facts, ann, strategy="auto", hot_threshold_rows=1,
+                           chunk_s=chunk_s)
+    asof.asof_join_chunked(facts, ann, 1)
 
 
 def test_asof_auto_null_hot_entity(spark):

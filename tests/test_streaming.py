@@ -155,9 +155,10 @@ def test_stream_sliding_mean_matches_batch(spark, parquet_input):
     assert np.allclose(got["v_w_avg"], want["b_avg"])
 
 
-def test_stream_asof_label_matches_batch(spark, parquet_input):
-    """Stream-static as-of converges to the batch broadcast strategy
-    when the fact stream is replayed with availableNow."""
+def test_stream_asof_broadcast_matches_batch(spark, parquet_input):
+    """The broadcast as-of over a fact stream (stream-static as-of)
+    converges to the same join over the batch frame when the stream is
+    replayed with availableNow."""
     from gfwspark import asof
 
     batch_df = spark.read.parquet(parquet_input)
@@ -169,7 +170,7 @@ def test_stream_asof_label_matches_batch(spark, parquet_input):
     stream_df = spark.readStream.schema(batch_df.schema).parquet(parquet_input)
 
     got = _run_stream(
-        spark, streaming.stream_asof_label(stream_df, ann), "asoflbl"
+        spark, asof.asof_join_broadcast(stream_df, ann), "asoflbl"
     ).toPandas()
     want = asof.asof_join_broadcast(batch_df, ann).toPandas()
 
