@@ -7,11 +7,11 @@ local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: sec}, "sf": ...}
 
---scaling mode (north rule): run the flagship featurization job at two
-N->4N core pairs (2->8 headline, 8->32 supplementary) in separate
-clean-JVM subprocesses, report images/sec at each level plus scaling
-efficiency throughput(4N) / (4 * throughput(N)), and write
-BENCH/BASELINE.md.
+--scaling mode (north rule): run the flagship featurization job at one
+N->4N core pair fitted to the host (N = CPUS // 4, so 1->4 on a 4-CPU
+host) in separate clean-JVM subprocesses, and print one JSON line with
+both sides' runs, images/sec and the scaling efficiency
+throughput(4N) / (4 * throughput(N)).  It writes no file in the repo.
 
 Queries are materialized with the noop sink (full execution, no driver
 collect) — the honest analog of writing to a table.
@@ -67,14 +67,17 @@ def run_headline(sf_dir: str, cpus: int) -> dict[str, float]:
     from gfwspark import queries
     from gfwspark.session import get_spark
 
+    qs = queries.all_queries()
+    # a headline name missing from the registry would shrink the total
+    # and read as a speed-up
+    missing = [name for name in HEADLINE if name not in qs]
+    if missing:
+        raise ValueError(f"headline queries missing from queries.all_queries(): {missing}")
     spark = get_spark("gfwspark-bench", master=f"local[{cpus}]",
                       shuffle_partitions=max(cpus, 8))
     spark.sparkContext.setLogLevel("ERROR")
-    qs = queries.all_queries()
     timings: dict[str, float] = {}
     for name in HEADLINE:
-        if name not in qs:
-            continue
         df = qs[name](spark, sf_dir)
         _materialize(df)  # warm: plan + JIT + page cache
         # best-of-2: the sandbox host shows 25%+ steal-time swings, and
@@ -212,19 +215,26 @@ def _featurize_full_geometry(spark) -> float:
 
 
 SCALE_INPUT = os.environ.get("SPARK_GRAFT_SCALE_INPUT", "/tmp/gfwspark_scale_input")
-SCALE_REP = int(os.environ.get("SPARK_GRAFT_SCALE_REP", "1024"))
+# Replication factor of the --scaling input (REP x the sf's image table).
+# Measured on a 4-CPU host at sf0.1: at rep 16 (1.6M rows) one pass took
+# 4.5-4.8 s at local[1] and 2.0-2.3 s at local[4], efficiency 0.49-0.60 —
+# fixed driver/dispatch time, not the job, set the ratio.  At rep 64
+# (6.4M rows) passes took 16.6 s / 5.4 s, efficiency 0.76; at rep 128
+# (12.8M rows) 34-37 s / 9-10 s, efficiency 0.87-1.01 over two
+# measurements, and the whole pair (two interleaved sessions) takes about
+# 6.5 minutes, plus about one to build the input the first time.
+SCALING_REP = 128
 
 
 def _ensure_scale_inputs(sf_dir: str, rep: int) -> tuple[str, str]:
     """Materialize replicated fact + annotation tables (deterministic,
     JVM-only): each replica r gets image_id suffix _r, same per-entity
-    series → featurization work × SCALE_REP with identical semantics.
+    series -> featurization work x rep with identical semantics.
 
-    Sizing rationale (measured, see BENCH/BASELINE.md): the flagship at
-    sf0.1 finishes in ~1 s where driver/task-dispatch overhead
-    dominates; at REP=1024 (102M rows) tasks are long enough that the
-    fixed ~1.5 s serial driver time amortizes.  Both tables are written
-    as many files so the scan stage parallelizes at any core count, and
+    The cache is keyed by scale factor and rep, and reused only when
+    both tables carry their `_SUCCESS` marker (a half-written table from
+    an interrupted run is regenerated).  Both tables are written as many
+    files so the scan stage parallelizes at any core count, and
     annotations are an INPUT (a single-file/derived annotation branch
     adds a serial stage to every run)."""
     import pyspark.sql.functions as F
@@ -232,11 +242,12 @@ def _ensure_scale_inputs(sf_dir: str, rep: int) -> tuple[str, str]:
     from gfwspark import tables
     from gfwspark.session import get_spark
 
-    fpath = f"{SCALE_INPUT}_rep{rep}.parquet"
-    apath = f"{SCALE_INPUT}_ann_rep{rep}.parquet"
-    if Path(fpath).exists() and Path(apath).exists():
+    sf_name = Path(sf_dir.rstrip("/")).name
+    fpath = f"{SCALE_INPUT}_{sf_name}_rep{rep}.parquet"
+    apath = f"{SCALE_INPUT}_ann_{sf_name}_rep{rep}.parquet"
+    if all(Path(p, "_SUCCESS").exists() for p in (fpath, apath)):
         return fpath, apath
-    spark = get_spark("gfwspark-scale-gen", master="local[32]", shuffle_partitions=64)
+    spark = get_spark("gfwspark-scale-gen", master=f"local[{CPUS}]", shuffle_partitions=64)
     spark.sparkContext.setLogLevel("ERROR")
     rep_col = F.explode(F.sequence(F.lit(0), F.lit(rep - 1))).alias("rep")
     img = tables.image_caption_from_events(spark, sf_dir)
@@ -260,16 +271,13 @@ def _flagship_throughput(sf_dir: str, cpus: int, rep: int) -> dict:
     """Measure flagship featurization images/sec at one parallelism
     over the replicated (compute-bound) input.
 
-    Config notes (each measured, see BENCH/BASELINE.md):
-    - AQE OFF for this job: its driver-side per-exchange replanning is
-      serial time that dominates at high core counts (0.93 vs 0.66
-      efficiency at 2→8 cores).  The plan is static and well-known, so
-      runtime replanning buys nothing here.  (AQE stays ON in the
-      engine defaults — it earns its keep on skewed ad-hoc queries.)
-    - shuffle on /dev/shm: removes disk variance from the measurement.
-    - 8×cores shuffle partitions: straggler smoothing without
-      dispatch-overhead blowup.
-    """
+    AQE is OFF for this job: its driver-side per-exchange replanning is
+    serial time that grows with the core count (measured 0.66 vs 0.93
+    efficiency at 2->8 cores, BENCH/BASELINE.md).  The plan is static
+    and well-known, so runtime replanning buys nothing here.  (AQE
+    stays ON in the engine defaults — it earns its keep on skewed
+    ad-hoc queries.)  8 x cores shuffle partitions smooth stragglers
+    without blowing up dispatch overhead."""
     from gfwspark import features
     from gfwspark.session import get_spark
 
@@ -277,10 +285,7 @@ def _flagship_throughput(sf_dir: str, cpus: int, rep: int) -> dict:
     spark = get_spark(
         f"gfwspark-scale-{cpus}", master=f"local[{cpus}]",
         shuffle_partitions=8 * cpus,
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.local.dir": "/dev/shm/spark-local",
-        },
+        extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -315,252 +320,43 @@ def _flagship_throughput(sf_dir: str, cpus: int, rep: int) -> dict:
             "images_per_sec": round(n_rows / best, 1)}
 
 
-def _w1m_throughput(
-    cpus: int, n_rows: int, window_size: int = 12800, refs: bool = False
-) -> dict:
-    """W1m block-assembled extraction throughput at one parallelism:
-    sliding_feature_windows at the reference production geometry
-    (W=12800, shift=767) over a deterministic synthetic series.  The
-    second job class for the two-cluster-size criterion — shuffle +
-    object aggregation bound, unlike the flagship's window-scan
-    profile.  `window_size` varies the byte amplification (W/shift:
-    1.3x at W=1024, 16.7x at W=12800) and `refs=True` runs the
-    zero-copy sliding_feature_window_refs form — together the two
-    knobs isolate whether the sub-0.8 scaling efficiency at production
-    geometry is the flattened-copy byte traffic (amplification-
-    dependent) or the window enumeration itself (it isn't)."""
-    import pyspark.sql.functions as F
-
-    from gfwspark import windows as W
-    from gfwspark.session import get_spark
-
-    n_ent = 512
-    spark = get_spark(
-        f"gfwspark-w1m-{cpus}", master=f"local[{cpus}]",
-        shuffle_partitions=8 * cpus,
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.local.dir": "/dev/shm/spark-local",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    df = spark.range(n_rows).select(
-        (F.col("id") % n_ent).alias("image_id"),
-        F.timestamp_seconds(
-            F.lit(1700000000) + (F.col("id") / n_ent).cast("long") * 60
-        ).alias("ts"),
-        (F.col("id") % 997).cast("double").alias("v"),
-    )
-
-    def job():
-        if refs:
-            _materialize(
-                W.sliding_feature_window_refs(df, window_size=window_size, shift=767)
-            )
-        else:
-            _materialize(
-                W.sliding_feature_windows(df, "v", window_size=window_size, shift=767)
-            )
-
-    job()  # warm
-    runs = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        job()
-        runs.append(time.perf_counter() - t0)
-    best = min(runs)
-    spark.stop()
-    return {"cpus": cpus, "rows": n_rows, "sec": round(best, 3),
-            "runs": [round(r, 3) for r in runs],
-            "images_per_sec": round(n_rows / best, 1)}
-
-
-def _w1m_atrest_throughput(cpus: int, n_rows: int, window_size: int = 12800) -> dict:
-    """Assemble-only throughput over an AT-REST stride_blocks table:
-    stride_blocks is built and written bucketed-by-entity ONCE (outside
-    the timed region — the amortized layout cost), then the timed job
-    is windows_from_stride_blocks over the bucketed read, which plans
-    with zero Exchange.  This measures the remedy the --w1m-sweep
-    points at: if the assemble stage scales cleanly once the block
-    build is at rest, the one-shot extractor's floor is confirmed as
-    the block build and the amortization story holds."""
-    import shutil
-
-    import pyspark.sql.functions as F
-
-    from gfwspark import layout
-    from gfwspark import windows as W
-    from gfwspark.session import get_spark
-
-    n_ent = 512
-    wh = f"/dev/shm/spark-wh-atrest-{cpus}"
-    shutil.rmtree(wh, ignore_errors=True)
-    spark = get_spark(
-        f"gfwspark-w1m-atrest-{cpus}", master=f"local[{cpus}]",
-        shuffle_partitions=8 * cpus,
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.local.dir": "/dev/shm/spark-local",
-            "spark.sql.warehouse.dir": wh,
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    df = spark.range(n_rows).select(
-        (F.col("id") % n_ent).alias("image_id"),
-        F.timestamp_seconds(
-            F.lit(1700000000) + (F.col("id") / n_ent).cast("long") * 60
-        ).alias("ts"),
-        (F.col("id") % 997).cast("double").alias("v"),
-    )
-    spark.sql("DROP TABLE IF EXISTS w1m_blocks")
-    # 64 buckets at every core count: same files, same read partitioning
-    layout.write_bucketed(
-        W.stride_blocks(df, "v", shift=767), "w1m_blocks", ["image_id"], 64,
-        sort_cols=["image_id", "block_id"],
-    )
-
-    def job():
-        _materialize(
-            W.windows_from_stride_blocks(
-                spark.table("w1m_blocks"), window_size=window_size, shift=767
-            )
+def run_scaling(cpus: int) -> dict:
+    """The N->4N pair with N = cpus // 4.  Each core count runs in its
+    own clean-JVM subprocess; the sessions for the two counts are
+    interleaved in time and minima taken, because the sandbox host
+    shows 25%+ steal-time swings between identical runs."""
+    lo = cpus // 4
+    if lo < 1:
+        raise ValueError(
+            f"--scaling needs at least 4 CPUs for its N->4N pair "
+            f"(N = CPUS // 4); this process has {cpus}"
         )
-
-    job()  # warm
-    runs = []
+    hi = 4 * lo
+    best: dict[int, dict] = {}
     for _ in range(2):
-        t0 = time.perf_counter()
-        job()
-        runs.append(time.perf_counter() - t0)
-    best = min(runs)
-    spark.stop()
-    shutil.rmtree(wh, ignore_errors=True)
-    return {"cpus": cpus, "rows": n_rows, "sec": round(best, 3),
-            "runs": [round(r, 3) for r in runs],
-            "images_per_sec": round(n_rows / best, 1)}
+        for n in (lo, hi):
+            out = subprocess.run(
+                [sys.executable, __file__, "--scaling-worker", str(n), str(SCALING_REP)],
+                capture_output=True, text=True, check=True,
+            )
+            r = json.loads(out.stdout.strip().splitlines()[-1])
+            runs = sorted(best.get(n, {}).get("runs", []) + r["runs"])
+            if n not in best or r["sec"] < best[n]["sec"]:
+                best[n] = r
+            best[n]["runs"] = runs
+    eff = best[hi]["images_per_sec"] / (4 * best[lo]["images_per_sec"])
+    return {"lo": best[lo], "hi": best[hi], "efficiency": round(eff, 3),
+            "rep": SCALING_REP, "sf_dir": SF_DIR}
 
 
 def main() -> None:
-    if "--scaling-worker-w1m-atrest" in sys.argv:
-        i = sys.argv.index("--scaling-worker-w1m-atrest")
-        print(json.dumps(_w1m_atrest_throughput(
-            int(sys.argv[i + 1]), int(sys.argv[i + 2]))))
-        return
-    if "--w1m-atrest-pair" in sys.argv:
-        # 51.2M rows (4x the one-shot W1m pair): at 12.8M the 8-core
-        # assemble-only job is ~1.4 s and fixed stage dispatch swamps
-        # the ratio (measured 0.708-0.781 vs 0.853 at 51.2M —
-        # BENCH/HISTORY.md r6); this default reproduces the recorded
-        # configuration
-        best: dict[int, dict] = {}
-        for _ in range(2):
-            for cpus in (2, 8):
-                out = subprocess.run(
-                    [sys.executable, __file__, "--scaling-worker-w1m-atrest",
-                     str(cpus), "51200000"],
-                    capture_output=True, text=True, check=True)
-                r = json.loads(out.stdout.strip().splitlines()[-1])
-                if cpus not in best or r["sec"] < best[cpus]["sec"]:
-                    best[cpus] = r
-        eff = best[8]["images_per_sec"] / (4 * best[2]["images_per_sec"])
-        print(json.dumps({"lo": best[2], "hi": best[8],
-                          "efficiency_2_to_8": round(eff, 3)}))
-        return
-    if "--scaling" in sys.argv:
-        # Two N->4N pairs.  Headline: 2->8 cores, where per-core memory
-        # bandwidth share stays constant like on a real N->4N EXECUTOR
-        # scale-out.  Supplementary: 8->32 cores, which additionally
-        # saturates the single box's DRAM bandwidth (a hardware ceiling
-        # a multi-node cluster does not share).  Sessions for the two
-        # core counts are interleaved in time and minima taken: the
-        # sandbox host shows 25%+ steal-time swings between identical
-        # runs.
-        sub = "--scaling-worker"
-
-        def measure_pair(lo: int, hi: int, rep: int, sessions: int, worker=None):
-            best: dict[int, dict] = {}
-            for _ in range(sessions):
-                for cpus in (lo, hi):
-                    out = subprocess.run(
-                        [sys.executable, __file__, worker or sub, str(cpus), str(rep)],
-                        capture_output=True, text=True, check=True,
-                    )
-                    r = json.loads(out.stdout.strip().splitlines()[-1])
-                    if cpus not in best or r["sec"] < best[cpus]["sec"]:
-                        prev = best.get(cpus, {}).get("runs", [])
-                        r["runs"] = sorted(prev + r["runs"])
-                        best[cpus] = r
-                    else:
-                        best[cpus]["runs"] = sorted(best[cpus]["runs"] + r["runs"])
-            eff = best[hi]["images_per_sec"] / (4 * best[lo]["images_per_sec"])
-            return {"lo": best[lo], "hi": best[hi], "efficiency": round(eff, 3)}
-
-        pair_2_8 = measure_pair(2, 8, rep=256, sessions=2)
-        pair_8_32 = measure_pair(8, 32, rep=1024, sessions=2)
-        # second job class: W1m block-assembled extraction.  12.8M rows
-        # over 512 entities: after the split-ts assemble cut runtimes
-        # ~40%, 3.2M rows left the 8-core run under 2 s where fixed
-        # dispatch dominates; 512 entities (not 64) keeps per-partition
-        # entity counts balanced at 64 shuffle partitions — the
-        # production regime is entities >> cores.
-        pair_w1m = measure_pair(
-            2, 8, rep=12_800_000, sessions=2, worker="--scaling-worker-w1m"
-        )
-        report = {
-            "pair_2_to_8_cores": pair_2_8,
-            "pair_8_to_32_cores": pair_8_32,
-            "pair_w1m_2_to_8_cores": pair_w1m,
-            "scaling_efficiency_N_to_4N": pair_2_8["efficiency"],
-            "sf_dir": SF_DIR,
-        }
-        print(json.dumps(report))
-        _write_baseline_md(report)
-        return
-    if "--scaling-worker-w1m" in sys.argv:
-        i = sys.argv.index("--scaling-worker-w1m")
-        cpus, n_rows = int(sys.argv[i + 1]), int(sys.argv[i + 2])
-        tail = sys.argv[i + 3 :]
-        wsz = int(tail[0]) if tail and tail[0].isdigit() else 12800
-        print(json.dumps(_w1m_throughput(cpus, n_rows, wsz, refs="refs" in tail)))
-        return
-    if "--w1m-sweep" in sys.argv:
-        # Amplification isolation (r5 verdict item 6): the SAME 12.8M-row
-        # input and enumeration at three byte amplifications (W/767) plus
-        # the zero-copy refs form; if efficiency recovers as
-        # amplification shrinks, the W=12800 ceiling is the flattened
-        # copies' DRAM traffic, measured rather than argued.
-        jobs = [
-            ("W1024", 1024, False), ("W3200", 3200, False),
-            ("W12800", 12800, False), ("W12800_refs", 12800, True),
-        ]
-        best: dict[tuple, dict] = {}
-        for _ in range(2):  # interleaved sessions, minima
-            for name, wsz, refs in jobs:
-                for cpus in (2, 8):
-                    argv = [sys.executable, __file__, "--scaling-worker-w1m",
-                            str(cpus), "12800000", str(wsz)] + (
-                                ["refs"] if refs else [])
-                    out = subprocess.run(
-                        argv, capture_output=True, text=True, check=True)
-                    r = json.loads(out.stdout.strip().splitlines()[-1])
-                    k = (name, cpus)
-                    if k not in best or r["sec"] < best[k]["sec"]:
-                        best[k] = r
-        report = {}
-        for name, wsz, refs in jobs:
-            lo, hi = best[(name, 2)], best[(name, 8)]
-            report[name] = {
-                "amplification": round(wsz / 767, 2),
-                "sec_2c": lo["sec"], "sec_8c": hi["sec"],
-                "efficiency_2_to_8": round(
-                    hi["images_per_sec"] / (4 * lo["images_per_sec"]), 3),
-            }
-        print(json.dumps(report))
-        return
     if "--scaling-worker" in sys.argv:
         i = sys.argv.index("--scaling-worker")
         cpus, rep = int(sys.argv[i + 1]), int(sys.argv[i + 2])
         print(json.dumps(_flagship_throughput(SF_DIR, cpus, rep)))
+        return
+    if "--scaling" in sys.argv:
+        print(json.dumps(run_scaling(CPUS)))
         return
 
     timings = run_headline(SF_DIR, CPUS)
@@ -576,156 +372,6 @@ def main() -> None:
             }
         )
     )
-
-
-def _record_scaling_run(report: dict) -> list[float]:
-    """Append this run's headline efficiency to BENCH/scaling_runs.json
-    and return all recorded efficiencies (seeded with rounds 1-3 from
-    BENCH/HISTORY.md) — the honest spread the headline reports as
-    median + bracket instead of cherry-picking the latest run."""
-    p = Path(__file__).resolve().parent / "BENCH" / "scaling_runs.json"
-    runs = json.loads(p.read_text()) if p.exists() else [
-        0.877, 0.902, 0.921, 0.859, 0.806  # r1, r2, r3 runs 1-3
-    ]
-    runs.append(report["pair_2_to_8_cores"]["efficiency"])
-    p.write_text(json.dumps(runs))
-    return runs
-
-
-def _write_baseline_md(report: dict) -> None:
-    import statistics
-
-    p = Path(__file__).resolve().parent / "BENCH" / "BASELINE.md"
-    p.parent.mkdir(exist_ok=True)
-    effs = _record_scaling_run(report)
-
-    def row(r):
-        return (f"| local[{r['cpus']}] | {r['rows']:,} | {r['sec']} "
-                f"| {r['runs']} | {r['images_per_sec']:,} |")
-
-    a, b = report["pair_2_to_8_cores"], report["pair_8_to_32_cores"]
-    w = report.get("pair_w1m_2_to_8_cores")
-    p.write_text(f"""# BENCH baseline — measured (north rule evidence)
-
-Flagship featurization job (per-row derived features + backward as-of
-label join + sliding window aggregates + gap sessionization) over
-deterministic replications of the sf0.1 events-derived image table
-(annotations replicated to match), noop sink.  The two-cluster-size
-criterion is evidenced by the identical job + input at two parallelism
-levels; sessions for the two levels are interleaved in time and minima
-taken (the sandbox host shows 25%+ steal-time swings between identical
-runs).
-
-## Headline pair: N=2 -> 4N=8 cores (25.6M rows)
-
-| parallelism | rows | best s | all runs (s) | images/sec |
-|---|---|---|---|---|
-{row(a['lo'])}
-{row(a['hi'])}
-
-**Scaling efficiency (N -> 4N): this run {a['efficiency']}; across
-all {len(effs)} recorded runs median {round(statistics.median(effs), 3)},
-bracket {min(effs)}-{max(effs)}** (BENCH/scaling_runs.json, tabulated
-per round in BENCH/HISTORY.md; runs span rounds — the flagship JOB
-code is stable but engine code evolves between rounds, and runs within
-one round are identical-code) — measured as throughput(4N) / (4 x
-throughput(N)); target >= 0.8 per BASELINE.json.  Single-run
-ratio-of-minima is host-sensitive (25%+ steal-time swings), so the
-median-with-spread is the honest headline; the tables in this file
-hold the latest run's raw timings.
-This pair is the faithful proxy for N -> 4N *executors*: per-core
-memory-bandwidth share stays constant, as it does when a real cluster
-adds nodes.
-
-## Supplementary pair: 8 -> 32 cores (102.4M rows)
-
-| parallelism | rows | best s | all runs (s) | images/sec |
-|---|---|---|---|---|
-{row(b['lo'])}
-{row(b['hi'])}
-
-Efficiency {b['efficiency']}: at 32 cores the single box's DRAM
-bandwidth saturates (the job is a streaming sort/window over ~50 GB of
-memory traffic).  A multi-node 4N-executor cluster adds memory channels
-with each node and does not share this ceiling; peak single-box
-throughput here is {b['hi']['images_per_sec']:,} images/sec.
-
-## Second job class: W1m materialized extraction, 2 -> 8 cores
-
-`sliding_feature_windows` (block-assembled, split-ts assemble: the
-per-element timestamps stay out of the sliced/flattened block copies;
-window-endpoint timestamps come from <=2 unmasked per-block ts arrays
-via conditional element_at) at the reference production geometry
-W=12800 / shift=767 over 12.8M synthetic rows x 512 entities —
-shuffle + object-aggregation bound, a different profile from the
-flagship's window scan.  The split-ts change cut wall time ~40% at
-both core counts (8-core throughput 1.67M -> ~3.5M images/sec):
-
-| parallelism | rows | best s | all runs (s) | images/sec |
-|---|---|---|---|---|
-{row(w['lo']) if w else ''}
-{row(w['hi']) if w else ''}
-
-**W1m scaling efficiency (N -> 4N): {w['efficiency'] if w else 'n/a'}.**
-
-Sub-0.8 draws of this pair were attributed through r5 to the W/shift
-(~16.7x at production geometry) flattened-copy byte amplification.
-The round-6 amplification sweep (`bench.py --w1m-sweep`, table in
-BENCH/HISTORY.md) MEASURED that attribution and refuted it:
-efficiency RISES with W (0.678 at W=1024 / ampl 1.3x -> 0.863 at
-W=12800 / ampl 16.7x — production geometry CLEARS the 0.8 target in
-the controlled sweep), 8-core wall time is flat across W (~4.3-4.4 s),
-and the zero-copy refs form (sliding_feature_window_refs: same
-enumeration, no amplified value bytes, 1.3-1.7x faster absolute)
-scales at 0.674.  The scaling floor is therefore the W-INDEPENDENT
-block-build stage (row_number + sort + collect_list object aggregation
-over every input row — its cost does not shrink per-core as cleanly),
-while the W-proportional assemble work parallelizes near-linearly and
-lifts the blended efficiency as W grows.  At 100 TB the remedy is
-layout, not window geometry: build stride_blocks once at rest
-(bucketed by entity) and amortize the block-build floor across every
-window job that reads it.  The remedy is itself measured
-(`bench.py --w1m-atrest-pair`, BENCH/HISTORY.md): assemble-only over
-the at-rest bucketed blocks (zero-Exchange plan) scales at 0.853 at
-51.2M rows and runs 2.2x the one-shot extractor's absolute 8-core
-throughput.
-
-## How the job was made scale-clean (each step measured)
-
-1. **One fact shuffle.** The as-of union-merge runs first; all window
-   stages reuse its hashpartitioning (was 2 full-data exchanges).
-2. **Map-side payload reduction.** caption -> token count before the
-   exchange; the shuffle carries only (entity, ts, ids, small ints).
-3. **Annotations are an input table** (multi-file parquet).  Deriving
-   them inside the job from a single-file source added a serial stage
-   to every run (0.84 -> 0.66 efficiency at 2->8 cores).
-4. **AQE off for this fixed plan.**  AQE's driver-side per-exchange
-   replanning is serial: 0.66 -> 0.93 efficiency at 2->8 cores once
-   disabled.  (AQE stays on in engine defaults for ad-hoc/skewed work.)
-5. **Input large enough to amortize dispatch.**  ~1.5 s of serial
-   driver/task-dispatch time per run caps short jobs near 0.5
-   efficiency at 32 cores; the inputs above amortize it.
-
-## Hot-entity kernel micro-bench (round 2)
-
-`chunked_time_range_agg`'s per-chunk kernel was vectorized (round-1
-verdict item 4): floats go through pandas' Cython offset-rolling,
-int64 (perceptual hashes — exact, no float64 round-trip) through an
-O(n) batched two-stack sweep (`windows._monotone_window_agg`).
-Measured on a single 10^6-row hot entity (~1 event/sec, 30-min
-trailing window, mean 1,801 rows/window):
-
-| kernel | time (s) | speedup vs old per-row loop |
-|---|---|---|
-| old per-row Python loop | 8.35 | 1x |
-| pandas offset-rolling (float64) | 0.38 | 21.8x |
-| two-stack sweep (int64, exact) | 0.05 | 182x |
-
-Both paths verified exact against brute-force windows on 200 random
-positions, and against `RANGE BETWEEN` in
-tests/test_engine_golden.py (including duplicate-timestamp peers,
-which the old kernel mishandled).
-""")
 
 
 if __name__ == "__main__":

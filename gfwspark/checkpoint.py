@@ -55,14 +55,17 @@ def bucket_of(entity_col: str, n_buckets: int):
 _LAYOUT_VERSION = 2
 
 
-def input_fingerprint(df: DataFrame, entity: str, ts: str, n_buckets: int = 0) -> str:
+def input_fingerprint(df: DataFrame, n_buckets: int = 0) -> str:
     """Cheap order-insensitive fingerprint of the input: row count +
-    xor-ish sum of row hashes, PLUS the bucket layout — changing
-    n_buckets or the bucket mapping itself must invalidate old
-    manifests (a bucket id means nothing across layouts)."""
+    sum of per-row xxhash64 over EVERY column (each term pmod 2^31-1,
+    so the long sum cannot overflow below ~4e9 rows), PLUS the bucket
+    layout.  Hashing only the (entity, ts) key would let a payload-only
+    change resume stale buckets; changing n_buckets or the bucket
+    mapping itself must invalidate old manifests too (a bucket id means
+    nothing across layouts)."""
     agg = df.select(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.crc32(F.concat_ws("|", F.col(entity), F.col(ts).cast("string")))).alias("h"),
+        F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(2147483647))).alias("h"),
     ).first()
     return f"n={agg['n']},h={agg['h']},b={n_buckets},v={_LAYOUT_VERSION}"
 
@@ -124,7 +127,7 @@ def run_resumable(
     unit of redo after a crash, exactly like the reference re-runs only
     missing vessel files (run_inference.py:44-48 skips by path).
     """
-    fp = input_fingerprint(df, entity, ts, n_buckets)
+    fp = input_fingerprint(df, n_buckets)
     done = completed_buckets(output_path, fp)
     mdir = _manifest_dir(output_path)
     mdir.mkdir(parents=True, exist_ok=True)

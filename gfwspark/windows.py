@@ -257,7 +257,7 @@ def windows_from_stride_blocks(
     entity, block_id, values, ts_arr — what stride_blocks() emits).
 
     At rest this skips the per-row block-build stage entirely — the
-    100 TB shape the --w1m-sweep measurement points at: the sweep
+    100 TB shape the W1m sweep (BENCH/HISTORY.md) points at: the sweep
     showed the scaling floor of the one-shot extractor is the
     W-INDEPENDENT block build (row_number + collect_list over every
     input row), not the W/shift assemble amplification.  Persist

@@ -61,6 +61,32 @@ def test_changed_input_invalidates_checkpoints(spark, tmp_path):
     assert summary["skipped"] == []  # fingerprint changed → full recompute
 
 
+def test_changed_payload_invalidates_checkpoints(spark, tmp_path):
+    # same (entity, ts) keys, different payload: a key-only fingerprint
+    # would resume both buckets and serve stale features
+    import pyspark.sql.functions as F
+
+    df1 = tables.synthesize_image_caption(spark, n_entities=8, rows_per_entity=6)
+    df2 = df1.withColumn(
+        "phash", F.col("phash").bitwiseXOR(F.pmod(F.xxhash64("ts"), F.lit(256)))
+    )
+    out = str(tmp_path / "payload")
+    checkpoint.run_resumable(df1, _transform, out, n_buckets=2)
+    summary = checkpoint.run_resumable(df2, _transform, out, n_buckets=2)
+    assert summary["skipped"] == []
+
+    cols = ["image_id", "ts", "phash_hamming"]
+    got = (
+        checkpoint.read_result(spark, out).select(*cols).toPandas()
+        .sort_values(["image_id", "ts"]).reset_index(drop=True)
+    )
+    want = (
+        _transform(df2).select(*cols).toPandas()
+        .sort_values(["image_id", "ts"]).reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, want)
+
+
 def test_snapshot_log_append_only(spark, tmp_path):
     df = tables.synthesize_image_caption(spark, n_entities=8, rows_per_entity=6)
     out = str(tmp_path / "snap")
