@@ -32,7 +32,7 @@ import time
 from pathlib import Path
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 
 import gfwspark
 
@@ -63,9 +63,12 @@ def input_fingerprint(df: DataFrame, n_buckets: int = 0) -> str:
     change resume stale buckets; changing n_buckets or the bucket
     mapping itself must invalidate old manifests too (a bucket id means
     nothing across layouts)."""
+    # each name back-quoted: a bare name is parsed as a column path,
+    # so a column called "score.v1" would not resolve
+    cols = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
     agg = df.select(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(2147483647))).alias("h"),
+        F.sum(F.pmod(F.xxhash64(*cols), F.lit(2147483647))).alias("h"),
     ).first()
     return f"n={agg['n']},h={agg['h']},b={n_buckets},v={_LAYOUT_VERSION}"
 
@@ -131,26 +134,25 @@ def run_resumable(
     done = completed_buckets(output_path, fp)
     mdir = _manifest_dir(output_path)
     mdir.mkdir(parents=True, exist_ok=True)
-    spark = df.sparkSession
-
     bucketed = df.withColumn("_bucket", bucket_of(entity, n_buckets))
     skipped, completed = sorted(done), []
     for b in range(n_buckets):
         if b in done:
             continue
         t0 = time.time()
+        # lineage stats ride the bucket's own write, observed at the top
+        # of the written plan (the result stage counts a retried task
+        # once): the manifest describes exactly the rows on disk
+        obs = Observation()
         part = transform(bucketed.filter(F.col("_bucket") == b).drop("_bucket"))
         out_dir = f"{output_path}/fp={_fp_tag(fp)}/part={b}"
-        part.write.mode("overwrite").parquet(out_dir)
-        # lineage stats come from the parquet just WRITTEN (one cheap
-        # re-read of this bucket's files), not from re-executing the
-        # transform — the manifest always describes the bytes on disk,
-        # even for a nondeterministic transform, and the job runs 1x.
-        stats = spark.read.parquet(out_dir).agg(
+        part.observe(
+            obs,
             F.count(F.lit(1)).alias("rows"),
             F.min(ts).alias("min_ts"),
             F.max(ts).alias("max_ts"),
-        ).first()
+        ).write.mode("overwrite").parquet(out_dir)
+        stats = obs.get
         manifest = {
             "bucket": b,
             "status": "ok",

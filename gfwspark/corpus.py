@@ -38,10 +38,11 @@ stage are cited in each operator's own docstring.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 
 from gfwspark import dedup, sources, text
 from gfwspark.text import ensure_explode_parallelism as _ensure_parallelism
+from gfwspark.util import observed_rows
 
 #: (stage_idx, stage_name) in pipeline order — the audit vocabulary.
 STAGES: tuple[tuple[int, str], ...] = (
@@ -55,7 +56,7 @@ STAGES: tuple[tuple[int, str], ...] = (
 )
 
 
-def _stage_frames(
+def _pipeline(
     docs: DataFrame,
     benchmark: DataFrame,
     id_col: str,
@@ -70,16 +71,17 @@ def _stage_frames(
     embargo_s: int,
     token_budget: int,
     materialize_survivors: bool,
-    materialize_stages: bool = False,
-) -> list[DataFrame]:
-    """The pipeline, one frame per completed stage (len == 7, indexed
-    by STAGES order).  ``materialize_stages`` additionally
-    localCheckpoints the per-stage outputs (the gate block serves 1-2;
-    3-6 get one each; 7 reuses 6's block) so an audit that counts
-    every stage touches each subtree exactly once and each stage
-    builds from its predecessor's materialized blocks — the production
-    audit configuration; without it the stages stay one lazy plan."""
-    frames: list[DataFrame] = []
+) -> tuple[DataFrame, list[Observation]]:
+    """The pipeline's final frame, beside 8 row-count Observations (the
+    input, then each stage in STAGES order) inline in the chain: the
+    first job to run a stage's rows, a survivor checkpoint or the final
+    write, counts them."""
+    obs: list[Observation] = []
+
+    def _counted(d: DataFrame) -> DataFrame:
+        obs.append(Observation())
+        return d.observe(obs[-1], F.count(F.lit(1)).alias("n"))
+
     # 1-2: row-local quality + repetition gates (no shuffle beyond the
     # explode-parallelism repartition), both gate columns computed in
     # one projection and then filtered in stage order.
@@ -96,28 +98,24 @@ def _stage_frames(
     # too, but one checkpoint pass beats two; the audit's stage-1 and
     # stage-2 counts are two filters over the same block.  Lazy
     # (default) builds keep the one-plan contract for oracle replay.
-    d = text.with_repetition_stats(
-        text.with_quality_score(_ensure_parallelism(docs), text_col),
-        text_col,
-        ns=(2,),
-    )
+    # observed above with_repetition_stats: its partition-count probe
+    # caches by plan, which an Observation's random name would always miss
+    d = text.with_quality_score(_ensure_parallelism(docs), text_col)
+    d = _counted(text.with_repetition_stats(d, text_col, ns=(2,)))
     if materialize_survivors:
         d = d.localCheckpoint(eager=True)
-    d = d.filter(F.col("quality") >= quality_min)
-    frames.append(d)
-    d = d.filter(F.col("dup_2gram_frac") <= max_dup_2gram)
-    frames.append(d)
+    d = _counted(d.filter(F.col("quality") >= quality_min))
+    d = _counted(d.filter(F.col("dup_2gram_frac") <= max_dup_2gram))
     # 3: exact dedup — keep the smallest id per content hash
     w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
-    d = (
+    d = _counted(
         d.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
     if materialize_survivors:
-        # stage-3 output feeds 4 branches (and the audit's n3 count)
+        # stage-3 output feeds 4 branches
         d = d.localCheckpoint(eager=True)
-    frames.append(d)
     # 4: MinHash-LSH near dedup (exact-Jaccard verified) — drop doc_b.
     # Staged rather than via dedup.minhash_near_dups so the shingle
     # frame can share the materialization point: both consumers
@@ -133,25 +131,17 @@ def _stage_frames(
     cand = dedup.lsh_candidates(sig, id_col=id_col)
     pairs = dedup.jaccard_verify(cand, sh, id_col=id_col, threshold=near_dup_threshold)
     drop_b = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    d = d.join(drop_b, id_col, "left_anti")
-    if materialize_stages:
-        d = d.localCheckpoint(eager=True)
-    frames.append(d)
+    d = _counted(d.join(drop_b, id_col, "left_anti"))
     # 5: benchmark decontamination — drop any doc sharing an n-gram
     contaminated = text.ngram_decontaminate(
         d, benchmark, n=decontam_n, id_col=id_col, text_col=text_col
     ).select(id_col)
-    d = d.join(contaminated, id_col, "left_anti")
-    if materialize_stages:
-        d = d.localCheckpoint(eager=True)
-    frames.append(d)
+    d = _counted(d.join(contaminated, id_col, "left_anti"))
     # 6: leakage-free temporal split (drops the embargo band)
     d = sources.temporal_split_embargo(
         d, horizon_s=horizon_s, embargo_s=embargo_s, entity=entity, ts=ts
     )
-    if materialize_stages:
-        d = d.localCheckpoint(eager=True)
-    frames.append(d)
+    d = _counted(d)
     # 7: token counting + contiguous budget packing per (split, entity)
     d = d.withColumn("n_tokens", F.size(text.tokens_col(text_col)).cast("long"))
     d = sources.pack_token_budget_batches(
@@ -161,8 +151,7 @@ def _stage_frames(
         order_cols=[id_col],
         partition_col=["split", entity],
     )
-    frames.append(d)
-    return frames
+    return _counted(d), obs
 
 
 def prepare_corpus(
@@ -200,12 +189,12 @@ def prepare_corpus(
     materialization buys back three full recomputes; the right trade
     on a production run, kept opt-out so single-action oracle replays
     stay one lazy plan)."""
-    frames = _stage_frames(
+    out, _ = _pipeline(
         docs, benchmark, id_col, text_col, entity, ts, quality_min,
         max_dup_2gram, near_dup_threshold, decontam_n, horizon_s,
         embargo_s, token_budget, materialize_survivors,
     )
-    return frames[-1].select(
+    return out.select(
         id_col,
         entity,
         "quality",
@@ -239,42 +228,19 @@ def prepare_corpus_audit(
     stdout.  Stage 7 (packing) drops nothing by construction; its row
     makes that auditable instead of assumed.
 
-    Counting strategy: each stage frame is localCheckpointed
-    (materialize_stages), so the 8 counts touch each subtree exactly
-    once and downstream stages read their predecessor's materialized
-    blocks — the audit costs one extra pass over each stage's
-    SURVIVORS, not a recompute of the pipeline per count.  The counts
-    are folded into a single 1-row frame (7 crossJoins of 1-row
-    aggregates, then checkpointed — bounded at one row) and exploded
-    into the per-stage rows, keeping the whole audit one distributed
-    plan with no driver-side .count() loop."""
-    frames = _stage_frames(
+    Counting strategy: the stage Observations ride the pipeline's own
+    jobs — the survivor checkpoints, then one noop write of the stage-7
+    frame — so counting adds no job and no re-scan of any stage.  The
+    7 rows are then built locally: the audit runs the pipeline when
+    called and returns a frame over those rows."""
+    out, obs = _pipeline(
         docs, benchmark, id_col, text_col, entity, ts, quality_min,
         max_dup_2gram, near_dup_threshold, decontam_n, horizon_s,
         embargo_s, token_budget, materialize_survivors=True,
-        materialize_stages=True,
     )
-
-    def _cnt(df: DataFrame, alias: str) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).cast("long").alias(alias))
-
-    row = _cnt(docs, "n0")
-    for i, f in enumerate(frames, start=1):
-        row = row.crossJoin(_cnt(f, f"n{i}"))
-    # one row; eager so the 7 per-stage selects below don't each
-    # re-evaluate the crossJoin-of-aggregates subtree
-    row = row.localCheckpoint(eager=True)
-    parts = [
-        row.select(
-            F.lit(idx).cast("int").alias("stage_idx"),
-            F.lit(name).alias("stage"),
-            F.col(f"n{idx - 1}").alias("rows_in"),
-            F.col(f"n{idx}").alias("rows_out"),
-            (F.col(f"n{idx - 1}") - F.col(f"n{idx}")).alias("dropped"),
-        )
-        for idx, name in STAGES
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    out.write.format("noop").mode("overwrite").save()
+    n = [observed_rows(o) for o in obs]
+    return docs.sparkSession.createDataFrame(
+        [(idx, name, n[idx - 1], n[idx], n[idx - 1] - n[idx]) for idx, name in STAGES],
+        "stage_idx int, stage string, rows_in long, rows_out long, dropped long",
+    )

@@ -1498,10 +1498,7 @@ def q_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="gfw_upsert_rt_")
     shutil.rmtree(path)  # the sink owns the directory lifecycle
     try:
-        sources.upsert_partitioned(
-            spark, ev, path, keys=["event_id"], entity="user_id",
-            collect_stats=False,
-        )
+        sources.upsert_partitioned(spark, ev, path, keys=["event_id"], entity="user_id")
         updates = ev.filter(F.col("event_id") % 10 == 0).withColumn(
             "val", F.col("val") + 1000.0
         )
@@ -1512,7 +1509,7 @@ def q_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sources.upsert_partitioned(
             spark, updates.unionByName(inserts), path, keys=["event_id"],
-            entity="user_id", collect_stats=False,
+            entity="user_id",
         )
         out = spark.read.parquet(path).select("event_id", "user_id", "val")
         # the scratch table is deleted below; materialize before return

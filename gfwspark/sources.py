@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 # entity metadata CSV: the char_info/det_info analog
 # (classification/metadata_test.py:25-41: id,label,length,split,…)
@@ -393,7 +393,6 @@ def upsert_partitioned(
     keys: list[str],
     entity: str = "image_id",
     n_buckets: int = 16,
-    collect_stats: bool = True,
     allow_schema_evolution: bool = False,
     extra_meta: dict | None = None,
 ) -> dict:
@@ -416,7 +415,9 @@ def upsert_partitioned(
     Spark refuses to overwrite a path it is concurrently reading
     (self-overwrite); the materialization is bounded by the touched
     buckets, not the table.  Returns {touched_buckets, upserted,
-    deleted} counts for the caller's lineage record.
+    deleted} for the caller's lineage record: the batch's rows and the
+    stored rows it replaced, observed on that one checkpoint job (a
+    retried shuffle stage may count twice: lineage, not results).
 
     Concurrency contract: single writer (like any filesystem parquet
     table); a real Iceberg catalog upgrades this to optimistic
@@ -430,8 +431,10 @@ def upsert_partitioned(
     import os
 
     from gfwspark.checkpoint import bucket_of
+    from gfwspark.util import observed_rows
 
-    meta = _read_table_meta(path) if os.path.exists(path) else None
+    existed = os.path.exists(path)
+    meta = _read_table_meta(path) if existed else None
     if meta is not None and meta.get("n_buckets") not in (None, n_buckets):
         raise ValueError(
             f"upsert_partitioned: table at {path} was built with "
@@ -441,9 +444,9 @@ def upsert_partitioned(
         )
     b = batch.withColumn("_bucket", bucket_of(entity, n_buckets))
     touched = sorted(r["_bucket"] for r in b.select("_bucket").distinct().collect())
-    n_up = b.count()
-    deleted: int | None = 0
-    if os.path.exists(path):
+    n_rows = F.count(F.lit(1)).alias("n")
+    o_up, o_existing, o_keep = Observation(), Observation(), Observation()
+    if existed:
         from functools import reduce
         from operator import and_
 
@@ -461,7 +464,7 @@ def upsert_partitioned(
         # manifest and the cheap path resumes.
         existing = read_table(
             spark, path, force_merge=_read_schema_manifest(path) is None
-        ).filter(F.col("_bucket").isin(touched))
+        ).filter(F.col("_bucket").isin(touched)).observe(o_existing, n_rows)
         new_cols = set(b.columns) - set(existing.columns)
         lost_cols = set(existing.columns) - set(b.columns) - {"_bucket"}
         if (new_cols or lost_cols) and not allow_schema_evolution:
@@ -476,18 +479,14 @@ def upsert_partitioned(
         # eqNullSafe: MERGE key matching must treat NULL = NULL as a
         # match, or null-keyed rows duplicate on every re-upsert
         cond = reduce(and_, [existing[k].eqNullSafe(bk[k]) for k in keys])
-        keep = existing.join(bk, cond, "left_anti")
-        if collect_stats:
-            # one semi-join count of the touched buckets, not the
-            # count(existing) - count(keep) pair (two full rescans)
-            deleted = existing.join(bk, cond, "left_semi").count()
-        else:
-            deleted = None
-        out = keep.unionByName(b, allowMissingColumns=allow_schema_evolution)
+        keep = existing.join(bk, cond, "left_anti").observe(o_keep, n_rows)
+        out = keep.unionByName(
+            b.observe(o_up, n_rows), allowMissingColumns=allow_schema_evolution
+        )
     else:
-        out = b
+        out = b.observe(o_up, n_rows)
     out = out.localCheckpoint(eager=True)
-    if os.path.exists(path):
+    if existed:
         # manifest BEFORE the data write: a crash mid-write leaves
         # mixed-schema buckets, and the already-updated manifest makes
         # read_table take the mergeSchema path (a manifest column not
@@ -510,7 +509,9 @@ def upsert_partitioned(
     _write_schema_manifest(
         path, out.columns, {"n_buckets": n_buckets, **(extra_meta or {})}
     )
-    return {"touched_buckets": touched, "upserted": n_up, "deleted": deleted}
+    deleted = observed_rows(o_existing) - observed_rows(o_keep) if existed else 0
+    upserted = observed_rows(o_up)
+    return {"touched_buckets": touched, "upserted": upserted, "deleted": deleted}
 
 
 def recover_rewrite(path: str, suffix: str) -> tuple[str, str]:

@@ -268,8 +268,7 @@ def stream_upsert_sink(
     replay after a crash re-runs the last uncommitted batch, and the
     upsert's key-match semantics make the replay a no-op (same keys,
     same values) — exactly-once TABLE STATE from at-least-once batch
-    delivery.  Stats collection is off (no deleted-count scan per
-    batch); single-writer contract as for the batch sink.
+    delivery.  Single-writer contract as for the batch sink.
 
     ``update_entity_stats=True`` additionally folds each batch into
     the table's persisted <path>/_entity_stats profile
@@ -290,7 +289,7 @@ def stream_upsert_sink(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         sources.upsert_partitioned(
             batch_df.sparkSession, batch_df, path, keys=keys,
-            entity=entity, n_buckets=n_buckets, collect_stats=False,
+            entity=entity, n_buckets=n_buckets,
         )
         if update_entity_stats:
             sp = path.rstrip("/") + "/_entity_stats"

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, Window
+from pyspark.sql import Column, Observation, Window
 from pyspark.sql.window import WindowSpec
 
 
@@ -47,3 +47,12 @@ def round_half_up(x: float, nd: int = 6) -> float:
 
     q = Decimal(1).scaleb(-nd)
     return float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
+
+
+def observed_rows(obs: Observation) -> int:
+    """``n`` of an Observation of ``count(1) AS n`` after a job ran it.
+    Adaptive execution drops a subtree it proved empty from the final
+    plan and Spark completes its Observation with an empty row (on which
+    ``get`` raises); callers observe only frames dropped only when
+    empty, so that reads as 0 rows."""
+    return obs.get["n"] if obs._jo.getRow().size() else 0

@@ -592,7 +592,7 @@ def merge_append_into_blocks_table(
         changed = stride_blocks(batch, feature_col, shift, entity=entity, ts=ts)
     return sources.upsert_partitioned(
         spark, changed, path, keys=[entity, "block_id"],
-        entity=entity, n_buckets=n_buckets, collect_stats=False,
+        entity=entity, n_buckets=n_buckets,
         extra_meta={"shift": shift, "feature_cols": feature_cols},
     )
 

@@ -75,7 +75,7 @@ def main() -> None:
         )
         r = sources.upsert_partitioned(
             spark, changed, args.blocks, keys=[args.entity, "block_id"],
-            entity=args.entity, n_buckets=args.buckets, collect_stats=False,
+            entity=args.entity, n_buckets=args.buckets,
             # record the layout contract so a later --mode append with a
             # different --shift / --feature-col raises instead of
             # silently corrupting block ids (manifest-validated in

@@ -42,14 +42,26 @@ def test_resume_after_crash_identical_output(spark, tmp_path):
 
 
 def test_manifests_carry_lineage(spark, tmp_path):
-    df = tables.synthesize_image_caption(spark, n_entities=8, rows_per_entity=6)
+    """Each manifest's rows / min_ts / max_ts equal an aggregate over
+    its bucket's parquet, empty buckets included (3 entities, 8
+    buckets); a dotted column name is fingerprinted as one column."""
+    import pyspark.sql.functions as F
+
+    df = tables.synthesize_image_caption(spark, n_entities=3, rows_per_entity=6)
+    df = df.withColumnRenamed("phash", "score.v1")
     out = str(tmp_path / "m")
-    checkpoint.run_resumable(df, _transform, out, n_buckets=2)
-    manifests = sorted((tmp_path / "m" / "_manifests").glob("bucket_*.json"))
-    assert len(manifests) == 2
-    m = json.loads(manifests[0].read_text())
-    for key in ("input_fingerprint", "rows", "min_ts", "max_ts", "wall_s", "engine_version"):
-        assert key in m
+    checkpoint.run_resumable(df, lambda d: d, out, n_buckets=8)
+    paths = (tmp_path / "m" / "_manifests").glob("bucket_*.json")
+    manifests = [json.loads(p.read_text()) for p in paths]
+    assert len(manifests) == 8 and sum(m["rows"] == 0 for m in manifests) >= 5
+    for m in manifests:
+        assert {"input_fingerprint", "wall_s", "engine_version"} <= set(m)
+        got = spark.read.parquet(m["output"]).agg(
+            F.count(F.lit(1)), F.min("ts"), F.max("ts")
+        ).first()
+        assert (m["rows"], m["min_ts"], m["max_ts"]) == (
+            got[0], str(got[1]), str(got[2])
+        ), m
 
 
 def test_changed_input_invalidates_checkpoints(spark, tmp_path):

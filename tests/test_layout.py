@@ -397,6 +397,32 @@ def test_blocks_manifest_records_and_validates_shift(spark, tmp_path):
     )
 
 
+def test_merge_append_counts_extended_tail_blocks(spark, tmp_path):
+    """Hand count at shift 4: `upserted` is every block row the append
+    changed, `deleted` the stored partial tail blocks it extended.  The
+    table's tails: e0 2 rows, e1 3 rows, e3 a full block.  Extended: e0
+    block 2, e1 block 1; new: e0 block 3, e2 block 0, e3 block 2."""
+    import pyspark.sql.functions as F
+
+    from gfwspark import windows
+
+    def rows(spec):  # {entity: (first second, n rows)}
+        return spark.createDataFrame(
+            [(e, t0 + i, float(i)) for e, (t0, n) in spec.items() for i in range(n)],
+            "image_id string, t long, v double",
+        ).select("image_id", F.timestamp_seconds("t").alias("ts"), "v")
+
+    tbl = str(tmp_path / "blocks")
+    windows.merge_append_into_blocks_table(
+        spark, rows({"e0": (0, 10), "e1": (0, 7), "e3": (0, 8)}), tbl, "v", shift=4
+    )
+    r = windows.merge_append_into_blocks_table(
+        spark, rows({"e0": (99, 3), "e1": (99, 1), "e2": (99, 2), "e3": (99, 1)}),
+        tbl, "v", shift=4,
+    )
+    assert (r["upserted"], r["deleted"]) == (5, 2)
+
+
 def test_rewrites_preserve_entity_stats_sidecar(spark, tmp_path):
     """r7 (ADVICE): compact_table and zorder_table must carry the
     _entity_stats sidecar through their tmp/swap rewrite (its content

@@ -227,6 +227,12 @@ def test_upsert_partitioned_merge_semantics(spark, tmp_path):
     for k, v in untouched_same.items():
         assert after[k] == v, f"untouched partition {k} was rewritten"
     assert len(untouched_same) > 0  # the pruning claim is non-vacuous
+    # an empty batch (a replayed micro-batch) merges nothing
+    r2 = sources.upsert_partitioned(
+        spark, batch.limit(0), path, keys=["image_id", "seq"]
+    )
+    assert (r2["touched_buckets"], r2["upserted"], r2["deleted"]) == ([], 0, 0)
+    assert spark.read.parquet(path).count() == 41
 
 
 def test_approx_count_distinct_error_bound(spark):
@@ -286,8 +292,7 @@ def test_upsert_partitioned_null_entity_key(spark, tmp_path):
     """NULL entity keys land in a real sentinel bucket: they survive a
     later upsert that does not touch them (the dynamic overwrite must
     not drop the null partition), can themselves be updated by key,
-    and collect_stats=False skips the deleted count (one scan of the
-    existing bucket data)."""
+    and `deleted` counts exactly the stored rows each batch replaced."""
     path = str(tmp_path / "nulltbl")
     base = spark.createDataFrame(
         [(None, 0, "nullrow"), ("e1", 1, "v1"), ("e2", 2, "v2")],
@@ -299,10 +304,8 @@ def test_upsert_partitioned_null_entity_key(spark, tmp_path):
     batch = spark.createDataFrame(
         [("e1", 1, "UPDATED")], "image_id string, seq int, val string"
     )
-    r1 = sources.upsert_partitioned(
-        spark, batch, path, keys=["image_id", "seq"], collect_stats=False
-    )
-    assert r1["deleted"] is None
+    r1 = sources.upsert_partitioned(spark, batch, path, keys=["image_id", "seq"])
+    assert r1["deleted"] == 1 and r1["upserted"] == 1
     got = spark.read.parquet(path).drop("_bucket").toPandas()
     assert len(got) == 3
     nullrow = got[got["image_id"].isna()]
@@ -485,9 +488,7 @@ def test_compact_preserves_bucket_partition_layout(spark, tmp_path):
         [(f"e{i}", i, float(i)) for i in range(200)],
         "image_id string, seq int, val double",
     )
-    sources.upsert_partitioned(
-        spark, df, path, keys=["image_id"], n_buckets=8, collect_stats=False
-    )
+    sources.upsert_partitioned(spark, df, path, keys=["image_id"], n_buckets=8)
     sources.compact_table(spark, path, target_mb=1024)
     # layout intact: only _bucket=k/ dirs at the root, no loose files
     entries = [e for e in os.listdir(path) if not e.startswith(("_", "."))]
@@ -498,9 +499,7 @@ def test_compact_preserves_bucket_partition_layout(spark, tmp_path):
         [("e0", 0, 999.0), ("zz", 1, -1.0)],
         "image_id string, seq int, val double",
     )
-    sources.upsert_partitioned(
-        spark, up, path, keys=["image_id"], n_buckets=8, collect_stats=False
-    )
+    sources.upsert_partitioned(spark, up, path, keys=["image_id"], n_buckets=8)
     back = spark.read.parquet(path)
     assert back.count() == 201
     got = {r["image_id"]: r["val"] for r in back.collect()}
@@ -532,7 +531,7 @@ def test_upsert_merges_schema_on_manifestless_mixed_table(spark, tmp_path):
     )
     sources.upsert_partitioned(
         spark, up, path, keys=["image_id"], n_buckets=4,
-        collect_stats=False, allow_schema_evolution=True,
+        allow_schema_evolution=True,
     )
     back = sources.read_table(spark, path)
     assert "extra" in back.columns
@@ -572,9 +571,7 @@ def test_zorder_preserves_bucket_layout(spark, tmp_path):
         [(f"e{i}", i, float(i % 97)) for i in range(500)],
         "image_id string, seq int, val double",
     )
-    sources.upsert_partitioned(
-        spark, df, path, keys=["image_id"], n_buckets=4, collect_stats=False
-    )
+    sources.upsert_partitioned(spark, df, path, keys=["image_id"], n_buckets=4)
     src = sources.read_table(spark, path)
     layout.zorder_table(src, path, ["seq", "val"], bits=3, n_files=8)
     loose = [e for e in os.listdir(path) if not e.startswith(("_", "."))]
@@ -586,9 +583,7 @@ def test_zorder_preserves_bucket_layout(spark, tmp_path):
     up = spark.createDataFrame(
         [("e0", 0, -1.0)], "image_id string, seq int, val double"
     )
-    sources.upsert_partitioned(
-        spark, up, path, keys=["image_id"], n_buckets=4, collect_stats=False
-    )
+    sources.upsert_partitioned(spark, up, path, keys=["image_id"], n_buckets=4)
     back = spark.read.parquet(path)
     assert back.count() == 500
     assert back.filter("image_id = 'e0'").first()["val"] == -1.0
@@ -610,10 +605,7 @@ def test_compact_bucketed_honors_target_mb(spark, tmp_path):
         F.col("id").alias("seq"),
         F.sha2(F.col("id").cast("string"), 256).alias("pad"),
     )
-    sources.upsert_partitioned(
-        spark, df, path, keys=["image_id", "seq"], n_buckets=2,
-        collect_stats=False,
-    )
+    sources.upsert_partitioned(spark, df, path, keys=["image_id", "seq"], n_buckets=2)
     r = sources.compact_table(spark, path, target_mb=1)
     n_out_expected = max(1, -(-r["bytes"] // (1024 * 1024)))
     assert n_out_expected > 2, r  # fixture big enough to need >1 file/bucket
@@ -637,14 +629,9 @@ def test_upsert_rejects_mismatched_bucket_count(spark, tmp_path):
     df = spark.createDataFrame(
         [("e1", 1.0), ("e2", 2.0)], "image_id string, val double"
     )
-    sources.upsert_partitioned(
-        spark, df, path, keys=["image_id"], n_buckets=32, collect_stats=False
-    )
+    sources.upsert_partitioned(spark, df, path, keys=["image_id"], n_buckets=32)
     with pytest.raises(ValueError, match="n_buckets=32"):
-        sources.upsert_partitioned(
-            spark, df, path, keys=["image_id"], n_buckets=16,
-            collect_stats=False,
-        )
+        sources.upsert_partitioned(spark, df, path, keys=["image_id"], n_buckets=16)
     # and compaction preserves the recorded layout metadata
     sources.compact_table(spark, path, target_mb=1024)
     assert sources._read_table_meta(path)["n_buckets"] == 32
