@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 # entity metadata CSV: the char_info/det_info analog
 # (classification/metadata_test.py:25-41: id,label,length,split,…)
@@ -311,6 +311,17 @@ def temporal_split_embargo(
 #: parquet reader from treating it as data.
 _SCHEMA_MANIFEST = "_table_schema.json"
 
+#: upsert_partitioned's staging directory, INSIDE the table: the
+#: leading underscore hides it from Spark's file index (and from
+#: compact_table's sizing), and removing the table removes it too.
+_UPSERT_STAGING = "_upsert_tmp"
+
+#: upsert_partitioned's commit journal, kept in its staging directory:
+#: the staged files to rename into the table, the hit files to delete
+#: and the schema manifest.  Present only once the staged write is
+#: complete.
+_UPSERT_JOURNAL = "_journal.json"
+
 #: Sidecar SUBDIRS carried through layout rewrites (compact/zorder):
 #: their content is row-for-row independent of file layout, so a
 #: rewrite that drops them silently deletes a still-valid artifact
@@ -386,6 +397,53 @@ def read_table(
     return df
 
 
+def _upsert_commit(path: str) -> None:
+    """Carry out the commit journal of the upsert staged in ``path``
+    (upsert_partitioned step 5).  Every step is idempotent, so a commit
+    cut short anywhere is finished by running this again: a staged file
+    already renamed is skipped, a hit file already deleted too, and the
+    journal leaves last, with the staging directory."""
+    import json
+    import os
+    import shutil
+
+    staging = os.path.join(path, _UPSERT_STAGING)
+    with open(os.path.join(staging, _UPSERT_JOURNAL)) as f:
+        journal = json.load(f)
+    for src, dst in journal["renames"]:
+        if os.path.exists(src):
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(src, dst)
+    _write_schema_manifest(path, journal["columns"], journal["extra"])
+    for f in journal["deletes"]:
+        d, name = os.path.split(f)
+        for p in (f, os.path.join(d, f".{name}.crc")):
+            if os.path.exists(p):
+                os.remove(p)
+    shutil.rmtree(staging)
+
+
+def recover_upsert(path: str) -> None:
+    """Finish or discard an upsert cut short at ``path``; run it before
+    anything reads the table to rewrite it (upsert_partitioned,
+    windows.merge_append_into_blocks_table, and compact_table /
+    layout.zorder_table through recover_rewrite).  A staging directory
+    with a journal is a commit cut short and is rolled forward; one
+    without is an unfinished write and is discarded, which leaves the
+    table as it was before that merge (and no directory at all when
+    that merge was the table's first)."""
+    import os
+    import shutil
+
+    staging = os.path.join(path, _UPSERT_STAGING)
+    if os.path.exists(os.path.join(staging, _UPSERT_JOURNAL)):
+        _upsert_commit(path)
+    elif os.path.isdir(staging):
+        shutil.rmtree(staging)
+        if not os.listdir(path):  # it was the table's first merge
+            os.rmdir(path)
+
+
 def upsert_partitioned(
     spark: SparkSession,
     batch: DataFrame,
@@ -395,29 +453,50 @@ def upsert_partitioned(
     n_buckets: int = 16,
     allow_schema_evolution: bool = False,
     extra_meta: dict | None = None,
+    file_group: Column | None = None,
 ) -> dict:
     """MERGE-style upsert into a bucket-partitioned parquet table —
-    the parquet stand-in for Iceberg MERGE INTO (same trick Iceberg's
-    copy-on-write merge performs: rewrite ONLY the data files whose
-    partitions the batch touches).
+    the parquet stand-in for Iceberg MERGE INTO, with file-granular
+    copy-on-write as Iceberg does it: only the data FILES that hold a
+    key of the batch are rewritten, never a whole partition.
 
     1. batch rows get `_bucket` = crc32(entity) % n_buckets
-       (checkpoint.bucket_of — the table's layout key);
-    2. the existing table is read WITH a partition-pruning filter to
-       only the touched buckets (everything else is never scanned,
-       never rewritten — at 10^12 rows that is the entire point);
-    3. existing rows that match a batch row on `keys` are dropped
-       (left_anti), the batch is unioned in;
-    4. dynamic partition overwrite rewrites only the touched bucket
-       directories.
+       (checkpoint.bucket_of — the table's layout key) and are
+       localCheckpoint'ed once (batch-sized); every later step reads
+       that checkpoint, and the touched buckets ride its job as an
+       Observation;
+    2. one collect finds the hit files: the distinct
+       `_metadata.file_path` of stored rows in the touched buckets
+       whose keys match a batch row (a key-columns-only scan; untouched
+       buckets are never read);
+    3. keep = the rows of the hit files only, minus the matched keys
+       (left_anti);
+    4. keep ∪ batch is shuffled to one task per (`_bucket`, group) and
+       written to the staging directory `path/_upsert_tmp/`, partitioned
+       by `_bucket` and by ``file_group``: each merge adds at most one
+       file per touched (bucket, group), and rows that differ on
+       ``file_group`` never share a file (the blocks table keeps open
+       tail blocks apart from sealed ones this way, so an append
+       rewrites only the open files);
+    5. commit through a journal in the staging directory (written tmp +
+       os.replace, like the schema manifest): rename the staged files
+       into `_bucket=k/` (named `g<group>-part-…`: the group directories
+       of one bucket reuse file names), write the schema manifest,
+       delete the hit files and their `.crc`, drop the staging
+       directory.
 
-    The merged frame is localCheckpoint'ed before the write because
-    Spark refuses to overwrite a path it is concurrently reading
-    (self-overwrite); the materialization is bounded by the touched
-    buckets, not the table.  Returns {touched_buckets, upserted,
-    deleted} for the caller's lineage record: the batch's rows and the
-    stored rows it replaced, observed on that one checkpoint job (a
-    retried shuffle stage may count twice: lineage, not results).
+    Readers do not change: the table stays a plain `_bucket`-partitioned
+    parquet directory holding each key once (Spark skips the
+    underscore-prefixed staging directory).  Recovery (recover_upsert)
+    runs at entry: a journal is rolled forward, staging without one is
+    discarded.  Between a crash and the next recovery a reader can see
+    a half-committed merge.  Untouched files are never rewritten, so
+    every merge that adds rows adds files: compact_table folds them.
+
+    Returns {touched_buckets, upserted, deleted} for the caller's
+    lineage record: the batch's rows and the stored rows it replaced,
+    observed on the jobs that checkpoint and write them (a retried
+    shuffle stage may count twice: lineage, not results).
 
     Concurrency contract: single writer (like any filesystem parquet
     table); a real Iceberg catalog upgrades this to optimistic
@@ -428,11 +507,18 @@ def upsert_partitioned(
     layout's shift/feature_cols contract) — the caller is responsible
     for validating it against _read_table_meta before merging.
     """
+    import glob
+    import json
     import os
+    from functools import reduce
+    from operator import and_
+    from urllib.parse import unquote, urlparse
 
     from gfwspark.checkpoint import bucket_of
     from gfwspark.util import observed_rows
 
+    recover_upsert(path)
+    staging = os.path.join(path, _UPSERT_STAGING)
     existed = os.path.exists(path)
     meta = _read_table_meta(path) if existed else None
     if meta is not None and meta.get("n_buckets") not in (None, n_buckets):
@@ -442,31 +528,35 @@ def upsert_partitioned(
             f"n_buckets={n_buckets} — a mismatched bucket modulus would "
             "assign keys to the wrong _bucket dirs and duplicate rows"
         )
-    b = batch.withColumn("_bucket", bucket_of(entity, n_buckets))
-    touched = sorted(r["_bucket"] for r in b.select("_bucket").distinct().collect())
     n_rows = F.count(F.lit(1)).alias("n")
-    o_up, o_existing, o_keep = Observation(), Observation(), Observation()
+    o_up, o_hit, o_keep = Observation(), Observation(), Observation()
+    b = (
+        batch.withColumn("_bucket", bucket_of(entity, n_buckets))
+        .observe(o_up, n_rows, F.collect_set("_bucket").alias("touched"))
+        .localCheckpoint(eager=True)
+    )
+    upserted = observed_rows(o_up)
+    touched = sorted(o_up.get["touched"]) if upserted else []
+    cols = b.columns
+    out, hits = b, []
     if existed:
-        from functools import reduce
-        from operator import and_
-
         # read_table consults the schema manifest: a table that holds
         # mixed-schema files (a prior evolved upsert) is ALWAYS read
         # with mergeSchema — otherwise Spark infers the schema from one
         # arbitrary file, and an old-schema draw would make this merge
-        # silently rewrite the touched buckets without the evolved
-        # columns (permanent data loss).  The footer-scan cost is paid
-        # only on genuinely mixed tables; the hot path (uniform schema,
+        # silently rewrite the hit files without the evolved columns
+        # (permanent data loss).  The footer-scan cost is paid only on
+        # genuinely mixed tables; the hot path (uniform schema,
         # streaming per-batch upserts) keeps the cheap first-file read.
         # A table WITHOUT a manifest has an unknown schema history
         # (created before the sidecar existed, or by a plain parquet
         # write): force mergeSchema once — this upsert then writes the
         # manifest and the cheap path resumes.
-        existing = read_table(
+        table = read_table(
             spark, path, force_merge=_read_schema_manifest(path) is None
-        ).filter(F.col("_bucket").isin(touched)).observe(o_existing, n_rows)
-        new_cols = set(b.columns) - set(existing.columns)
-        lost_cols = set(existing.columns) - set(b.columns) - {"_bucket"}
+        )
+        new_cols = set(b.columns) - set(table.columns)
+        lost_cols = set(table.columns) - set(b.columns)
         if (new_cols or lost_cols) and not allow_schema_evolution:
             raise ValueError(
                 "upsert batch schema differs from the table "
@@ -475,42 +565,60 @@ def upsert_partitioned(
                 "null padding (Iceberg-style additive evolution), and read "
                 "the table with mergeSchema afterwards"
             )
-        bk = b.select(*keys).distinct()
-        # eqNullSafe: MERGE key matching must treat NULL = NULL as a
-        # match, or null-keyed rows duplicate on every re-upsert
-        cond = reduce(and_, [existing[k].eqNullSafe(bk[k]) for k in keys])
-        keep = existing.join(bk, cond, "left_anti").observe(o_keep, n_rows)
-        out = keep.unionByName(
-            b.observe(o_up, n_rows), allowMissingColumns=allow_schema_evolution
-        )
-    else:
-        out = b.observe(o_up, n_rows)
-    out = out.localCheckpoint(eager=True)
+        cols = cols + sorted(lost_cols)
+        bk = b.select(*keys)
+
+        def matched(stored: DataFrame, how: str) -> DataFrame:
+            # eqNullSafe: MERGE key matching must treat NULL = NULL as a
+            # match, or null-keyed rows duplicate on every re-upsert
+            cond = reduce(and_, [stored[k].eqNullSafe(bk[k]) for k in keys])
+            return stored.join(bk, cond, how)
+
+        if touched:
+            stored = table.filter(F.col("_bucket").isin(touched)).select(
+                *keys, F.col("_metadata.file_path").alias("_file")
+            )
+            hits = sorted(
+                unquote(urlparse(r["_file"]).path)
+                for r in matched(stored, "left_semi")
+                .select("_file").distinct().collect()
+            )
+        if hits:
+            hit = (
+                spark.read.schema(table.schema).option("basePath", path)
+                .parquet(*hits).observe(o_hit, n_rows)
+            )
+            keep = matched(hit, "left_anti").observe(o_keep, n_rows)
+            out = keep.unionByName(b, allowMissingColumns=allow_schema_evolution)
+    group = F.lit(0) if file_group is None else file_group
+    out.withColumn("_file_group", group).repartition(
+        "_bucket", "_file_group"
+    ).write.partitionBy("_bucket", "_file_group").parquet(staging)
+    # every read of the batch is done: release its checkpoint blocks
+    # now rather than at the next JVM GC
+    b._jdf.logicalPlan().rdd().unpersist(False)
+    renames = []
+    for src in glob.glob(os.path.join(glob.escape(staging), "*", "*", "*.parquet")):
+        bucket_dir, group_dir, name = os.path.relpath(src, staging).split(os.sep)
+        prefix = "g" + group_dir.split("=", 1)[1]
+        renames.append((src, os.path.join(path, bucket_dir, f"{prefix}-{name}")))
+    extra = {"n_buckets": n_buckets, **(extra_meta or {})}
     if existed:
-        # manifest BEFORE the data write: a crash mid-write leaves
-        # mixed-schema buckets, and the already-updated manifest makes
+        # manifest BEFORE the commit: a crash mid-commit leaves mixed-
+        # schema buckets, and the already-updated manifest makes
         # read_table take the mergeSchema path (a manifest column not
         # yet in any file only costs a conservative footer scan; the
         # reverse ordering would let the cheap old-file read pass the
         # manifest check and reopen the evolved-column loss)
-        _write_schema_manifest(
-            path, out.columns, {"n_buckets": n_buckets, **(extra_meta or {})}
+        _write_schema_manifest(path, cols, extra)
+    journal = os.path.join(staging, _UPSERT_JOURNAL)
+    with open(journal + ".tmp", "w") as f:
+        json.dump(
+            {"renames": renames, "deletes": hits, "columns": cols, "extra": extra}, f
         )
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_bucket")
-        .parquet(path)
-    )
-    # record the now-authoritative column set so every later read —
-    # including a default (non-evolving) upsert's — sees the full
-    # schema even while untouched buckets still hold old-schema files
-    # (idempotent re-write covers the fresh-table branch above)
-    _write_schema_manifest(
-        path, out.columns, {"n_buckets": n_buckets, **(extra_meta or {})}
-    )
-    deleted = observed_rows(o_existing) - observed_rows(o_keep) if existed else 0
-    upserted = observed_rows(o_up)
+    os.replace(journal + ".tmp", journal)
+    _upsert_commit(path)
+    deleted = observed_rows(o_hit) - observed_rows(o_keep) if hits else 0
     return {"touched_buckets": touched, "upserted": upserted, "deleted": deleted}
 
 
@@ -523,6 +631,8 @@ def recover_rewrite(path: str, suffix: str) -> tuple[str, str]:
      - old exists alongside path -> crashed before cleanup; old is a
        superseded copy, drop it.
      - tmp is always an incomplete/stale write at entry; drop it.
+     - an upsert cut short inside path is finished or discarded
+       (recover_upsert), so the rewrite never bakes in half a merge.
     Returns (tmp, old) for the caller to write into / commit_rewrite."""
     import os
     import shutil
@@ -534,6 +644,7 @@ def recover_rewrite(path: str, suffix: str) -> tuple[str, str]:
             os.rename(old, path)
         else:
             shutil.rmtree(old)
+    recover_upsert(path)
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
     return tmp, old

@@ -255,7 +255,7 @@ def stream_upsert_sink(
     """MERGE ingestion sink: every micro-batch upserts into the
     bucket-partitioned parquet table via sources.upsert_partitioned —
     the streaming CDC sink (Iceberg MERGE-per-commit shape).  Each
-    batch rewrites only the bucket directories its keys touch, so
+    batch rewrites only the data files that hold one of its keys, so
     steady-state ingestion cost tracks batch size, not table size.
 
     `trigger` is passed through to writeStream.trigger; the default
@@ -337,8 +337,10 @@ def stream_stride_blocks_sink(
     layout behind windows.windows_from_stride_blocks): every
     micro-batch is merged via windows.append_stride_blocks(
     changed_only=True) — per batch only each appended entity's tail
-    block plus its new blocks are rewritten, through the
-    partition-pruned upsert on keys (entity, block_id).  Steady-state
+    block plus its new blocks are rewritten, through the file-granular
+    upsert on keys (entity, block_id): open tail blocks sit in files of
+    their own, so only the open-tail files holding an appended tail are
+    rewritten, never the sealed blocks around them.  Steady-state
     cost tracks batch size, never table size: the layout that
     amortizes the one-shot extractor's block-build scaling floor
     (BENCH/HISTORY.md r6) stays fresh under continuous ingestion.

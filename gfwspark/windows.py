@@ -542,6 +542,12 @@ def merge_append_into_blocks_table(
     size, not table size), merge via append_stride_blocks
     (changed_only), and upsert the touched block rows on
     (entity, block_id).  A missing table bootstraps from the batch.
+    The upsert's file group is "open block" (size(ts_arr) < shift, each
+    entity's last, partial block): open blocks live in files apart from
+    sealed ones, and an append at the end of the series changes only
+    open blocks, so it rewrites only the open-tail files that hold a
+    touched tail; sealed files stay as they are (compact_table folds
+    the groups together; the next append splits them again).
     upsert_partitioned validates n_buckets against the table's
     manifest, so a mismatched modulus raises before anything is
     written; the manifest additionally records the layout's `shift`
@@ -560,6 +566,10 @@ def merge_append_into_blocks_table(
     feature_cols = (
         [feature_col] if isinstance(feature_col, str) else list(feature_col)
     )
+    # finish (or discard) an upsert cut short BEFORE reading the table:
+    # half a commit holds rewritten tails twice, and a discarded
+    # bootstrap must bootstrap again rather than merge
+    sources.recover_upsert(path)
     meta = sources._read_table_meta(path) if os.path.exists(path) else None
     if meta is not None:
         for key, got in (("shift", shift), ("feature_cols", feature_cols)):
@@ -594,6 +604,7 @@ def merge_append_into_blocks_table(
         spark, changed, path, keys=[entity, "block_id"],
         entity=entity, n_buckets=n_buckets,
         extra_meta={"shift": shift, "feature_cols": feature_cols},
+        file_group=F.size("ts_arr") < shift,
     )
 
 

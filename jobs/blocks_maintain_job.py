@@ -9,16 +9,19 @@ stride-blocks window layout.
         --mode append --input <append parquet> --blocks <table path> \
         --feature-col v --shift 767 [--buckets 16] [--on-late drop]
 
-`build` computes windows.stride_blocks over the full input and writes
-the bucket-partitioned table (the one-time layout cost the r6 bench
-measured as the one-shot extractor's scaling floor).  It REFUSES a
+`build` writes the bucket-partitioned table from the full input through
+the bootstrap of windows.merge_append_into_blocks_table (stride_blocks
+over the input; the one-time layout cost the r6 bench measured as the
+one-shot extractor's scaling floor).  It REFUSES a
 non-empty --blocks path unless --overwrite: merging a rebuild into an
 existing table would leave stale block rows (shrunken entities keep
 their phantom tail blocks) and the table would no longer equal
 stride_blocks(input).  `append` merges a strictly-later-ts batch via
 windows.merge_append_into_blocks_table — the same pruned-merge step
-the streaming CDC sink runs per micro-batch; only each appended
-entity's tail block plus its new blocks are rewritten, and a
+the streaming CDC sink runs per micro-batch; the table keeps each
+entity's open tail block in files apart from its sealed blocks, so an
+append rewrites only the open-tail files that hold an appended
+entity's tail and writes its new blocks, and a
 --buckets value that differs from the table's recorded layout raises
 before anything is written.  Any consumer then materializes windows
 of ANY W stepping by `shift` with windows.windows_from_stride_blocks
@@ -56,40 +59,27 @@ def main() -> None:
     import os
     import shutil
 
-    from gfwspark import sources, windows
+    from gfwspark import windows
     from gfwspark.session import get_spark
 
     spark = get_spark("gfwspark-blocks-maintain", master=None)
     rows = spark.read.parquet(args.input)
-    if args.mode == "build":
-        if os.path.exists(args.blocks):
-            if not args.overwrite:
-                raise SystemExit(
-                    f"--mode build refuses existing table {args.blocks}: an "
-                    "upsert-merge rebuild would leave stale block rows; pass "
-                    "--overwrite to replace it, or use --mode append"
-                )
-            shutil.rmtree(args.blocks)
-        changed = windows.stride_blocks(
-            rows, args.feature_col, args.shift, entity=args.entity, ts=args.ts
-        )
-        r = sources.upsert_partitioned(
-            spark, changed, args.blocks, keys=[args.entity, "block_id"],
-            entity=args.entity, n_buckets=args.buckets,
-            # record the layout contract so a later --mode append with a
-            # different --shift / --feature-col raises instead of
-            # silently corrupting block ids (manifest-validated in
-            # windows.merge_append_into_blocks_table)
-            extra_meta={
-                "shift": args.shift, "feature_cols": [args.feature_col]
-            },
-        )
-    else:
-        r = windows.merge_append_into_blocks_table(
-            spark, rows, args.blocks, args.feature_col, args.shift,
-            entity=args.entity, ts=args.ts, n_buckets=args.buckets,
-            on_late=args.on_late,
-        )
+    if args.mode == "build" and os.path.exists(args.blocks):
+        if not args.overwrite:
+            raise SystemExit(
+                f"--mode build refuses existing table {args.blocks}: an "
+                "upsert-merge rebuild would leave stale block rows; pass "
+                "--overwrite to replace it, or use --mode append"
+            )
+        shutil.rmtree(args.blocks)
+    # on a missing path the merge bootstraps the table from the rows:
+    # the same layout (file groups, manifest with shift/feature_cols)
+    # an append-created table gets
+    r = windows.merge_append_into_blocks_table(
+        spark, rows, args.blocks, args.feature_col, args.shift,
+        entity=args.entity, ts=args.ts, n_buckets=args.buckets,
+        on_late=args.on_late,
+    )
     print({"mode": args.mode, **r})
 
 

@@ -465,3 +465,122 @@ def test_rewrites_preserve_entity_stats_sidecar(spark, tmp_path):
     after_z = layout.read_entity_stats(spark, p).toPandas().sort_values(
         "image_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(before, after_z)
+
+
+def _series(spark, spec):
+    """{entity: (first second, n rows)} -> one row per second, v = t."""
+    return spark.createDataFrame(
+        [(e, t0 + i, float(t0 + i)) for e, (t0, n) in spec.items() for i in range(n)],
+        "image_id string, t long, v double",
+    ).select("image_id", F.timestamp_seconds("t").alias("ts"), "v")
+
+
+def test_blocks_table_keeps_open_tails_in_their_own_files(spark, tmp_path):
+    """The blocks table's file groups: no data file holds both a sealed
+    block (size(ts_arr) == shift) and an open tail block, after the
+    bootstrap and after each of two appends; an append leaves every
+    sealed-only file in place (same inode and mtime); and the merged
+    table equals stride_blocks over all rows."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    from gfwspark import windows
+
+    S = 4
+
+    def files_by_group():  # {local path: {is the block open}}
+        out = {}
+        for r in (
+            spark.read.parquet(tbl)
+            .select(
+                F.col("_metadata.file_path").alias("f"),
+                (F.size("ts_arr") < S).alias("open"),
+            )
+            .distinct().collect()
+        ):
+            out.setdefault(unquote(urlparse(r["f"]).path), set()).add(r["open"])
+        return out
+
+    def stamp(f):
+        st = os.stat(f)
+        return st.st_ino, st.st_mtime_ns
+
+    tbl = str(tmp_path / "blocks")
+    batches = [
+        _series(spark, {f"e{k}": (0, 3 + 5 * k) for k in range(8)}),
+        _series(spark, {"e0": (100, 2), "e3": (100, 6), "e5": (100, 1), "new": (100, 9)}),
+        _series(spark, {"e0": (200, 1), "e1": (200, 4), "e7": (200, 3)}),
+    ]
+    sealed = {}
+    for batch in batches:  # the bootstrap, then two appends
+        windows.merge_append_into_blocks_table(spark, batch, tbl, "v", S, n_buckets=2)
+        assert {f: stamp(f) for f in sealed} == sealed
+        groups = files_by_group()
+        assert all(len(g) == 1 for g in groups.values()), groups
+        sealed = {f: stamp(f) for f, g in groups.items() if g == {False}}
+        assert 0 < len(sealed) < len(groups)  # both groups present
+    allrows = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    want = windows.stride_blocks(allrows, "v", S)
+    got = spark.read.parquet(tbl).select(*want.columns)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_blocks_merge_recovers_a_commit_cut_short(spark, tmp_path, monkeypatch):
+    """A bootstrap cut short after its journal (before its first
+    rename) and an append cut short in its delete step are both
+    finished before anything reads the table again — by the next
+    merge, and by compact_table — so the table still equals
+    stride_blocks over all rows: no tail twice, no block_id restarted."""
+    import os
+
+    import pytest
+
+    from gfwspark import sources, windows
+
+    S = 4
+    tbl = str(tmp_path / "blocks")
+
+    def merge(batch):
+        return windows.merge_append_into_blocks_table(
+            spark, batch, tbl, "v", S, n_buckets=2
+        )
+
+    real_remove, real_replace = os.remove, os.replace
+
+    def crash_before_rename(src, dst, *a, **kw):
+        if "/_bucket=" in str(dst) and "_upsert_tmp" not in str(dst):
+            raise OSError("crash before the first rename")
+        return real_replace(src, dst, *a, **kw)
+
+    def crash_in_delete(p, *a, **kw):
+        if str(p).startswith(tbl):
+            raise OSError("crash in the delete step")
+        return real_remove(p, *a, **kw)
+
+    def crashing(batch, name, fake):
+        monkeypatch.setattr(os, name, fake)
+        with pytest.raises(OSError, match="crash"):
+            merge(batch)
+        monkeypatch.undo()
+        assert os.path.exists(os.path.join(tbl, "_upsert_tmp", "_journal.json"))
+
+    batches = [
+        _series(spark, {f"e{k}": (0, 3 + 5 * k) for k in range(6)}),
+        _series(spark, {"e0": (100, 2), "e3": (100, 6), "e5": (100, 1)}),
+        _series(spark, {"e0": (200, 7), "e1": (200, 4), "new": (200, 3)}),
+        _series(spark, {"e0": (300, 1), "e3": (300, 2), "e4": (300, 5)}),
+    ]
+    crashing(batches[0], "replace", crash_before_rename)  # the bootstrap
+    crashing(batches[1], "remove", crash_in_delete)  # rolls it forward first
+    sources.compact_table(spark, tbl)  # rolls the append forward first
+    crashing(batches[2], "remove", crash_in_delete)
+    merge(batches[3])
+
+    allrows = batches[0]
+    for batch in batches[1:]:
+        allrows = allrows.unionByName(batch)
+    want = windows.stride_blocks(allrows, "v", S)
+    got = spark.read.parquet(tbl).select(*want.columns)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0

@@ -290,8 +290,8 @@ def test_compact_table_reduces_files_preserves_rows(spark, tmp_path):
 
 def test_upsert_partitioned_null_entity_key(spark, tmp_path):
     """NULL entity keys land in a real sentinel bucket: they survive a
-    later upsert that does not touch them (the dynamic overwrite must
-    not drop the null partition), can themselves be updated by key,
+    later upsert that does not touch them (the rewrite must not drop
+    the null partition), can themselves be updated by key,
     and `deleted` counts exactly the stored rows each batch replaced."""
     path = str(tmp_path / "nulltbl")
     base = spark.createDataFrame(
@@ -321,6 +321,138 @@ def test_upsert_partitioned_null_entity_key(spark, tmp_path):
     assert len(got2) == 3
     assert got2[got2["image_id"].isna()]["val"].iloc[0] == "NULL-UPDATED"
     assert r2["deleted"] == 1
+
+
+def _data_file_stamps(path):
+    """{data file under path: (inode, mtime_ns)}."""
+    import os
+
+    out = {}
+    for d, _, files in os.walk(path):
+        for name in files:
+            if name.endswith(".parquet"):
+                st = os.stat(os.path.join(d, name))
+                out[os.path.join(d, name)] = (st.st_ino, st.st_mtime_ns)
+    return out
+
+
+def test_upsert_insert_only_batch_rewrites_no_file(spark, tmp_path):
+    """Copy-on-write is file-granular: a batch whose keys are all new
+    rewrites no stored file, even in the buckets it lands in; it only
+    adds files."""
+    path = str(tmp_path / "tbl")
+    base = spark.createDataFrame(
+        [(f"e{i}", i, f"v{i}") for i in range(40)],
+        "image_id string, seq int, val string",
+    )
+    sources.upsert_partitioned(spark, base, path, keys=["image_id", "seq"], n_buckets=4)
+    before = _data_file_stamps(path)
+    batch = spark.createDataFrame(
+        [(f"new{i}", i, "NEW") for i in range(6)],
+        "image_id string, seq int, val string",
+    )
+    r = sources.upsert_partitioned(
+        spark, batch, path, keys=["image_id", "seq"], n_buckets=4
+    )
+    assert (r["upserted"], r["deleted"]) == (6, 0) and r["touched_buckets"]
+    after = _data_file_stamps(path)
+    assert {f: after.get(f) for f in before} == before, "a stored file was rewritten"
+    assert len(after) > len(before)
+    assert spark.read.parquet(path).count() == 46
+
+
+def test_upsert_rewrites_only_the_files_holding_a_key(spark, tmp_path):
+    """One bucket, two files: updating a key of the first replaces that
+    file and leaves the second byte-stable.  Readers see a plain
+    `_bucket`-partitioned table with each key once and no extra
+    column."""
+    path = str(tmp_path / "tbl")
+    schema = "image_id string, seq int, val string"
+
+    def upsert(rows):
+        one_file = spark.createDataFrame(rows, schema).coalesce(1)
+        return sources.upsert_partitioned(
+            spark, one_file, path, keys=["image_id", "seq"], n_buckets=1
+        )
+
+    upsert([(f"a{i}", i, "A") for i in range(10)])
+    first = _data_file_stamps(path)
+    upsert([(f"b{i}", i, "B") for i in range(10)])
+    second = {f: s for f, s in _data_file_stamps(path).items() if f not in first}
+    assert len(first) == 1 and len(second) == 1
+
+    r = upsert([("a3", 3, "UPDATED")])
+    assert (r["upserted"], r["deleted"]) == (1, 1)
+    after = _data_file_stamps(path)
+    assert not set(first) & set(after), "the hit file was not replaced"
+    assert {f: after.get(f) for f in second} == second, "an unhit file was rewritten"
+    for back in (spark.read.parquet(path), sources.read_table(spark, path)):
+        assert sorted(back.columns) == ["_bucket", "image_id", "seq", "val"]
+        got = back.toPandas()
+        assert len(got) == 20 and not got.duplicated(["image_id", "seq"]).any()
+        assert got.set_index("image_id").loc["a3", "val"] == "UPDATED"
+
+
+def test_upsert_commit_journal_recovery(spark, tmp_path, monkeypatch):
+    """A commit cut short after its journal is written is rolled forward
+    by the next upsert (every key once, with the batch's values); a
+    staged write without a journal is discarded and the table reads as
+    it was before that merge."""
+    import os
+
+    import pytest
+
+    path = str(tmp_path / "tbl")
+    staging = os.path.join(path, "_upsert_tmp")
+    keys = ["image_id", "seq"]
+    schema = "image_id string, seq int, val string"
+    base = spark.createDataFrame([(f"e{i}", i, f"v{i}") for i in range(20)], schema)
+    sources.upsert_partitioned(spark, base, path, keys=keys, n_buckets=2)
+
+    def table():
+        return {
+            (r["image_id"], r["seq"]): r["val"]
+            for r in spark.read.parquet(path).collect()
+        }, spark.read.parquet(path).count()
+
+    empty = base.limit(0)
+    real_remove, real_replace = os.remove, os.replace
+
+    def crash_in_delete(p, *a, **kw):
+        if str(p).startswith(path):
+            raise OSError("crash in the delete step")
+        return real_remove(p, *a, **kw)
+
+    batch = spark.createDataFrame(
+        [("e1", 1, "NEW1"), ("e6", 6, "NEW6"), ("x", 0, "NEWX")], schema
+    )
+    monkeypatch.setattr(os, "remove", crash_in_delete)
+    with pytest.raises(OSError, match="delete step"):
+        sources.upsert_partitioned(spark, batch, path, keys=keys, n_buckets=2)
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(staging, "_journal.json"))
+    sources.upsert_partitioned(spark, empty, path, keys=keys, n_buckets=2)
+    assert not os.path.exists(staging)
+    got, n = table()
+    want = {(f"e{i}", i): f"v{i}" for i in range(20)}
+    want.update({("e1", 1): "NEW1", ("e6", 6): "NEW6", ("x", 0): "NEWX"})
+    assert (got, n) == (want, 21)
+
+    def crash_before_journal(src, dst, *a, **kw):
+        if str(dst).endswith("_journal.json"):
+            raise OSError("crash before the journal")
+        return real_replace(src, dst, *a, **kw)
+
+    before = _data_file_stamps(path)
+    batch2 = spark.createDataFrame([("e2", 2, "LOST"), ("y", 0, "LOST")], schema)
+    monkeypatch.setattr(os, "replace", crash_before_journal)
+    with pytest.raises(OSError, match="before the journal"):
+        sources.upsert_partitioned(spark, batch2, path, keys=keys, n_buckets=2)
+    monkeypatch.undo()
+    assert _data_file_stamps(staging) and table() == (want, 21)
+    sources.upsert_partitioned(spark, empty, path, keys=keys, n_buckets=2)
+    assert not os.path.exists(staging)
+    assert _data_file_stamps(path) == before and table() == (want, 21)
 
 
 def test_compact_table_crash_recovery(spark, tmp_path):
