@@ -41,7 +41,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, Window
 
 from gfwspark import dedup, sources, text
-from gfwspark.text import ensure_explode_parallelism as _ensure_parallelism
 from gfwspark.util import observed_rows
 
 #: (stage_idx, stage_name) in pipeline order — the audit vocabulary.
@@ -96,12 +95,11 @@ def _pipeline(
     # sf1.0: repetition gate 31 s -> ~3 s on local[32]).
     # dup_2gram_frac is evaluated on the (few) quality-rejected rows
     # too, but one checkpoint pass beats two; the audit's stage-1 and
-    # stage-2 counts are two filters over the same block.  Lazy
-    # (default) builds keep the one-plan contract for oracle replay.
-    # observed above with_repetition_stats: its partition-count probe
-    # caches by plan, which an Observation's random name would always miss
-    d = text.with_quality_score(_ensure_parallelism(docs), text_col)
-    d = _counted(text.with_repetition_stats(d, text_col, ns=(2,)))
+    # stage-2 counts are two filters over the same block.  The quality
+    # columns are computed on the repetition frame, so its one
+    # explode-parallelism repartition serves both gates.
+    d = text.with_repetition_stats(docs, text_col, ns=(2,))
+    d = _counted(text.with_quality_score(d, text_col))
     if materialize_survivors:
         d = d.localCheckpoint(eager=True)
     d = _counted(d.filter(F.col("quality") >= quality_min))
@@ -185,10 +183,12 @@ def prepare_corpus(
     decontamination, the split) and Spark's column pruning makes each
     branch's subtree physically distinct, defeating ReuseExchange — so
     lazily each branch re-runs scan + gates + dedup window.  True
-    localCheckpoints the survivor frame once (one corpus-sized
-    materialization buys back three full recomputes; the right trade
-    on a production run, kept opt-out so single-action oracle replays
-    stay one lazy plan)."""
+    localCheckpoints the gate frame, the survivor frame and the shingle
+    stream once each (the survivor checkpoint alone buys back three
+    full recomputes).  Every production caller passes True: the
+    ``llm_corpus_prep`` query, ``jobs/corpus_prep_job.py`` and the
+    benchmark; the lazy default serves tests that compare the two
+    forms or count the jobs a plan build starts."""
     out, _ = _pipeline(
         docs, benchmark, id_col, text_col, entity, ts, quality_min,
         max_dup_2gram, near_dup_threshold, decontam_n, horizon_s,

@@ -1354,7 +1354,8 @@ FROM p
 # planning re-expands the (already self-referencing) dedup subtrees
 # once PER COUNT — combinatorial blowup that turns a 2.4 s chain into
 # minutes.  Materialization makes each stage evaluate exactly once,
-# mirroring the Spark side's per-stage localCheckpoints.
+# as on the Spark side, where one inline Observation per stage counts
+# its rows in the pipeline's own jobs.
 _CORPUS_AUDIT_ORACLE = (
     _CORPUS_PREP_CTES.replace(" AS (", " AS MATERIALIZED (")
     + """

@@ -36,22 +36,6 @@ def tokens_col(text_col: str = "text"):
     )
 
 
-# partition-count probe cache, keyed by (SparkSession identity,
-# logical-plan semantic hash): .rdd compiles the physical plan (no job,
-# but non-free), and one minhash pipeline calls
-# ensure_explode_parallelism several times on the same lineage
-# (shingles, simhash, lang_id) — the probe runs once.  Keys carry the
-# Spark applicationId, so a restarted session never sees another
-# session's counts (id() would be vulnerable to address reuse).
-# Remaining (documented) staleness window: within ONE session, a
-# re-read of a path whose FILE SET changed hashes to the same semantic
-# plan and reuses the old count — the repartition may then be skipped
-# or mis-sized.  Impact is performance-only (correctness never depends
-# on the repartition); pipelines that rewrite their own inputs
-# mid-session should clear the cache or recreate the session.
-_NPART_CACHE: dict[tuple[str, int], int] = {}
-
-
 def ensure_explode_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     """Explosive operators (shingle/token explode: ~100-200x row
     multiplication) need parallelism sized for their OUTPUT, but scan
@@ -59,45 +43,31 @@ def ensure_explode_parallelism(df: DataFrame, key: str | None = None) -> DataFra
     arrives as one task and the whole explode runs on one core.  A
     pre-explode repartition costs an input-proportional shuffle and
     buys output-proportional parallelism — at any scale the shuffle is
-    <1% of the explode's downstream work.  No-op when the input already
-    has enough partitions (the 100 TB case: thousands of files).
+    <1% of the explode's downstream work.
 
     Target = max(defaultParallelism, spark.sql.shuffle.partitions):
     defaultParallelism alone undersizes under dynamic allocation, where
     the executor count at plan time is not the executor count at run
     time; shuffle.partitions is the operator-parallelism knob the rest
-    of the plan already uses."""
-    try:
-        spark = df.sparkSession
-        target = max(
-            spark.sparkContext.defaultParallelism,
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        )
-        # classic sessions only: .rdd compiles the physical plan to read
-        # a partition count (no job).  Under Spark Connect .rdd is
-        # unavailable — skip the optimization rather than fail (the
-        # explode still computes correctly, just without the repartition).
-        # applicationId, not id(spark): CPython recycles object
-        # addresses, so id() could alias a fresh session to a stopped
-        # one's cached counts
-        cache_key = (
-            spark.sparkContext.applicationId,
-            df._jdf.queryExecution().logical().semanticHash(),
-        )
-        n_in = _NPART_CACHE.get(cache_key)
-        if n_in is None:
-            n_in = df.rdd.getNumPartitions()
-            if len(_NPART_CACHE) > 256:  # bounded; keyed by plan hash
-                _NPART_CACHE.clear()
-            _NPART_CACHE[cache_key] = n_in
-    except Exception:
-        return df
-    if n_in < target:
-        # ``key``: hash-partition by that column instead of round-robin,
-        # so a downstream groupBy/join on the same key reuses this one
-        # exchange (guide §2.4) — e.g. minhash_signatures' per-doc agg.
-        return df.repartition(target, F.col(key)) if key else df.repartition(target)
-    return df
+    of the plan already uses.
+
+    Unconditional: reading the input's partition count would run every
+    shuffle stage under it as a job on an adaptive plan.  So an input
+    that is already wide pays the shuffle too: one wider than
+    ``target`` (thousands of files at scale) is narrowed to the
+    session's shuffle width, the width every downstream shuffle of
+    these operators uses anyway; the price is the one input-sized
+    shuffle above.
+
+    ``key``: hash-partition by that column instead of round-robin, so a
+    downstream groupBy/join on the same key reuses this one exchange
+    (guide §2.4) — e.g. minhash_signatures' per-doc agg."""
+    spark = df.sparkSession
+    target = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+    )
+    return df.repartition(target, F.col(key)) if key else df.repartition(target)
 
 
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -209,8 +179,8 @@ def tfidf_top_terms(
     groupBy(doc, token), df via a second agg on token, the scalar N
     broadcast via a 1-row cross join — no driver-side collect, every
     join keyed or broadcast."""
-    toks = ensure_explode_parallelism(
-        df.select(id_col, F.explode(tokens_col(text_col)).alias("_tok"))
+    toks = ensure_explode_parallelism(df).select(
+        id_col, F.explode(tokens_col(text_col)).alias("_tok")
     ).select(id_col, F.lower("_tok").alias("_tok"))
     tf = toks.groupBy(id_col, "_tok").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("_tok").agg(F.count(F.lit(1)).alias("df"))

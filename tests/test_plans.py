@@ -179,3 +179,16 @@ def test_corpus_prep_plan_shape(spark):
     # anti/semi membership joins against the (tiny relative to corpus)
     # drop-lists broadcast; corpus-side rows never shuffle for them
     assert "BroadcastHashJoin" in plan
+
+
+def test_tfidf_repartitions_before_its_explode(spark):
+    """tfidf_top_terms spreads the documents before exploding them: the
+    round-robin Exchange sits below the Generate, so the explode runs
+    at shuffle width instead of on the scan's single task followed by a
+    shuffle of the whole token stream."""
+    lines = _plan(queries.all_queries()["tfidf_top_terms"](spark, SF_MED)).splitlines()
+    gen = [i for i, line in enumerate(lines) if "Generate explode" in line]
+    rr = [i for i, line in enumerate(lines) if "RoundRobinPartitioning" in line]
+    assert gen and rr
+    # a tree string lists a node's children after it
+    assert min(rr) > min(gen)
