@@ -19,6 +19,8 @@ layer is engine-native:
   input fingerprint — a restart recomputes only missing buckets and the
   final table is bit-identical (determinism tests guarantee per-bucket
   outputs don't depend on which run produced them).
+- Pending buckets run concurrently, at most ``_IN_FLIGHT`` at once (see
+  ``run_resumable`` for what a failure or a crash leaves).
 
 On Iceberg (prod) the same manifests ride along as snapshot summary
 properties; on the local filesystem they are plain JSON next to the
@@ -28,10 +30,13 @@ parquet output.
 from __future__ import annotations
 
 import json
+import os
 import time
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from pathlib import Path
 
 import pyspark.sql.functions as F
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation
 
 import gfwspark
@@ -109,6 +114,21 @@ def completed_buckets(output_path: str, fingerprint: str) -> set[int]:
     return done
 
 
+def _write_json(path: Path, obj) -> None:
+    """Temp file + ``os.replace``: a crash mid-write leaves the previous
+    file whole (a truncated snapshot log would lose every snapshot)."""
+    tmp = path.with_name(path.name + ".tmp")
+    tmp.write_text(json.dumps(obj, indent=1))
+    os.replace(tmp, path)
+
+
+# Fixed, not the cluster's width: it bounds the buckets a driver crash
+# loses and the plans the driver holds at once.  On featurize with 8 and
+# 16 buckets (local[4], local[2]) 2 in flight cut wall time 22-47% from
+# 1, and 8 gained nothing over 4 while the peak heap grew 2-13%.
+_IN_FLIGHT = 4
+
+
 def run_resumable(
     df: DataFrame,
     transform,
@@ -121,24 +141,33 @@ def run_resumable(
     """Apply `transform(bucket_df) -> DataFrame` per entity bucket,
     writing each bucket + manifest; resume skips completed buckets.
 
-    `fail_after_bucket` injects a mid-job crash (tests).  Returns a
-    summary dict {completed, skipped, total}.
+    `fail_after_bucket` injects a mid-job crash (tests): the run stops
+    after the first pending bucket >= it commits.  Returns a summary
+    dict {completed, skipped, total}, both lists sorted.
 
-    Note: per-bucket sequential submission is deliberate — buckets are
-    the *checkpoint* granularity (coarse, e.g. 64 at prod scale), while
-    Spark parallelism lives *inside* each bucket job.  A bucket is the
-    unit of redo after a crash, exactly like the reference re-runs only
-    missing vessel files (run_inference.py:44-48 skips by path).
+    Up to ``_IN_FLIGHT`` pending buckets run at once, each on a worker
+    thread that inherits the caller's job group, pool and tags, so one
+    bucket's planning overlaps another's jobs.  FIFO scheduling still
+    gives the oldest bucket's tasks the slots first; later buckets only
+    fill idle slots, and task memory is bounded by cores, not by jobs.
+    On a bucket error the in-flight buckets commit, the queued ones never
+    start, and the first exception is re-raised.  A bucket is the unit of
+    redo: a crash loses at most ``_IN_FLIGHT`` buckets, and a rerun redoes
+    only the missing ones, like the reference re-runs only missing vessel
+    files (run_inference.py:44-48 skips by path).
     """
     fp = input_fingerprint(df, n_buckets)
     done = completed_buckets(output_path, fp)
     mdir = _manifest_dir(output_path)
     mdir.mkdir(parents=True, exist_ok=True)
     bucketed = df.withColumn("_bucket", bucket_of(entity, n_buckets))
-    skipped, completed = sorted(done), []
-    for b in range(n_buckets):
-        if b in done:
-            continue
+    pending = [b for b in range(n_buckets) if b not in done]
+    stop = None
+    if fail_after_bucket is not None:
+        stop = next((b for b in pending if b >= fail_after_bucket), None)
+        pending = [b for b in pending if stop is None or b <= stop]
+
+    def run_bucket(b: int) -> int:
         t0 = time.time()
         # lineage stats ride the bucket's own write, observed at the top
         # of the written plan (the result stage counts a retried task
@@ -164,13 +193,24 @@ def run_resumable(
             "engine_version": gfwspark.__version__,
             "output": out_dir,
         }
-        (mdir / f"bucket_{_fp_tag(fp)}_{b}.json").write_text(json.dumps(manifest, indent=1))
-        completed.append(b)
-        if fail_after_bucket is not None and b >= fail_after_bucket:
-            raise RuntimeError(f"injected failure after bucket {b}")
+        _write_json(mdir / f"bucket_{_fp_tag(fp)}_{b}.json", manifest)
+        return b
+
+    # wrapped in the caller's thread, so the workers inherit its job group
+    target = inheritable_thread_target(df.sparkSession)(run_bucket)
+    with ThreadPoolExecutor(_IN_FLIGHT) as pool:
+        futures = [pool.submit(target, b) for b in pending]
+        try:
+            completed = sorted(f.result() for f in as_completed(futures))
+        except BaseException:
+            # in-flight buckets still commit (the pool's exit waits)
+            pool.shutdown(wait=False, cancel_futures=True)
+            raise
+    if stop is not None:
+        raise RuntimeError(f"injected failure after bucket {stop}")
 
     _commit_snapshot(output_path, fp, n_buckets)
-    return {"completed": completed, "skipped": skipped, "total": n_buckets}
+    return {"completed": completed, "skipped": sorted(done), "total": n_buckets}
 
 
 def _commit_snapshot(output_path: str, fingerprint: str, n_buckets: int) -> None:
@@ -196,7 +236,7 @@ def _commit_snapshot(output_path: str, fingerprint: str, n_buckets: int) -> None
             "buckets": buckets,
         }
     )
-    log_path.write_text(json.dumps(log, indent=1))
+    _write_json(log_path, log)
 
 
 def read_snapshot(output_path: str, snapshot_id: int | None = None) -> dict:

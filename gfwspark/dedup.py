@@ -425,6 +425,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
     labels = (
         edges.select(F.col("a").alias("id")).distinct().withColumn("root", F.col("id"))
     ).localCheckpoint(eager=True)
+    held = labels  # the checkpointed frame behind `labels`
     n_changed = 0
     for _ in range(max_iter):
         nbr = (
@@ -454,12 +455,16 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
+        # the last round's labels are read no more: release them now
+        held._jdf.logicalPlan().rdd().unpersist(False)
+        held = new
         # change detection off the already-checkpointed frame: a cheap
         # filter+count, not a second full join over all nodes
         n_changed = new.filter(F.col("root") != F.col("_old")).count()
         labels = new.drop("_old")
         if n_changed == 0:
             break
+    edges._jdf.logicalPlan().rdd().unpersist(False)
     if n_changed != 0:
         raise RuntimeError(
             f"dup_clusters: not converged after {max_iter} rounds "

@@ -149,3 +149,137 @@ def test_snapshot_errors_are_actionable(spark, tmp_path):
 
     with pytest.raises(ValueError, match="no committed snapshot"):
         ckpt.read_snapshot(str(tmp_path / "never_written"))
+
+
+def test_snapshot_log_survives_a_crash_mid_write(spark, tmp_path, monkeypatch):
+    """A commit that dies halfway through writing the snapshot log
+    leaves the previous log whole: the last committed snapshot stays
+    readable and a rerun commits the next one."""
+    from pathlib import Path
+
+    df = tables.synthesize_image_caption(spark, n_entities=8, rows_per_entity=6)
+    out = str(tmp_path / "torn")
+    checkpoint.run_resumable(df, _transform, out, n_buckets=2)
+
+    write_text = Path.write_text
+
+    def dies_halfway(self, data, *args, **kwargs):
+        if self.name.startswith("snapshots.json"):
+            write_text(self, data[: len(data) // 2], *args, **kwargs)
+            raise OSError("no space left on device")
+        return write_text(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(Path, "write_text", dies_halfway)
+    with pytest.raises(OSError, match="no space left"):
+        checkpoint.run_resumable(df, _transform, out, n_buckets=2)
+    monkeypatch.undo()
+
+    assert checkpoint.read_snapshot(out)["snapshot_id"] == 1
+    checkpoint.run_resumable(df, _transform, out, n_buckets=2)
+    assert checkpoint.read_snapshot(out)["snapshot_id"] == 2
+    assert checkpoint.read_snapshot(out, 1)["snapshot_id"] == 1
+
+
+def test_pending_buckets_run_concurrently(spark, tmp_path):
+    """Both buckets' transforms must be running at once to pass the
+    barrier; one bucket after the other breaks it."""
+    import threading
+
+    barrier = threading.Barrier(2, timeout=30)
+
+    def meet(d):
+        barrier.wait()
+        return d
+
+    df = tables.synthesize_image_caption(spark, n_entities=8, rows_per_entity=6)
+    summary = checkpoint.run_resumable(df, meet, str(tmp_path / "c"), n_buckets=2)
+    assert summary["completed"] == [0, 1]
+
+
+def test_bucket_jobs_inherit_the_job_group(spark, tmp_path):
+    """Every job started during the call, the worker threads' bucket
+    writes included, runs in the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_job(group):
+        sc.setJobGroup(group, group)
+        sc.parallelize([1]).count()
+        return tracker.getJobIdsForGroup(group)
+
+    df = tables.synthesize_image_caption(spark, n_entities=8, rows_per_entity=6)
+    try:
+        first = max(marker_job("ckpt-before")) + 1
+        sc.setJobGroup("ckpt-run", "resumable run")
+        checkpoint.run_resumable(df, _transform, str(tmp_path / "g"), n_buckets=4)
+        last = min(marker_job("ckpt-after")) - 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    in_group = set(tracker.getJobIdsForGroup("ckpt-run"))
+    started = set(range(first, last + 1))
+    assert len(started) > 4  # the fingerprint plus one write per bucket
+    assert started <= in_group, sorted(started - in_group)
+
+
+def test_bucket_error_commits_in_flight_buckets_and_resumes(spark, tmp_path):
+    """A transform error in bucket 1 of 4 propagates unchanged; every
+    bucket that committed has a manifest matching its parquet, and a
+    rerun completes exactly the missing buckets with output equal to an
+    uninterrupted run."""
+    import pyspark.sql.functions as F
+
+    df = tables.synthesize_image_caption(spark, n_entities=16, rows_per_entity=8)
+    out_ref = str(tmp_path / "ref")
+    out = str(tmp_path / "err")
+    checkpoint.run_resumable(df, _transform, out_ref, n_buckets=4)
+
+    def fails_on_bucket_1(d):
+        first = d.select(checkpoint.bucket_of("image_id", 4).alias("b")).first()
+        if first is not None and first["b"] == 1:
+            raise ValueError("bad bucket 1")
+        return _transform(d)
+
+    with pytest.raises(ValueError, match="bad bucket 1") as err:
+        checkpoint.run_resumable(df, fails_on_bucket_1, out, n_buckets=4)
+    assert type(err.value) is ValueError
+
+    manifests = [
+        json.loads(p.read_text())
+        for p in (tmp_path / "err" / "_manifests").glob("bucket_*.json")
+    ]
+    committed = {m["bucket"] for m in manifests}
+    assert 1 not in committed
+    for m in manifests:
+        assert m["status"] == "ok"
+        got = spark.read.parquet(m["output"]).agg(F.count(F.lit(1))).first()[0]
+        assert m["rows"] == got, m
+
+    summary = checkpoint.run_resumable(df, _transform, out, n_buckets=4)
+    assert summary["skipped"] == sorted(committed)
+    assert summary["completed"] == sorted(set(range(4)) - committed)
+
+    cols = ["image_id", "ts", "phash_hamming", "ham_w_avg", "session_id"]
+    a, b = (
+        checkpoint.read_result(spark, o).select(*cols).toPandas()
+        .sort_values(["image_id", "ts"]).reset_index(drop=True)
+        for o in (out_ref, out)
+    )
+    pd.testing.assert_frame_equal(a, b)
+
+
+def test_at_most_four_buckets_in_flight(spark, tmp_path):
+    """Eight pending buckets share at most four worker threads, so a
+    crash leaves at most four buckets uncommitted."""
+    import threading
+
+    threads = set()
+
+    def record(d):
+        threads.add(threading.get_ident())
+        return d
+
+    df = tables.synthesize_image_caption(spark, n_entities=16, rows_per_entity=4)
+    summary = checkpoint.run_resumable(df, record, str(tmp_path / "k"), n_buckets=8)
+    assert summary["completed"] == list(range(8))
+    assert 1 <= len(threads) <= 4

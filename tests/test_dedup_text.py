@@ -230,13 +230,18 @@ def test_dup_clusters_chain_topology(spark):
 
 def test_dup_clusters_long_chain_converges(spark):
     """A 12-node path graph (diameter 11) still converges within the
-    iteration budget via min propagation + early exit."""
+    iteration budget via min propagation + early exit, and releases its
+    per-round label checkpoints and edges as it goes: at most one new
+    persisted RDD (the final labels) is left."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
     )
     out = dedup.dup_clusters(pairs).toPandas()
     assert (out["cluster_root"] == 0).all()
     assert (out["cluster_size"] == 13).all()
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) <= 1
 
 
 def test_multiprobe_recall_on_clustered_corpus(spark):
