@@ -23,8 +23,10 @@ same DuckDB ASOF oracle):
    plans one Exchange (Union discards its children's partitioning).
    ``interval_label_join`` is this join over interval starts plus a
    coverage test.
-2. ``asof_join_broadcast`` — map-side searchsorted against a broadcast
-   per-entity annotation index: ZERO shuffle of the fact table.  The
+2. ``asof_join_broadcast`` — the driver builds a time-bucketed segment
+   index from the collected annotations (numpy + pyarrow); the facts
+   probe it with two broadcast hash joins that share one broadcast
+   relation: ZERO shuffle of the fact table and no Python worker.  The
    pick when the annotation dim is small, which at 10^12 fact rows is
    the difference between moving nothing and moving everything.  It
    takes a streaming fact frame unchanged (stream-static as-of).
@@ -43,6 +45,14 @@ through the chunked kernel (chunk floor ``CHUNK_FLOOR_S``).
 NULL entities group like any other value (SQL grouping semantics): a
 NULL-entity fact takes the latest NULL-entity annotation in every
 strategy.
+
+A NULL-valued annotation is skipped, not in force: a fact takes the
+latest non-NULL value at or before it (the union form's
+``last(ignorenulls)``; the broadcast index drops NULL-valued rows), so
+a value of 1.0 at 01:00 then NULL at 02:00 labels a 03:00 fact 1.0 in
+every strategy.  A plain DuckDB ``ASOF JOIN`` would return NULL there;
+the oracle fixtures take ``max(label)`` per (entity, start), which
+never holds such a row.
 """
 
 from __future__ import annotations
@@ -54,6 +64,10 @@ from pyspark.sql import Column, DataFrame, Window
 #: floor of the chunk size asof_join(strategy='auto') derives: coarse
 #: chunks keep the carry frame tiny and amortize per-chunk overhead
 CHUNK_FLOOR_S = 3600
+
+#: 0001-01-01T00:00:00Z in epoch microseconds: where the broadcast
+#: as-of puts a NULL timestamp, before every instant Spark can hold
+_EARLIEST_US = -62_135_596_800_000_000
 
 
 def _interleave(
@@ -245,6 +259,65 @@ def interval_label_join_covering(
     )
 
 
+def _segment_index(ann):
+    """The broadcast as-of's driver-built index, from the collected
+    annotation side ``ann`` (pyarrow: ``_e`` entity, ``_start`` epoch
+    microseconds, ``_val`` non-NULL value).  One relation
+    ``(_key struct<e, b>, _lo, _hi, _val)`` holds two kinds of row:
+
+    - one *entity row* per entity, ``b`` = -1: ``_lo`` its last start,
+      ``_hi`` its bucket width ``span // count + 1`` µs, ``_val`` the
+      last annotation's value, in force from ``_lo`` on;
+    - *segment rows*: every other annotation ``i`` in start order is in
+      force on ``[_lo, _hi)`` = ``[start_i, start_(i+1))`` and is
+      repeated for each bucket that range touches.  Bucket ``b`` of an
+      entity holds the instants ``t < last start`` with
+      ``(last start - 1 - t) div width == b``, counted back from the
+      last start, so an entity has at most ``count`` buckets and an
+      instant before its first start falls past them.
+
+    The annotations are ordered by (entity, start) on pyarrow's exact
+    entity codes, so int64 keys above 2^53 and NULL keep their
+    identity; the entity and value columns are gathered with ``take``,
+    in their own Arrow types."""
+    import numpy as np
+    import pyarrow as pa
+
+    ent = ann.column("_e").combine_chunks()
+    codes = ent.dictionary_encode("encode").indices.to_numpy(zero_copy_only=False)
+    starts = ann.column("_start").to_numpy()
+    order = np.lexsort((starts, codes))
+    codes, starts = codes[order], starts[order]
+    last = np.ones(len(codes), bool)
+    last[:-1] = codes[1:] != codes[:-1]
+    ends = np.flatnonzero(last)
+    counts = np.diff(ends, prepend=-1)
+    s_last = starts[ends]
+    width = (s_last - starts[ends - counts + 1]) // counts + 1
+
+    seg = np.flatnonzero(~last)
+    group = np.repeat(np.arange(len(ends)), counts)[seg]
+    lo, hi = starts[seg], starts[seg + 1]
+    b_first = (s_last[group] - hi) // width[group]
+    reps = (s_last[group] - 1 - lo) // width[group] - b_first + 1
+    rep_of = np.repeat(np.arange(len(seg)), reps)
+    bucket = b_first[rep_of] + np.arange(len(rep_of)) - np.repeat(np.cumsum(reps) - reps, reps)
+
+    src = order[np.concatenate([ends, seg[rep_of]])]
+    return pa.StructArray.from_arrays(
+        [
+            pa.StructArray.from_arrays(
+                [ent.take(src), np.concatenate([np.full(len(ends), -1), bucket])],
+                names=["e", "b"],
+            ),
+            np.concatenate([s_last, lo[rep_of]]),
+            np.concatenate([width, hi[rep_of]]),
+            ann.column("_val").combine_chunks().take(src),
+        ],
+        names=["_key", "_lo", "_hi", "_val"],
+    )
+
+
 def asof_join_broadcast(
     facts: DataFrame,
     annotations: DataFrame,
@@ -255,82 +328,109 @@ def asof_join_broadcast(
     max_broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """Backward as-of with a BROADCAST annotation side — zero shuffle
-    of the fact table.
+    of the fact table, and no Python past the driver.
 
     When the annotation dim is small (the common production shape: a
     label/config table versioned over time), shuffling 10^12 fact rows
-    to meet it is absurd.  Here the annotations are collected into a
-    per-entity sorted numpy index, broadcast to every executor, and the
-    facts stream through ``mapInPandas`` doing the reference's exact
-    searchsorted lookup (fishing_feature_generation.py:59-60) batch by
-    batch — any fact partitioning works, nothing moves.
+    to meet it is absurd.  Here the non-NULL-valued annotations are
+    collected once and the driver builds a time-bucketed segment index
+    from them (``_segment_index``, numpy + pyarrow, no Spark job).  The
+    facts then probe it with two broadcast hash joins of the SAME
+    relation (one broadcast, reused): on (entity, -1), which gives a
+    fact at or after its entity's last start the last value and every
+    other fact its bucket, then on (entity, bucket) with the segment
+    range ``lo <= ts < hi`` as the join residual, which matches at most
+    one segment.  Both join keys are a struct holding the entity, so a
+    NULL entity matches a NULL entity.  Any fact partitioning works,
+    nothing moves, and a streaming fact frame joins as is (stream-
+    static: the index is a static side).
 
     The driver-side collect is guarded: more than `max_broadcast_rows`
-    annotation rows raises ValueError (use asof_join_union or
+    non-NULL annotation rows raises ValueError (use asof_join_union or
     asof_join_chunked for large annotation sides) instead of silently
-    OOMing the driver.  No-match rows get SQL NULL; values round-trip
-    in the annotation column's own dtype (ints/strings/bools stay
-    exact — nothing is funneled through float64).
+    OOMing the driver.  No-match rows get SQL NULL; values cross the
+    driver as Arrow in the annotation column's own type (ints above
+    2^53, strings, bools stay exact — nothing goes through float64).
+    A NULL ``ts`` or ``ann_ts`` sorts before every instant, as in the
+    union form's window.
 
     Physical analog of J5 (broadcast dict lookup, metadata.py:142-161)
-    fused with J1's binary search.
+    fused with J1's searchsorted.
     """
-    import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     import pyspark.sql.types as T
 
-    def index_key(eid):
-        # groupby(dropna=False) keys the NULL group by NaN, which never
-        # equals itself; None stands in for it on both sides
-        return None if pd.isna(eid) else eid
+    from gfwspark.util import epoch_us
 
-    ann_rows = (
-        annotations.select(entity, ann_ts, value_col)
+    ann = (
+        annotations.select(
+            F.col(entity).alias("_e"),
+            F.coalesce(epoch_us(ann_ts), F.lit(_EARLIEST_US)).alias("_start"),
+            F.col(value_col).alias("_val"),
+        )
+        .filter(F.col("_val").isNotNull())
         .limit(max_broadcast_rows + 1)
-        .toPandas()
-        .sort_values([entity, ann_ts], kind="mergesort")
+        .toArrow()
     )
-    if len(ann_rows) > max_broadcast_rows:
+    if ann.num_rows > max_broadcast_rows:
         raise ValueError(
             f"asof_join_broadcast: annotation side exceeds "
             f"max_broadcast_rows={max_broadcast_rows}; use asof_join_union "
             f"or asof_join_chunked for large annotation tables"
         )
-    index: dict[object, tuple[np.ndarray, np.ndarray]] = {}
-    for eid, grp in ann_rows.groupby(entity, dropna=False):
-        index[index_key(eid)] = (
-            grp[ann_ts].astype("datetime64[us]").astype("int64").to_numpy(),
-            # object dtype: preserves the annotation dtype exactly
-            # (int64 > 2^53, strings, bools) and admits None
-            grp[value_col].to_numpy(dtype=object),
+    row_type = T.StructType([
+        T.StructField("_key", T.StructType([
+            T.StructField("e", annotations.schema[entity].dataType),
+            T.StructField("b", T.LongType()),
+        ])),
+        T.StructField("_lo", T.LongType()),
+        T.StructField("_hi", T.LongType()),
+        T.StructField("_val", annotations.schema[value_col].dataType),
+    ])
+    rows = _segment_index(ann)
+    # one row holding the index as an array, unpacked by inline() inside
+    # the broadcast job: the optimizer copies the rows of a many-row
+    # local relation on every expression pass (0.13 s at 100k rows)
+    index = F.broadcast(
+        facts.sparkSession.createDataFrame(
+            pa.table({"_rows": pa.ListArray.from_arrays(
+                pa.array([0, len(rows)], pa.int32()), rows
+            )}),
+            T.StructType([T.StructField("_rows", T.ArrayType(row_type))]),
         )
-    bc = facts.sparkSession.sparkContext.broadcast(index)
-
-    out_schema = T.StructType(
-        list(facts.schema.fields)
-        + [T.StructField(f"asof_{value_col}", annotations.schema[value_col].dataType)]
+        .select(F.inline("_rows"))
+        # the non-NULL join columns, stated once: filters that each join
+        # would infer differ between the two and defeat the reuse
+        .filter(F.col("_key").isNotNull() & F.col("_lo").isNotNull() & F.col("_hi").isNotNull())
     )
 
-    def lookup(batches):
-        idx = bc.value
-        for pdf in batches:
-            ts_us = pdf[ts].astype("datetime64[us]").astype("int64").to_numpy()
-            out = np.full(len(pdf), None, dtype=object)
-            for eid, rows in pdf.groupby(entity, dropna=False).indices.items():
-                hit = idx.get(index_key(eid))
-                if hit is None:
-                    continue
-                ann_us, vals = hit
-                pos = np.searchsorted(ann_us, ts_us[rows], side="right") - 1
-                ok = pos >= 0
-                res = np.full(len(rows), None, dtype=object)
-                res[ok] = vals[np.clip(pos, 0, None)][ok]
-                out[rows] = res
-            res_pdf = pdf.copy()
-            res_pdf[f"asof_{value_col}"] = out
-            yield res_pdf
+    def key(bucket: Column) -> Column:
+        return F.struct(F.col(entity).alias("e"), bucket.cast("long").alias("b"))
 
-    return facts.mapInPandas(lookup, schema=out_schema)
+    # the entity row gives a fact at or after the last start the last
+    # value and an earlier fact its bucket, whose segment rows hold the
+    # one range that covers ts
+    ent, seg = index.alias("_i"), index.alias("_s")
+    t = F.col("_t")
+    late = t >= F.col("_i._lo")
+    bucket = F.when(~late, F.call_function("div", F.col("_i._lo") - 1 - t, F.col("_i._hi")))
+    return (
+        # ts in microseconds once: the joins re-evaluate their keys and
+        # residuals per row, a TIMESTAMP_NTZ cast included
+        facts.select("*", F.coalesce(epoch_us(ts), F.lit(_EARLIEST_US)).alias("_t"))
+        .join(ent, key(F.lit(-1)) == F.col("_i._key"), "left")
+        .join(
+            seg,
+            (key(bucket) == F.col("_s._key"))
+            & (t >= F.col("_s._lo"))
+            & (t < F.col("_s._hi")),
+            "left",
+        )
+        .select(
+            *facts.columns,
+            F.coalesce(F.when(late, F.col("_i._val")), F.col("_s._val")).alias(f"asof_{value_col}"),
+        )
+    )
 
 
 def asof_join_chunked(
@@ -470,9 +570,10 @@ def asof_join(
     observationally identical (shared DuckDB ASOF oracle + goldens):
 
     - ``'union'``    — asof_join_union (default at scale; one shuffle).
-    - ``'broadcast'``— asof_join_broadcast (zero fact shuffle; small
+    - ``'broadcast'``— asof_join_broadcast (zero fact shuffle, two
+      broadcast hash joins on a driver-built segment index; small
       annotation dims only — raises past its row cap).  Single value
-      column (the broadcast index carries one payload array).
+      column (each index row carries one value).
     - ``'auto'``     — profile per-entity fact counts once
       (layout.collect_entity_stats: a tiny groupBy count + min/max-ts
       agg, of which only the keys above ``hot_threshold_rows`` are

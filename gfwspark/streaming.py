@@ -14,9 +14,10 @@ run incrementally:
   hamming delta in features.with_lag_features
 
 Stream-static backward as-of needs no twin: asof.asof_join_broadcast
-takes a streaming fact frame as is (the annotation index is built once
-on the driver; zero shuffle, zero streaming state, append-mode output
-with no watermark).
+takes a streaming fact frame as is (the segment index is built once on
+the driver and joined as a static broadcast side by two broadcast hash
+joins; zero shuffle, zero streaming state, no Python worker,
+append-mode output with no watermark).
 
 Late data beyond the watermark is dropped (the batch engine has no
 late data; the watermark bound makes the streaming results converge to

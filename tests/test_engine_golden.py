@@ -932,7 +932,7 @@ def test_featurize_full_with_annotations(img_df, ann_df):
         pd.testing.assert_frame_equal(want, got, check_dtype=False)
 
 
-@pytest.mark.parametrize(
+_ASOF_JOINS = pytest.mark.parametrize(
     "join",
     [
         lambda f, a: asof.asof_join_union(f, a, value_cols=("value",)),
@@ -943,6 +943,9 @@ def test_featurize_full_with_annotations(img_df, ann_df):
     ],
     ids=["union", "chunked", "broadcast"],
 )
+
+
+@_ASOF_JOINS
 def test_asof_null_entity_matches_null_annotation(spark, img_df, ann_df, join):
     """NULL entities group like any value (SQL grouping semantics): a
     NULL-entity fact takes the latest NULL-entity annotation, or NULL
@@ -979,6 +982,55 @@ def test_asof_null_entity_matches_null_annotation(spark, img_df, ann_df, join):
         )
         got = grp["asof_value"].to_numpy(dtype=np.float64)
         assert np.allclose(got, want, equal_nan=True), eid
+
+
+@_ASOF_JOINS
+def test_asof_null_value_keeps_latest_value(spark, join):
+    """A NULL-valued annotation does not end the one before it: every
+    strategy carries the latest non-NULL value (the union form's
+    last(ignorenulls)), and an entity whose annotations are all NULL
+    gets NULL.  A NULL timestamp sorts before every instant on both
+    sides, as in the union form's window."""
+    import datetime as dt
+
+    h = lambda k: dt.datetime(2024, 1, 1, k)  # noqa: E731
+    facts = spark.createDataFrame(
+        [("A", h(0), 0), ("A", h(1), 1), ("A", h(3), 2), ("B", h(3), 3),
+         ("C", None, 4), ("C", h(3), 5)],
+        "image_id string, ts timestamp, phash long",
+    )
+    ann = spark.createDataFrame(
+        [("A", h(1), 1.0), ("A", h(2), None), ("B", h(1), None), ("C", None, 5.0)],
+        "image_id string, start_ts timestamp, value double",
+    )
+    got = join(facts, ann).toPandas().sort_values("phash")["asof_value"].tolist()
+    assert pd.isna(got[0]) and pd.isna(got[3]), got
+    assert got[1:3] == [1.0, 1.0] and got[4:] == [5.0, 5.0], got
+
+
+def test_asof_broadcast_dense_entity_matches_union(spark):
+    """One entity with ~5k annotations: facts before its first start, at
+    and around every start, on both sides of every bucket edge of the
+    broadcast index (bucket width span // count + 1 us, counted back
+    from the last start) and at or after its last start get exactly
+    what asof_join_union gives them, row for row."""
+    rng = np.random.default_rng(5)
+    starts = np.unique(1_700_000_000_000_000 + rng.integers(0, 30 * 86_400_000_000, 5000))
+    n, last = len(starts), starts[-1]
+    edges = last - np.arange(n + 1) * ((last - starts[0]) // n + 1)
+    fact_us = np.unique(np.concatenate([
+        starts - 1, starts, starts + 1, edges - 1, edges,
+        [starts[0] - 86_400_000_000, last + 86_400_000_000],
+    ]))
+    us = lambda a: pd.to_datetime(a, unit="us")  # noqa: E731
+    facts = spark.createDataFrame(pd.DataFrame({"image_id": "A", "ts": us(fact_us)}))
+    ann = spark.createDataFrame(pd.DataFrame({
+        "image_id": "A", "start_ts": us(starts), "label": np.arange(n, dtype=np.int64),
+    }))
+    want = asof.asof_join_union(facts, ann).toPandas().sort_values("ts").reset_index(drop=True)
+    got = asof.asof_join_broadcast(facts, ann).toPandas().sort_values("ts").reset_index(drop=True)
+    assert want["asof_label"].isna().sum() == (fact_us < starts[0]).sum() > 0
+    pd.testing.assert_frame_equal(want, got)
 
 
 def test_sliding_window_refs_reconstruct(img_df, img_pdf):

@@ -92,6 +92,17 @@ def test_samplers_stay_jvm_side(spark):
     assert "BroadcastNestedLoopJoin" in w4 or "BroadcastHashJoin" in w4
 
 
+def test_broadcast_asof_stays_jvm_side(spark):
+    """The broadcast as-of probes its driver-built index with broadcast
+    hash joins: no Python node anywhere, and no shuffle Exchange between
+    the fact scan and the result (the facts never move)."""
+    plan = _plan(queries.all_queries()["asof_join_broadcast"](spark, SF_MED))
+    assert "MapInPandas" not in plan and "EvalPython" not in plan
+    assert "BroadcastHashJoin" in plan
+    assert "FileScan parquet" in plan
+    assert not re.search(r"(?<!Broadcast)Exchange ", plan), plan
+
+
 @pytest.mark.parametrize("form", ["materialized", "refs"])
 def test_sliding_feature_windows_no_prestride_materialization(spark, form):
     """W1m scale invariant: the sliding-window extractor must NOT build
