@@ -192,6 +192,8 @@ def run_resumable(
             "wall_s": round(time.time() - t0, 3),
             "engine_version": gfwspark.__version__,
             "output": out_dir,
+            # read_result opens the output with it, without a schema job
+            "schema": part.schema.jsonValue(),
         }
         _write_json(mdir / f"bucket_{_fp_tag(fp)}_{b}.json", manifest)
         return b
@@ -224,7 +226,7 @@ def _commit_snapshot(output_path: str, fingerprint: str, n_buckets: int) -> None
         p = mdir / f"bucket_{_fp_tag(fingerprint)}_{b}.json"
         m = json.loads(p.read_text())
         buckets.append({"bucket": b, "rows": m["rows"], "output": m["output"],
-                        "wall_s": m["wall_s"]})
+                        "wall_s": m["wall_s"], "schema": m.get("schema")})
     log_path = mdir / "snapshots.json"
     log = json.loads(log_path.read_text()) if log_path.exists() else []
     log.append(
@@ -263,6 +265,17 @@ def read_snapshot(output_path: str, snapshot_id: int | None = None) -> dict:
 def read_result(spark, output_path: str, snapshot_id: int | None = None) -> DataFrame:
     """Read exactly the bucket dirs the (latest or pinned) snapshot
     covers — a leftover part=* dir from a previous bucket layout is
-    never mixed in (snapshot isolation, the Iceberg read contract)."""
+    never mixed in (snapshot isolation, the Iceberg read contract).
+
+    The read uses the output schema every bucket recorded, so it starts
+    no Spark job; a snapshot whose buckets do not all record the same
+    schema (some committed before buckets recorded it) is read with the
+    schema inferred from its files."""
+    from pyspark.sql.types import StructType
+
     snap = read_snapshot(output_path, snapshot_id)
-    return spark.read.parquet(*[b["output"] for b in snap["buckets"]])
+    paths = [b["output"] for b in snap["buckets"]]
+    schemas = [b.get("schema") for b in snap["buckets"]]
+    if schemas[0] is not None and all(s == schemas[0] for s in schemas):
+        return spark.read.schema(StructType.fromJson(schemas[0])).parquet(*paths)
+    return spark.read.parquet(*paths)

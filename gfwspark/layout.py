@@ -189,7 +189,7 @@ def zorder_table(
     from gfwspark.sources import (
         _carry_sidecars,
         _read_schema_manifest,
-        _read_table_meta,
+        _table_extras,
         _write_schema_manifest,
         commit_rewrite,
         recover_rewrite,
@@ -233,14 +233,10 @@ def zorder_table(
     if bucketed:
         w = w.partitionBy("_bucket")
     w.parquet(tmp)
-    # manifest matches the read-back column set (partition column
-    # included) and carries the source table's extras (n_buckets) —
-    # same convention as upsert/compact manifests
-    src_meta = (_read_table_meta(path) or {}) if os.path.exists(path) else {}
-    _write_schema_manifest(
-        tmp, list(df.columns),
-        {k: v for k, v in src_meta.items() if k != "columns"},
-    )
+    # manifest records the schema just written (read order: `_bucket`
+    # last) and carries the source table's extras (n_buckets) — same
+    # convention as upsert/compact manifests
+    _write_schema_manifest(tmp, df.schema, _table_extras(path))
     # layout-independent sidecars (e.g. _entity_stats) survive the swap
     _carry_sidecars(path, tmp)
     commit_rewrite(path, tmp, old)

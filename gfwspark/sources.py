@@ -303,12 +303,12 @@ def temporal_split_embargo(
     )
 
 
-#: Sidecar recording the table's authoritative column set (Iceberg
-#: keeps this in its metadata tree; the parquet stand-in needs it too,
-#: because a plain `spark.read.parquet` infers the schema from ONE
-#: arbitrary file — on a mixed-schema table that silently drops the
-#: evolved columns from any rewrite).  Leading underscore keeps Spark's
-#: parquet reader from treating it as data.
+#: Sidecar recording the table's authoritative schema (Iceberg keeps
+#: this in its metadata tree; the parquet stand-in needs it too: a
+#: plain `spark.read.parquet` infers the schema from ONE arbitrary file
+#: — on a mixed-schema table that silently drops the evolved columns
+#: from any rewrite — and the inference itself is a Spark job).  Leading
+#: underscore keeps Spark's parquet reader from treating it as data.
 _SCHEMA_MANIFEST = "_table_schema.json"
 
 #: upsert_partitioned's staging directory, INSIDE the table: the
@@ -355,44 +355,75 @@ def _read_table_meta(path: str) -> dict | None:
 
 def _read_schema_manifest(path: str) -> list[str] | None:
     meta = _read_table_meta(path)
-    return None if meta is None else meta["columns"]
+    if meta is None:
+        return None
+    if "schema" in meta:
+        return T.StructType.fromJson(meta["schema"]).names
+    return meta["columns"]  # written before manifests recorded the schema
 
 
-def _write_schema_manifest(
-    path: str, columns: list[str], extra: dict | None = None
-) -> None:
+def _table_meta(schema: T.StructType, extra: dict | None = None) -> dict:
+    """The manifest of a table written with ``schema``: ``extra``
+    (table-level metadata beyond the schema; today n_buckets for the
+    upsert layout) plus the schema in the column order the read returns,
+    the `_bucket` partition column last.  (A parquet read makes every
+    type nullable, whatever the manifest says.)"""
+    fields = [f for f in schema if f.name != "_bucket"]
+    fields += [f for f in schema if f.name == "_bucket"]
+    return {**(extra or {}), "schema": T.StructType(fields).jsonValue()}
+
+
+def _write_table_meta(path: str, meta: dict) -> None:
     # tmp + atomic rename: a crash mid-dump must not leave a truncated
     # manifest (which would turn every later read_table into a
     # JSONDecodeError — the sidecar must be as crash-safe as the
-    # rewrite protocol it guards).  ``extra`` carries table-level
-    # metadata beyond the column set (today: n_buckets for the upsert
-    # layout); rewriters must pass the source table's extras through.
+    # rewrite protocol it guards)
     import json
     import os
 
     p = os.path.join(path, _SCHEMA_MANIFEST)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({**(extra or {}), "columns": sorted(columns)}, f)
-    os.replace(tmp, p)
+    with open(p + ".tmp", "w") as f:
+        json.dump(meta, f)
+    os.replace(p + ".tmp", p)
+
+
+def _table_extras(path: str) -> dict:
+    """The manifest entries of the table at ``path`` other than its
+    schema, for a rewrite to pass through."""
+    meta = _read_table_meta(path) or {}
+    return {k: v for k, v in meta.items() if k not in ("schema", "columns")}
+
+
+def _write_schema_manifest(
+    path: str, schema: T.StructType, extra: dict | None = None
+) -> None:
+    """Record the schema of the table just written at ``path``.  Every
+    writer passes the schema it wrote, never one carried over from the
+    old manifest; rewriters pass the source table's extras through."""
+    _write_table_meta(path, _table_meta(schema, extra))
 
 
 def read_table(
     spark: SparkSession, path: str, force_merge: bool = False
 ) -> DataFrame:
-    """Read a managed parquet table with its COMPLETE schema: if the
-    schema manifest says the cheap (first-file-schema) read is missing
-    columns — i.e. the table has evolved and the inferred schema came
-    from a pre-evolution file — re-read with mergeSchema.  The
-    footer-scan cost is paid only when the table actually holds mixed
-    schemas, never on the hot path.  ``force_merge`` skips the
-    manifest heuristic and always merges — for tables whose schema
-    history is unknown (no manifest)."""
+    """Read a managed parquet table with its COMPLETE schema.  When the
+    manifest records the schema (upsert_partitioned, compact_table and
+    layout.zorder_table each record the schema they wrote), the read
+    uses it: no file footer is opened and no Spark job
+    starts, and a file written before a column was added reads that
+    column as NULL, as mergeSchema would.  A table without a manifest,
+    or with a manifest that records only column names (written before
+    the schema was recorded), is read as before: the first-file schema,
+    re-read with mergeSchema if the manifest names columns it lacks.
+    ``force_merge`` skips the manifest and always merges — for tables
+    whose schema history is unknown (no manifest)."""
     if force_merge:
         return spark.read.option("mergeSchema", "true").parquet(path)
+    meta = _read_table_meta(path)
+    if meta is not None and "schema" in meta:
+        return spark.read.schema(T.StructType.fromJson(meta["schema"])).parquet(path)
     df = spark.read.parquet(path)
-    manifest = _read_schema_manifest(path)
-    if manifest is not None and not set(manifest) <= set(df.columns):
+    if meta is not None and not set(meta["columns"]) <= set(df.columns):
         df = spark.read.option("mergeSchema", "true").parquet(path)
     return df
 
@@ -414,7 +445,11 @@ def _upsert_commit(path: str) -> None:
         if os.path.exists(src):
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.replace(src, dst)
-    _write_schema_manifest(path, journal["columns"], journal["extra"])
+    # a journal written before the manifest recorded the schema lists
+    # the column names
+    _write_table_meta(path, journal.get("meta") or {
+        **journal["extra"], "columns": sorted(journal["columns"])
+    })
     for f in journal["deletes"]:
         d, name = os.path.split(f)
         for p in (f, os.path.join(d, f".{name}.crc")):
@@ -454,6 +489,7 @@ def upsert_partitioned(
     allow_schema_evolution: bool = False,
     extra_meta: dict | None = None,
     file_group: Column | None = None,
+    hit_file_col: str | None = None,
 ) -> dict:
     """MERGE-style upsert into a bucket-partitioned parquet table —
     the parquet stand-in for Iceberg MERGE INTO, with file-granular
@@ -465,23 +501,34 @@ def upsert_partitioned(
        localCheckpoint'ed once (batch-sized); every later step reads
        that checkpoint, and the touched buckets ride its job as an
        Observation;
-    2. one collect finds the hit files: the distinct
+    2. the hit files: by default one collect finds them, the distinct
        `_metadata.file_path` of stored rows in the touched buckets
        whose keys match a batch row (a key-columns-only scan; untouched
-       buckets are never read);
-    3. keep = the rows of the hit files only, minus the matched keys
-       (left_anti);
-    4. keep ∪ batch is shuffled to one task per (`_bucket`, group) and
-       written to the staging directory `path/_upsert_tmp/`, partitioned
-       by `_bucket` and by ``file_group``: each merge adds at most one
-       file per touched (bucket, group), and rows that differ on
-       ``file_group`` never share a file (the blocks table keeps open
-       tail blocks apart from sealed ones this way, so an append
-       rewrites only the open files);
+       buckets are never read).  A caller that already knows which
+       stored file each batch row replaces names that column in
+       ``hit_file_col`` (a `_metadata.file_path` value, NULL for a row
+       that replaces nothing): the hit files are then its distinct
+       values, observed on the checkpoint job, and no search runs.  The
+       column is not written.  The caller vouches that every stored row
+       sharing a key with the batch lies in a file the column names;
+    3. the rows of the hit files and the batch are shuffled together,
+       one task per `_bucket` (one shuffle, no join): there a batch row
+       replaces every stored row that shares its keys (a window over
+       (`_bucket`, keys); NULL keys match, as MERGE matching must).  A
+       key is matched within its bucket, so keys must determine the
+       entity (or be unique across entities), as they do for every
+       caller here;
+    4. the result is written to the staging directory
+       `path/_upsert_tmp/`, partitioned by `_bucket` and by
+       ``file_group``: each merge adds at most one file per touched
+       (bucket, group), and rows that differ on ``file_group`` never
+       share a file (the blocks table keeps open tail blocks apart from
+       sealed ones this way, so an append rewrites only the open files);
     5. commit through a journal in the staging directory (written tmp +
        os.replace, like the schema manifest): rename the staged files
        into `_bucket=k/` (named `g<group>-part-…`: the group directories
-       of one bucket reuse file names), write the schema manifest,
+       of one bucket reuse file names), write the schema manifest (the
+       schema of the rows written, which read_table then reads with),
        delete the hit files and their `.crc`, drop the staging
        directory.
 
@@ -514,6 +561,8 @@ def upsert_partitioned(
     from operator import and_
     from urllib.parse import unquote, urlparse
 
+    from pyspark.sql import Window as _W
+
     from gfwspark.checkpoint import bucket_of
     from gfwspark.util import observed_rows
 
@@ -530,28 +579,30 @@ def upsert_partitioned(
         )
     n_rows = F.count(F.lit(1)).alias("n")
     o_up, o_hit, o_keep = Observation(), Observation(), Observation()
-    b = (
+    observed = [n_rows, F.collect_set("_bucket").alias("touched")]
+    if hit_file_col is not None:
+        observed.append(F.collect_set(hit_file_col).alias("files"))
+    ckpt = (
         batch.withColumn("_bucket", bucket_of(entity, n_buckets))
-        .observe(o_up, n_rows, F.collect_set("_bucket").alias("touched"))
+        .observe(o_up, *observed)
         .localCheckpoint(eager=True)
     )
+    b = ckpt if hit_file_col is None else ckpt.drop(hit_file_col)
     upserted = observed_rows(o_up)
     touched = sorted(o_up.get["touched"]) if upserted else []
-    cols = b.columns
+    schema = b.schema
     out, hits = b, []
     if existed:
         # read_table consults the schema manifest: a table that holds
-        # mixed-schema files (a prior evolved upsert) is ALWAYS read
-        # with mergeSchema — otherwise Spark infers the schema from one
+        # mixed-schema files (a prior evolved upsert) is read with its
+        # recorded union schema (or, before the manifest recorded one,
+        # with mergeSchema) — otherwise Spark infers the schema from one
         # arbitrary file, and an old-schema draw would make this merge
         # silently rewrite the hit files without the evolved columns
-        # (permanent data loss).  The footer-scan cost is paid only on
-        # genuinely mixed tables; the hot path (uniform schema,
-        # streaming per-batch upserts) keeps the cheap first-file read.
-        # A table WITHOUT a manifest has an unknown schema history
-        # (created before the sidecar existed, or by a plain parquet
-        # write): force mergeSchema once — this upsert then writes the
-        # manifest and the cheap path resumes.
+        # (permanent data loss).  A table WITHOUT a manifest has an
+        # unknown schema history (created before the sidecar existed,
+        # or by a plain parquet write): force mergeSchema once — this
+        # upsert then writes the manifest and the cheap path resumes.
         table = read_table(
             spark, path, force_merge=_read_schema_manifest(path) is None
         )
@@ -565,57 +616,70 @@ def upsert_partitioned(
                 "null padding (Iceberg-style additive evolution), and read "
                 "the table with mergeSchema afterwards"
             )
-        cols = cols + sorted(lost_cols)
-        bk = b.select(*keys)
-
-        def matched(stored: DataFrame, how: str) -> DataFrame:
+        schema = table.unionByName(b, allowMissingColumns=True).schema
+        if hit_file_col is not None:
+            files = o_up.get["files"] if upserted else []
+        elif touched:
             # eqNullSafe: MERGE key matching must treat NULL = NULL as a
             # match, or null-keyed rows duplicate on every re-upsert
-            cond = reduce(and_, [stored[k].eqNullSafe(bk[k]) for k in keys])
-            return stored.join(bk, cond, how)
-
-        if touched:
+            bk = b.select(*keys)
             stored = table.filter(F.col("_bucket").isin(touched)).select(
                 *keys, F.col("_metadata.file_path").alias("_file")
             )
-            hits = sorted(
-                unquote(urlparse(r["_file"]).path)
-                for r in matched(stored, "left_semi")
+            cond = reduce(and_, [stored[k].eqNullSafe(bk[k]) for k in keys])
+            files = [
+                r["_file"] for r in stored.join(bk, cond, "left_semi")
                 .select("_file").distinct().collect()
-            )
+            ]
+        else:
+            files = []
+        hits = sorted(unquote(urlparse(f).path) for f in files)
         if hits:
             hit = (
                 spark.read.schema(table.schema).option("basePath", path)
                 .parquet(*hits).observe(o_hit, n_rows)
             )
-            keep = matched(hit, "left_anti").observe(o_keep, n_rows)
-            out = keep.unionByName(b, allowMissingColumns=allow_schema_evolution)
+            out = hit.withColumn("_new", F.lit(False)).unionByName(
+                b.withColumn("_new", F.lit(True)),
+                allowMissingColumns=allow_schema_evolution,
+            )
+    out = out.repartition("_bucket")
+    if hits:
+        # in its bucket's task, a batch row replaces every stored row of
+        # the hit files that shares its key (a window partition groups
+        # NULL with NULL, as MERGE key matching must, or null-keyed rows
+        # would duplicate on every re-upsert)
+        replaced = F.max("_new").over(_W.partitionBy("_bucket", *keys))
+        out = (
+            out.withColumn("_replaced", replaced)
+            .filter(F.col("_new") | ~F.col("_replaced"))
+            .observe(o_keep, F.count(F.when(~F.col("_new"), 1)).alias("n"))
+            .drop("_new", "_replaced")
+        )
     group = F.lit(0) if file_group is None else file_group
-    out.withColumn("_file_group", group).repartition(
+    out.withColumn("_file_group", group).write.partitionBy(
         "_bucket", "_file_group"
-    ).write.partitionBy("_bucket", "_file_group").parquet(staging)
+    ).parquet(staging)
     # every read of the batch is done: release its checkpoint blocks
     # now rather than at the next JVM GC
-    b._jdf.logicalPlan().rdd().unpersist(False)
+    ckpt._jdf.logicalPlan().rdd().unpersist(False)
     renames = []
     for src in glob.glob(os.path.join(glob.escape(staging), "*", "*", "*.parquet")):
         bucket_dir, group_dir, name = os.path.relpath(src, staging).split(os.sep)
         prefix = "g" + group_dir.split("=", 1)[1]
         renames.append((src, os.path.join(path, bucket_dir, f"{prefix}-{name}")))
-    extra = {"n_buckets": n_buckets, **(extra_meta or {})}
+    table_meta = _table_meta(schema, {"n_buckets": n_buckets, **(extra_meta or {})})
     if existed:
         # manifest BEFORE the commit: a crash mid-commit leaves mixed-
         # schema buckets, and the already-updated manifest makes
-        # read_table take the mergeSchema path (a manifest column not
-        # yet in any file only costs a conservative footer scan; the
-        # reverse ordering would let the cheap old-file read pass the
-        # manifest check and reopen the evolved-column loss)
-        _write_schema_manifest(path, cols, extra)
+        # read_table read with the union schema (a manifest column not
+        # yet in any file reads as NULL; the reverse ordering would let
+        # the old manifest's narrower schema hide the evolved column
+        # and reopen the evolved-column loss)
+        _write_table_meta(path, table_meta)
     journal = os.path.join(staging, _UPSERT_JOURNAL)
     with open(journal + ".tmp", "w") as f:
-        json.dump(
-            {"renames": renames, "deletes": hits, "columns": cols, "extra": extra}, f
-        )
+        json.dump({"renames": renames, "deletes": hits, "meta": table_meta}, f)
     os.replace(journal + ".tmp", journal)
     _upsert_commit(path)
     deleted = observed_rows(o_hit) - observed_rows(o_keep) if hits else 0
@@ -708,8 +772,7 @@ def compact_table(
         return n, b
 
     tmp, old = recover_rewrite(path, suffix="._compact")
-    src_meta = _read_table_meta(path) or {}
-    extra = {k: v for k, v in src_meta.items() if k != "columns"}
+    extra = _table_extras(path)
     files_before, total_bytes = _stats(path)
     n_out = max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
     # manifest-aware read: compacting an evolved (mixed-schema) table
@@ -744,7 +807,7 @@ def compact_table(
     if bucketed:
         w = w.partitionBy("_bucket")
     w.parquet(tmp)
-    _write_schema_manifest(tmp, out.columns, extra)
+    _write_schema_manifest(tmp, out.schema, extra)
     _carry_sidecars(path, tmp)
     commit_rewrite(path, tmp, old)
     files_after, _ = _stats(path)

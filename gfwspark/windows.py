@@ -26,9 +26,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 
-from gfwspark.util import entity_time_window
+from gfwspark.util import entity_time_window, observed_rows
 
 
 def with_lag_lead(
@@ -411,6 +411,8 @@ def _block_agg(rows: DataFrame, shift: int, entity: str) -> DataFrame:
     ordered ts_arr[/values] slices.  `_rn` is the 1-based GLOBAL row
     number (the incremental builder passes stored-count offsets).
     Without a `_val` column (the refs form) no values array is built.
+    Any other column of `rows` is kept per block as its first non-NULL
+    value (the incremental builder's stored file of an extended block).
 
     Values and timestamps are split on purpose: the assemble stage
     slices/flattens every covered block copy, but each window reads ts
@@ -418,16 +420,20 @@ def _block_agg(rows: DataFrame, shift: int, entity: str) -> DataFrame:
     through the W/shift block copies would double the bytes pushed
     through the DRAM-bound object aggregate."""
     vals = ["_val"] if "_val" in rows.columns else []
+    extra = [c for c in rows.columns if c not in (entity, "_ts", "_val", "_rn")]
     fields = ", ".join(["_rn", *vals, "_ts"])
     return (
-        rows.withColumn("_blk", F.floor((F.col("_rn") - 1) / shift))
-        .groupBy(entity, "_blk")
-        .agg(F.expr(f"sort_array(collect_list(struct({fields})))").alias("_s"))
+        rows.groupBy(entity, F.floor((F.col("_rn") - 1) / shift).alias("_blk"))
+        .agg(
+            F.expr(f"sort_array(collect_list(struct({fields})))").alias("_s"),
+            *[F.first(c, ignorenulls=True).alias(c) for c in extra],
+        )
         .select(
             entity,
             F.col("_blk").alias("block_id"),
             *[F.expr(f"transform(_s, x -> x.{c})").alias("values") for c in vals],
             F.expr("transform(_s, x -> x._ts)").alias("ts_arr"),
+            *extra,
         )
     )
 
@@ -452,6 +458,20 @@ def append_stride_blocks(
     blocks after it — per batch that is O(entities_in_batch x
     (1 + new_rows/shift)) block rows, not the table.
 
+    Everything the append needs of the stored table comes from each
+    entity's last block, read in ONE per-entity window over the stored
+    blocks and the new rows together (one shuffle, no join): its row
+    count so far is block_id*shift + size(ts_arr) (every earlier block
+    is full; the largest such count picks the last block), its max ts
+    the last element of that block's ts_arr, and, when it is open
+    (shorter than shift), its elements rejoin the new rows, so the
+    block a new row lands in is rebuilt old prefix first.  Only open
+    blocks carry their arrays through the shuffle.  No entity is ever
+    matched by equality, so a NULL entity is a series like any other.
+    Columns of `blocks` beyond (entity, block_id, values, ts_arr) —
+    e.g. the stored file of each block — ride along from the extended
+    block onto its changed row, and are NULL on a new block.
+
     ``changed_only=True`` returns just those touched block rows — the
     MERGE payload for sources.upsert_partitioned / a foreachBatch CDC
     sink over the persisted blocks table (keys=[entity, block_id]).
@@ -471,18 +491,30 @@ def append_stride_blocks(
         late data is dropped too; use "error" if that must be loud.
       - "ignore": skip the check (caller guarantees monotonicity).
     """
-    stats = blocks.groupBy(entity).agg(
-        F.sum(F.size("values")).alias("_n_old"),
-        F.max(F.element_at("ts_arr", F.size("ts_arr"))).alias("_max_ts"),
+    riders = [c for c in blocks.columns if c not in (entity, "block_id", "values", "ts_arr")]
+    size = F.size("ts_arr")
+    stored = blocks.select(
+        entity,
+        (F.col("block_id") * shift + size).alias("_end"),  # rows so far
+        F.element_at("ts_arr", -1).alias("_last"),
+        # only an open (partial) block can be extended: only it ships
+        # its arrays through the shuffle
+        F.when(size < shift, F.struct("block_id", "values", "ts_arr", *riders))
+        .alias("_open"),
     )
-    new = (
+    is_new = F.col("_end").isNull()
+    per_entity = Window.partitionBy(entity)
+    both = (
         _block_rows(new_rows, feature_col, entity, ts)
-        .join(F.broadcast(stats), entity, "left")
-        .withColumn("_n_old", F.coalesce("_n_old", F.lit(0)))
+        .unionByName(stored, allowMissingColumns=True)
+        .withColumns({
+            "_n_old": F.coalesce(F.max("_end").over(per_entity), F.lit(0)),
+            "_max_ts": F.max("_last").over(per_entity),
+        })
     )
-    late = F.col("_max_ts").isNotNull() & (F.col("_ts") <= F.col("_max_ts"))
+    late = is_new & F.col("_max_ts").isNotNull() & (F.col("_ts") <= F.col("_max_ts"))
     if on_late == "error":
-        bad = new.filter(late).count()
+        bad = both.filter(late).count()
         if bad:
             raise ValueError(
                 f"append_stride_blocks: {bad} new rows are not strictly "
@@ -491,35 +523,48 @@ def append_stride_blocks(
                 "requires a rebuild of the affected entities"
             )
     elif on_late == "drop":
-        new = new.filter(~late)
+        both = both.filter(~late)
     elif on_late != "ignore":
         raise ValueError(f"on_late must be error|drop|ignore, got {on_late!r}")
-    w_order = Window.partitionBy(entity).orderBy("_ts")
-    new_blocks = _block_agg(
-        new.withColumn("_rn", F.col("_n_old") + F.row_number().over(w_order)),
-        shift,
-        entity,
+    # the new rows, numbered on from the stored count, and the elements
+    # of the open last block of each entity that has new rows: only
+    # that block can share an id with a new block (append-at-end), and
+    # rebuilding it from its elements puts the old prefix first
+    extended = (
+        (F.col("_end") == F.col("_n_old")) & F.col("_open").isNotNull()
+        & F.max(is_new).over(per_entity)
     )
-    # only each entity's final stored block can overlap a new block id
-    # (append-at-end); merge by array concat, old prefix first
-    n, b = new_blocks.alias("n"), blocks.alias("b")
-    merged = (
-        n.join(b, [entity, "block_id"], "left")
-        .select(
-            entity,
-            "block_id",
-            F.when(
-                F.col("b.values").isNull(), F.col("n.values")
-            ).otherwise(F.concat("b.values", "n.values")).alias("values"),
-            F.when(
-                F.col("b.ts_arr").isNull(), F.col("n.ts_arr")
-            ).otherwise(F.concat("b.ts_arr", "n.ts_arr")).alias("ts_arr"),
-        )
+    old = F.transform(
+        "_open.ts_arr",
+        lambda t, i: F.struct(
+            (F.col("_open.block_id") * shift + i + 1).alias("_rn"),
+            F.col("_open.values")[i].alias("_val"),
+            t.alias("_ts"),
+            *[F.col(f"_open.{c}").alias(c) for c in riders],
+        ),
     )
+    new = F.array(F.struct(
+        "_rn", "_val", "_ts",
+        *[F.lit(None).cast(blocks.schema[c].dataType).alias(c) for c in riders],
+    ))
+    rows = (
+        both.withColumns({
+            "_x": F.when(extended, old),
+            "_rn": F.col("_n_old") + F.row_number().over(
+                Window.partitionBy(entity, is_new).orderBy("_ts")
+            ),
+        })
+        .filter(is_new | F.col("_x").isNotNull())
+        .select(entity, F.inline(F.coalesce("_x", new)))
+    )
+    merged = _block_agg(rows, shift, entity)
     if changed_only:
         return merged
+    keys = merged.select(F.col(entity).alias("_e"), F.col("block_id").alias("_k"))
     untouched = blocks.join(
-        new_blocks.select(entity, "block_id"), [entity, "block_id"], "left_anti"
+        keys,
+        F.col(entity).eqNullSafe(F.col("_e")) & (F.col("block_id") == F.col("_k")),
+        "left_anti",
     )
     return untouched.unionByName(merged)
 
@@ -537,11 +582,24 @@ def merge_append_into_blocks_table(
 ) -> dict:
     """The ONE merge step behind both CDC surfaces of the at-rest
     window layout (streaming.stream_stride_blocks_sink per micro-batch,
-    jobs/blocks_maintain_job.py --mode append per run): prune the
-    stored table to the batch's buckets (per-call cost tracks batch
-    size, not table size), merge via append_stride_blocks
-    (changed_only), and upsert the touched block rows on
-    (entity, block_id).  A missing table bootstraps from the batch.
+    jobs/blocks_maintain_job.py --mode append per run).  A missing
+    table bootstraps from the batch (stride_blocks).  An append:
+
+    1. checkpoints the batch's (entity, ts, feature) columns once; the
+       buckets it touches ride that job as an Observation;
+    2. reads the stored blocks of those buckets (sources.read_table: the
+       manifest's schema, no schema job; per-call cost tracks batch
+       size, not table size), each with its `_metadata.file_path`;
+    3. merges via append_stride_blocks (changed_only): each entity's
+       last block gives its row count, its max ts and the block to
+       extend, and the extended block's file rides onto its changed row;
+    4. upserts the changed block rows on (entity, block_id), naming that
+       file column as the upsert's ``hit_file_col``: an append changes
+       no stored row but the last block of an entity, so the files
+       holding the extended last blocks are exactly the files the
+       upsert rewrites, and no key search runs;
+    5. releases the batch checkpoint.
+
     The upsert's file group is "open block" (size(ts_arr) < shift, each
     entity's last, partial block): open blocks live in files apart from
     sealed ones, and an append at the end of the series changes only
@@ -582,30 +640,40 @@ def merge_append_into_blocks_table(
                     "window reconstruction; rebuild the table or pass the "
                     "recorded value"
                 )
-    if os.path.exists(path):
-        touched = [
-            r["_b"]
-            for r in batch.select(
-                bucket_of(entity, n_buckets).alias("_b")
-            ).distinct().collect()
-        ]
-        blocks = (
-            sources.read_table(spark, path)
-            .filter(F.col("_bucket").isin(touched))
-            .drop("_bucket")
-        )
-        changed = append_stride_blocks(
-            blocks, batch, feature_col, shift,
-            entity=entity, ts=ts, changed_only=True, on_late=on_late,
-        )
-    else:
-        changed = stride_blocks(batch, feature_col, shift, entity=entity, ts=ts)
-    return sources.upsert_partitioned(
-        spark, changed, path, keys=[entity, "block_id"],
-        entity=entity, n_buckets=n_buckets,
+    upsert = dict(
+        keys=[entity, "block_id"], entity=entity, n_buckets=n_buckets,
         extra_meta={"shift": shift, "feature_cols": feature_cols},
         file_group=F.size("ts_arr") < shift,
     )
+    if not os.path.exists(path):
+        changed = stride_blocks(batch, feature_col, shift, entity=entity, ts=ts)
+        return sources.upsert_partitioned(spark, changed, path, **upsert)
+    seen = Observation()
+    rows = (
+        batch.select(entity, ts, *feature_cols)
+        .observe(
+            seen, F.count(F.lit(1)).alias("n"),
+            F.collect_set(bucket_of(entity, n_buckets)).alias("touched"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    try:
+        touched = seen.get["touched"] if observed_rows(seen) else []
+        blocks = (
+            sources.read_table(spark, path)
+            .filter(F.col("_bucket").isin(touched))
+            .withColumn("_file", F.col("_metadata.file_path"))
+            .drop("_bucket")
+        )
+        changed = append_stride_blocks(
+            blocks, rows, feature_col, shift,
+            entity=entity, ts=ts, changed_only=True, on_late=on_late,
+        )
+        return sources.upsert_partitioned(
+            spark, changed, path, hit_file_col="_file", **upsert
+        )
+    finally:
+        rows._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def sliding_feature_window_refs(

@@ -20,6 +20,30 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def jobs_started(spark):
+    """``jobs_started(build)`` -> (build()'s result, the number of Spark
+    jobs it started), counted by a job group of its own once the
+    listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(build):
+        group = f"jobprobe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs started by one call")
+        try:
+            out = build()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

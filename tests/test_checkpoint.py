@@ -283,3 +283,29 @@ def test_at_most_four_buckets_in_flight(spark, tmp_path):
     summary = checkpoint.run_resumable(df, record, str(tmp_path / "k"), n_buckets=8)
     assert summary["completed"] == list(range(8))
     assert 1 <= len(threads) <= 4
+
+
+def test_read_result_starts_no_job(spark, tmp_path, jobs_started):
+    """read_result opens a committed snapshot with the output schema its
+    buckets recorded: no schema job, and the rows and schema of the
+    inferred read.  A snapshot whose buckets recorded no schema (written
+    before they did) still reads, by inference."""
+    df = tables.synthesize_image_caption(spark, n_entities=8, rows_per_entity=6)
+    out = str(tmp_path / "r")
+    checkpoint.run_resumable(df, _transform, out, n_buckets=4)
+    back, jobs = jobs_started(lambda: checkpoint.read_result(spark, out))
+    assert jobs == 0
+    paths = [b["output"] for b in checkpoint.read_snapshot(out)["buckets"]]
+    inferred = spark.read.parquet(*paths)
+    assert back.schema == inferred.schema
+    assert back.exceptAll(inferred).count() == 0
+    assert inferred.exceptAll(back).count() == 0
+
+    log = tmp_path / "r" / "_manifests" / "snapshots.json"
+    snaps = json.loads(log.read_text())
+    for b in snaps[-1]["buckets"]:
+        del b["schema"]
+    log.write_text(json.dumps(snaps))
+    old, jobs = jobs_started(lambda: checkpoint.read_result(spark, out))
+    assert jobs > 0
+    assert old.schema == inferred.schema and old.count() == inferred.count()

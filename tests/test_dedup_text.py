@@ -857,25 +857,7 @@ def test_jaccard_verify_raw_stream_equals_distinct(spark):
     assert got_raw  # non-vacuous: (1,2) share most shingles
 
 
-def _jobs_started(spark, build):
-    """(build()'s result, the number of Spark jobs it started), counted
-    by a job group of its own once the listener bus has drained."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobprobe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "jobs started by a plan build")
-    try:
-        out = build()
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description",
-                     "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_explode_parallelism_starts_no_job(spark):
+def test_explode_parallelism_starts_no_job(spark, jobs_started):
     """Sizing an explode's input never runs its plan: over a shuffle
     (a groupBy output, which an adaptive plan would have to execute to
     report its partition count) the call starts no job and returns the
@@ -887,19 +869,19 @@ def test_explode_parallelism_starts_no_job(spark):
         spark.range(0, 5000).withColumn("g", F.col("id") % 97)
         .groupBy("g").agg(F.count(F.lit(1)).alias("n"))
     )
-    out, jobs = _jobs_started(spark, lambda: text.ensure_explode_parallelism(agg))
+    out, jobs = jobs_started(lambda: text.ensure_explode_parallelism(agg))
     assert jobs == 0
     assert out.rdd.getNumPartitions() == target
 
 
-def test_lazy_prepare_corpus_build_starts_no_job(spark):
+def test_lazy_prepare_corpus_build_starts_no_job(spark, jobs_started):
     """Building the lazy corpus-prep plan (materialize_survivors=False)
     starts no Spark job: every explode operator sizes its input
     without reading a partition count."""
-    from gfwspark import corpus
+    from gfwspark import corpus, queries  # noqa: F401  (registry init order)
     from gfwspark.queries_ml import _corpus_prep_inputs
     from tests.conftest import SF_SMALL
 
     d, bench = _corpus_prep_inputs(spark, SF_SMALL)
-    _, jobs = _jobs_started(spark, lambda: corpus.prepare_corpus(d, bench))
+    _, jobs = jobs_started(lambda: corpus.prepare_corpus(d, bench))
     assert jobs == 0

@@ -584,3 +584,124 @@ def test_blocks_merge_recovers_a_commit_cut_short(spark, tmp_path, monkeypatch):
     got = spark.read.parquet(tbl).select(*want.columns)
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def _blocks_equal_rebuild(spark, tbl, allrows, shift):
+    """The blocks table at ``tbl`` holds exactly stride_blocks(allrows)."""
+    from gfwspark import sources, windows
+
+    want = windows.stride_blocks(allrows, "v", shift)
+    got = sources.read_table(spark, tbl).select(*want.columns)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_blocks_append_extends_a_null_entity_series(spark, tmp_path):
+    """A NULL entity is a series like any other: appending to it extends
+    its last block instead of overwriting its first (the stored blocks
+    used to be matched on plain entity equality, so NULL's rows were
+    numbered from 1 again)."""
+    from gfwspark import windows
+
+    tbl = str(tmp_path / "blocks")
+    boot = _series(spark, {None: (0, 4), "a": (0, 4)})
+    more = _series(spark, {None: (100, 2), "a": (100, 2)})
+    for batch in (boot, more):
+        windows.merge_append_into_blocks_table(spark, batch, tbl, "v", 3, n_buckets=2)
+    _blocks_equal_rebuild(spark, tbl, boot.unionByName(more), 3)
+
+
+def test_blocks_append_starts_at_most_8_jobs(spark, tmp_path, jobs_started):
+    """An append into an existing blocks table runs in at most 8 Spark
+    jobs: no schema inference, no separate collect of the touched
+    buckets, no search for the files it rewrites."""
+    from gfwspark import windows
+
+    tbl = str(tmp_path / "blocks")
+    windows.merge_append_into_blocks_table(
+        spark, _series(spark, {f"e{k}": (0, 50 + 7 * k) for k in range(20)}),
+        tbl, "v", 8,
+    )
+    batch = _series(spark, {f"e{k}": (1000, 5 + k) for k in range(0, 20, 3)})
+    r, jobs = jobs_started(
+        lambda: windows.merge_append_into_blocks_table(spark, batch, tbl, "v", 8)
+    )
+    assert r["upserted"] > 0
+    assert jobs <= 8, jobs
+
+
+def test_blocks_append_rewrites_the_files_the_key_search_finds(
+    spark, tmp_path, monkeypatch
+):
+    """The files an append rewrites, named by the changed rows
+    themselves, are the files the upsert's generic key search finds for
+    the same rows: each upsert of the merge is replayed without
+    ``hit_file_col`` on a copy of the table, and both delete the same
+    files.  The appends cover a tail that extends, a tail exactly
+    `shift` long (sealed: its file is not hit), a brand-new entity, a
+    NULL entity, a batch whose rows are all late under on_late="drop",
+    and on_late="error" (a late row raises and changes nothing).  After
+    each append the table equals stride_blocks over all rows."""
+    import os
+    import shutil
+
+    import pytest
+
+    from gfwspark import sources, windows
+
+    S = 4
+    tbl = str(tmp_path / "blocks")
+    real_upsert = sources.upsert_partitioned
+    rewritten = []
+
+    def data_files(root):
+        return {
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _, fs in os.walk(root) if "/_upsert_tmp" not in d
+            for f in fs if f.endswith(".parquet")
+        }
+
+    def replayed(spark_, batch, path, hit_file_col=None, **kw):
+        if hit_file_col is None:  # the bootstrap
+            return real_upsert(spark_, batch, path, **kw)
+        ref = str(tmp_path / "ref")
+        shutil.rmtree(ref, ignore_errors=True)
+        shutil.copytree(path, ref)
+        before = data_files(path)
+        real_upsert(spark_, batch.drop(hit_file_col), ref, **kw)
+        r = real_upsert(spark_, batch, path, hit_file_col=hit_file_col, **kw)
+        rewritten.append(before - data_files(path))
+        assert rewritten[-1] == before - data_files(ref)
+        return r
+
+    monkeypatch.setattr(sources, "upsert_partitioned", replayed)
+    boot = _series(spark, {"e0": (0, 6), "e1": (0, 8), "e2": (0, 3), None: (0, 5)})
+    appends = [  # (batch, on_late, adds rows)
+        (_series(spark, {"e0": (100, 3), "e1": (100, 2), "new": (100, 5),
+                         None: (100, 2)}), "drop", True),
+        # every row already applied
+        (_series(spark, {"e0": (0, 6), "e2": (1, 2), None: (101, 1)}), "drop", False),
+        (_series(spark, {"e2": (200, 6), "e1": (200, 1), None: (200, 3)}), "error", True),
+    ]
+    windows.merge_append_into_blocks_table(spark, boot, tbl, "v", S, n_buckets=2)
+    allrows = boot
+    for batch, on_late, adds in appends:
+        windows.merge_append_into_blocks_table(
+            spark, batch, tbl, "v", S, n_buckets=2, on_late=on_late
+        )
+        if adds:
+            allrows = allrows.unionByName(batch)
+        _blocks_equal_rebuild(spark, tbl, allrows, S)
+    assert rewritten[0] and not rewritten[1] and rewritten[2]
+    # only open tails are ever rewritten: e1's sealed tail was not hit
+    assert all(
+        os.path.basename(f).startswith("gtrue-") for fs in rewritten for f in fs
+    )
+    before = data_files(tbl)
+    with pytest.raises(ValueError, match="not strictly"):
+        windows.merge_append_into_blocks_table(
+            spark, _series(spark, {"e2": (0, 1)}), tbl, "v", S, n_buckets=2,
+            on_late="error",
+        )
+    assert data_files(tbl) == before
+    _blocks_equal_rebuild(spark, tbl, allrows, S)

@@ -684,7 +684,7 @@ def test_zorder_refuses_schema_dropping_rewrite(spark, tmp_path):
     spark.createDataFrame(
         [(1, 10.0, "k")], "event_id long, value double, extra string"
     ).write.parquet(path)
-    sources._write_schema_manifest(path, ["event_id", "value", "extra"])
+    sources._write_schema_manifest(path, spark.read.parquet(path).schema)
     narrow = spark.read.parquet(path).drop("extra")
     with pytest.raises(ValueError, match="manifest columns"):
         layout.zorder_table(narrow, path, ["event_id", "value"], bits=2)
@@ -767,3 +767,63 @@ def test_upsert_rejects_mismatched_bucket_count(spark, tmp_path):
     # and compaction preserves the recorded layout metadata
     sources.compact_table(spark, path, target_mb=1024)
     assert sources._read_table_meta(path)["n_buckets"] == 32
+
+
+def test_read_table_starts_no_job(spark, tmp_path, jobs_started):
+    """A managed table opens with the schema its manifest records: no
+    schema-inference job, and the same schema and rows as the inferred
+    read."""
+    path = str(tmp_path / "tbl")
+    df = spark.createDataFrame(
+        [(f"e{i}", i, [float(i)]) for i in range(20)],
+        "image_id string, seq int, vals array<double>",
+    )
+    sources.upsert_partitioned(spark, df, path, keys=["image_id"], n_buckets=4)
+    back, jobs = jobs_started(lambda: sources.read_table(spark, path))
+    assert jobs == 0
+    inferred = spark.read.parquet(path)
+    assert back.schema == inferred.schema
+    assert back.exceptAll(inferred).count() == 0
+    assert inferred.exceptAll(back).count() == 0
+
+
+def test_read_table_matches_merge_schema_after_evolution_and_rewrites(
+    spark, tmp_path, jobs_started
+):
+    """An evolved table (allow_schema_evolution=True), then the same
+    table after compact_table and after zorder_table, reads back with
+    the columns, types and values of a mergeSchema read, and without a
+    Spark job."""
+    from gfwspark import layout
+
+    path = str(tmp_path / "evo")
+    base = spark.createDataFrame(
+        [(f"e{i}", i, float(i)) for i in range(12)],
+        "image_id string, seq int, val double",
+    )
+    sources.upsert_partitioned(spark, base, path, keys=["image_id"], n_buckets=4)
+    evolve = spark.createDataFrame(
+        [("e0", 100, 0.5, "x", 7), ("new", 101, 1.5, None, 8)],
+        "image_id string, seq int, val double, tag string, n long",
+    )
+    sources.upsert_partitioned(
+        spark, evolve, path, keys=["image_id"], n_buckets=4,
+        allow_schema_evolution=True,
+    )
+
+    def same_as_merge_schema():
+        got, jobs = jobs_started(lambda: sources.read_table(spark, path))
+        assert jobs == 0
+        want = spark.read.option("mergeSchema", "true").parquet(path)
+        assert dict(got.dtypes) == dict(want.dtypes)
+        cols = sorted(want.columns)
+        assert sorted(map(tuple, got.select(*cols).collect()), key=repr) == sorted(
+            map(tuple, want.select(*cols).collect()), key=repr
+        )
+        assert got.count() == 13
+
+    same_as_merge_schema()
+    sources.compact_table(spark, path, target_mb=1024)
+    same_as_merge_schema()
+    layout.zorder_table(sources.read_table(spark, path), path, ["seq"], bits=2)
+    same_as_merge_schema()
