@@ -41,7 +41,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, Window
 
 from gfwspark import dedup, sources, text
-from gfwspark.util import observed_rows
+from gfwspark.util import observed_rows, release
 
 #: (stage_idx, stage_name) in pipeline order — the audit vocabulary.
 STAGES: tuple[tuple[int, str], ...] = (
@@ -101,7 +101,7 @@ def _pipeline(
     d = text.with_repetition_stats(docs, text_col, ns=(2,))
     d = _counted(text.with_quality_score(d, text_col))
     if materialize_survivors:
-        d = d.localCheckpoint(eager=True)
+        gate = d = d.localCheckpoint(eager=True)
     d = _counted(d.filter(F.col("quality") >= quality_min))
     d = _counted(d.filter(F.col("dup_2gram_frac") <= max_dup_2gram))
     # 3: exact dedup — keep the smallest id per content hash
@@ -112,8 +112,10 @@ def _pipeline(
         .drop("_rn")
     )
     if materialize_survivors:
-        # stage-3 output feeds 4 branches
+        # stage-3 output feeds 4 branches; nothing reads the gate frame
+        # once it is materialized, so its blocks go now
         d = d.localCheckpoint(eager=True)
+        release(gate)
     # 4: MinHash-LSH near dedup (exact-Jaccard verified) — drop doc_b.
     # Staged rather than via dedup.minhash_near_dups so the shingle
     # frame can share the materialization point: both consumers
@@ -185,10 +187,12 @@ def prepare_corpus(
     lazily each branch re-runs scan + gates + dedup window.  True
     localCheckpoints the gate frame, the survivor frame and the shingle
     stream once each (the survivor checkpoint alone buys back three
-    full recomputes).  Every production caller passes True: the
-    ``llm_corpus_prep`` query, ``jobs/corpus_prep_job.py`` and the
-    benchmark; the lazy default serves tests that compare the two
-    forms or count the jobs a plan build starts."""
+    full recomputes), and releases the gate frame's blocks once the
+    survivors are materialized: the result holds 2 checkpoints.  Every
+    production caller passes True: the ``llm_corpus_prep`` query,
+    ``jobs/corpus_prep_job.py`` and the benchmark; the lazy default
+    serves tests that compare the two forms or count the jobs a plan
+    build starts."""
     out, _ = _pipeline(
         docs, benchmark, id_col, text_col, entity, ts, quality_min,
         max_dup_2gram, near_dup_threshold, decontam_n, horizon_s,

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 
 from gfwspark.text import ensure_explode_parallelism as _ensure_explode_parallelism
 from gfwspark.text import token_hash32, tokens_col
+from gfwspark.util import release
 
 # MinHash permutation parameters: h_i(x) = (A_i * x + B_i) mod P.
 # P = 2^31-1 (prime); A,B fixed (seeded offline, public constants) so
@@ -456,7 +457,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         # the last round's labels are read no more: release them now
-        held._jdf.logicalPlan().rdd().unpersist(False)
+        release(held)
         held = new
         # change detection off the already-checkpointed frame: a cheap
         # filter+count, not a second full join over all nodes
@@ -464,7 +465,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
         labels = new.drop("_old")
         if n_changed == 0:
             break
-    edges._jdf.logicalPlan().rdd().unpersist(False)
+    release(edges)
     if n_changed != 0:
         raise RuntimeError(
             f"dup_clusters: not converged after {max_iter} rounds "

@@ -174,36 +174,32 @@ def zorder_table(
     every dimension).  Returns the per-column boundaries for the
     caller's lineage record.
 
-    Crash-safe and in-place-capable: the rewrite lands in a temp
-    sibling and atomically swaps in (sources.recover_rewrite /
-    commit_rewrite — compact_table's protocol), so `df` MAY read from
-    `path` itself (the natural OPTIMIZE ZORDER call), and a crash
-    mid-write never destroys the prior contents.  For a table that has
-    EVOLVED (mixed-schema files + sidecar manifest), build `df` with
-    sources.read_table — a plain spark.read.parquet infers the schema
-    from one arbitrary file; the guard below refuses to rewrite with
-    fewer columns than the manifest records (which would permanently
-    drop the evolved columns' values)."""
-    import os
+    In-place-capable and crash-safe: the rewrite replaces every data
+    file of `path` in one journal commit (sources._staged_write, the
+    upsert's commit), so `df` MAY read from `path` itself (the natural
+    OPTIMIZE ZORDER call).  A crash before the journal leaves every
+    data file as it was; after it, the next writer's
+    sources.recover_upsert rolls the commit forward, and until then a
+    reader sees old and new files side by side (as after an upsert cut
+    short), so after a crash build `df` once recover_upsert has run.
+    Sidecar directories (`_entity_stats`) stay where they are, and the
+    manifest keeps the table's other entries (n_buckets).  For a table
+    that has EVOLVED (mixed-schema files + sidecar manifest),
+    build `df` with sources.read_table — a plain spark.read.parquet
+    infers the schema from one arbitrary file; the guard below refuses
+    to rewrite with fewer columns than the manifest records (which
+    would permanently drop the evolved columns' values)."""
+    from gfwspark.sources import _read_schema_manifest, _staged_write, recover_upsert
 
-    from gfwspark.sources import (
-        _carry_sidecars,
-        _read_schema_manifest,
-        _table_extras,
-        _write_schema_manifest,
-        commit_rewrite,
-        recover_rewrite,
-    )
-
-    if os.path.exists(path):
-        man = _read_schema_manifest(path)
-        if man is not None and not set(man) <= set(df.columns):
-            raise ValueError(
-                f"zorder_table input is missing manifest columns "
-                f"{sorted(set(man) - set(df.columns))} recorded for {path}; "
-                "read the table via sources.read_table so the rewrite "
-                "keeps the evolved schema"
-            )
+    recover_upsert(path)
+    man = _read_schema_manifest(path)
+    if man is not None and not set(man) <= set(df.columns):
+        raise ValueError(
+            f"zorder_table input is missing manifest columns "
+            f"{sorted(set(man) - set(df.columns))} recorded for {path}; "
+            "read the table via sources.read_table so the rewrite "
+            "keeps the evolved schema"
+        )
     n_buckets = 1 << bits
     probs = [i / n_buckets for i in range(1, n_buckets)]
     # ONE exact-quantile pass for all columns (approxQuantile takes a
@@ -213,7 +209,6 @@ def zorder_table(
     buckets = [zorder_bucket(c, bounds[c]) for c in cols]
     keyed = df.withColumn("_zkey", zorder_key(buckets, bits))
     n_files = n_files or max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    tmp, old = recover_rewrite(path, suffix="._zorder")
     # a bucket-partitioned upsert table must KEEP its _bucket=k/ dirs
     # (a flat rewrite collides with the next upsert's partition dirs —
     # same hazard compact_table guards).  Z-cluster WITHIN each bucket:
@@ -229,17 +224,7 @@ def zorder_table(
         out = keyed.repartitionByRange(n_files, "_zkey").sortWithinPartitions(
             "_zkey"
         )
-    w = out.drop("_zkey").write.mode("overwrite")
-    if bucketed:
-        w = w.partitionBy("_bucket")
-    w.parquet(tmp)
-    # manifest records the schema just written (read order: `_bucket`
-    # last) and carries the source table's extras (n_buckets) — same
-    # convention as upsert/compact manifests
-    _write_schema_manifest(tmp, df.schema, _table_extras(path))
-    # layout-independent sidecars (e.g. _entity_stats) survive the swap
-    _carry_sidecars(path, tmp)
-    commit_rewrite(path, tmp, old)
+    _staged_write(path, out.drop("_zkey"))
     return {"boundaries": bounds, "n_files": n_files}
 
 

@@ -311,35 +311,16 @@ def temporal_split_embargo(
 #: underscore keeps Spark's parquet reader from treating it as data.
 _SCHEMA_MANIFEST = "_table_schema.json"
 
-#: upsert_partitioned's staging directory, INSIDE the table: the
-#: leading underscore hides it from Spark's file index (and from
-#: compact_table's sizing), and removing the table removes it too.
+#: The staging directory of every write to a managed table
+#: (_staged_write), INSIDE the table: the leading underscore hides it
+#: from Spark's file index (and from _data_files), and removing the
+#: table removes it too.
 _UPSERT_STAGING = "_upsert_tmp"
 
-#: upsert_partitioned's commit journal, kept in its staging directory:
-#: the staged files to rename into the table, the hit files to delete
-#: and the schema manifest.  Present only once the staged write is
-#: complete.
+#: The commit journal, kept in the staging directory: the staged files
+#: to rename into the table, the data files to delete and the schema
+#: manifest.  Present only once the staged write is complete.
 _UPSERT_JOURNAL = "_journal.json"
-
-#: Sidecar SUBDIRS carried through layout rewrites (compact/zorder):
-#: their content is row-for-row independent of file layout, so a
-#: rewrite that drops them silently deletes a still-valid artifact
-#: (read_entity_stats then raises and the CDC sink re-bootstraps with
-#: a full-table scan).
-_CARRIED_SIDECARS = ("_entity_stats",)
-
-
-def _carry_sidecars(src: str, dst: str) -> None:
-    """Copy layout-independent sidecar dirs from the live table into a
-    rewrite's tmp dir before the atomic swap."""
-    import os
-    import shutil
-
-    for name in _CARRIED_SIDECARS:
-        p = os.path.join(src, name)
-        if os.path.isdir(p):
-            shutil.copytree(p, os.path.join(dst, name), dirs_exist_ok=True)
 
 
 def _read_table_meta(path: str) -> dict | None:
@@ -394,15 +375,6 @@ def _table_extras(path: str) -> dict:
     return {k: v for k, v in meta.items() if k not in ("schema", "columns")}
 
 
-def _write_schema_manifest(
-    path: str, schema: T.StructType, extra: dict | None = None
-) -> None:
-    """Record the schema of the table just written at ``path``.  Every
-    writer passes the schema it wrote, never one carried over from the
-    old manifest; rewriters pass the source table's extras through."""
-    _write_table_meta(path, _table_meta(schema, extra))
-
-
 def read_table(
     spark: SparkSession, path: str, force_merge: bool = False
 ) -> DataFrame:
@@ -428,12 +400,25 @@ def read_table(
     return df
 
 
+def _data_files(path: str) -> list[str]:
+    """The data files of the table at ``path``: its `.parquet` files
+    outside sidecar (`_entity_stats`) and staging directories, which
+    start with `_` or `.`; partition directories keep their `=`."""
+    import os
+
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if "=" in d or not d.startswith(("_", "."))]
+        out += [os.path.join(root, f) for f in files if f.endswith(".parquet")]
+    return out
+
+
 def _upsert_commit(path: str) -> None:
-    """Carry out the commit journal of the upsert staged in ``path``
-    (upsert_partitioned step 5).  Every step is idempotent, so a commit
-    cut short anywhere is finished by running this again: a staged file
-    already renamed is skipped, a hit file already deleted too, and the
-    journal leaves last, with the staging directory."""
+    """Carry out the commit journal staged in ``path`` (_staged_write
+    step 4).  Every step is idempotent, so a commit cut short anywhere
+    is finished by running this again: a staged file already renamed
+    is skipped, a data file already deleted too, and the journal leaves
+    last, with the staging directory."""
     import json
     import os
     import shutil
@@ -459,14 +444,15 @@ def _upsert_commit(path: str) -> None:
 
 
 def recover_upsert(path: str) -> None:
-    """Finish or discard an upsert cut short at ``path``; run it before
-    anything reads the table to rewrite it (upsert_partitioned,
-    windows.merge_append_into_blocks_table, and compact_table /
-    layout.zorder_table through recover_rewrite).  A staging directory
-    with a journal is a commit cut short and is rolled forward; one
-    without is an unfinished write and is discarded, which leaves the
-    table as it was before that merge (and no directory at all when
-    that merge was the table's first)."""
+    """Finish or discard a write cut short at ``path``: the one recovery
+    of a managed table, which every writer (upsert_partitioned,
+    windows.merge_append_into_blocks_table, compact_table,
+    layout.zorder_table) runs at entry, before it reads the table.  A
+    staging directory with a journal is a commit cut short and is rolled
+    forward; one without is an unfinished write and is discarded, which
+    leaves the table as it was before that write (and no directory at
+    all when that write was the table's first).  Until then a reader
+    may see a commit cut short: old and new files side by side."""
     import os
     import shutil
 
@@ -477,6 +463,68 @@ def recover_upsert(path: str) -> None:
         shutil.rmtree(staging)
         if not os.listdir(path):  # it was the table's first merge
             os.rmdir(path)
+
+
+def _staged_write(
+    path: str,
+    out: DataFrame,
+    deletes: list[str] | None = None,
+    meta: dict | None = None,
+    group: Column | None = None,
+) -> None:
+    """Write ``out`` into the table at ``path`` and delete the data
+    files ``deletes`` (local paths) in one journal commit: the one
+    commit protocol of every managed-table writer (upsert_partitioned,
+    compact_table, layout.zorder_table).
+
+    1. ``out`` is written to the staging directory `path/_upsert_tmp/`,
+       partitioned by `_bucket` (when it has that column) and by
+       ``group`` (all rows in group 0 when None): rows that differ on
+       ``group`` never share a file;
+    2. each staged file is to be renamed into its `_bucket=k/` directory
+       (the table root when there is no `_bucket`) as
+       `g<group>-part-…`: the groups of one bucket reuse file names;
+    3. on an existing table the manifest ``meta`` is written now, BEFORE
+       the commit: a crash mid-commit leaves mixed-schema files, and the
+       already-updated manifest makes read_table read them with the
+       union schema (a manifest column not yet in any file reads as
+       NULL; the reverse order would let the old manifest's narrower
+       schema hide an evolved column and lose it on the next rewrite);
+    4. the journal (renames, ``deletes``, ``meta``) is written (tmp +
+       os.replace, like the manifest) and _upsert_commit carries it out.
+
+    A crash before step 4 leaves every data file as it was; from then on
+    recover_upsert rolls the commit forward.  Sidecar directories are
+    never touched.  The defaults rewrite the whole table: ``deletes``
+    every data file (_data_files), ``meta`` the schema of ``out`` with
+    the table's other manifest entries."""
+    import glob
+    import json
+    import os
+
+    existed = os.path.exists(path)
+    if deletes is None:
+        deletes = _data_files(path)
+    if meta is None:
+        meta = _table_meta(out.schema, _table_extras(path))
+    staging = os.path.join(path, _UPSERT_STAGING)
+    parts = ["_bucket"] if "_bucket" in out.columns else []
+    parts.append("_file_group")
+    out = out.withColumn("_file_group", F.lit(0) if group is None else group)
+    out.write.partitionBy(*parts).parquet(staging)
+    renames = []
+    pattern = os.path.join(glob.escape(staging), *["*"] * len(parts), "*.parquet")
+    for src in glob.glob(pattern):
+        *dirs, group_dir, name = os.path.relpath(src, staging).split(os.sep)
+        prefix = "g" + group_dir.split("=", 1)[1]
+        renames.append((src, os.path.join(path, *dirs, f"{prefix}-{name}")))
+    if existed:
+        _write_table_meta(path, meta)
+    journal = os.path.join(staging, _UPSERT_JOURNAL)
+    with open(journal + ".tmp", "w") as f:
+        json.dump({"renames": renames, "deletes": deletes, "meta": meta}, f)
+    os.replace(journal + ".tmp", journal)
+    _upsert_commit(path)
 
 
 def upsert_partitioned(
@@ -518,27 +566,29 @@ def upsert_partitioned(
        key is matched within its bucket, so keys must determine the
        entity (or be unique across entities), as they do for every
        caller here;
-    4. the result is written to the staging directory
-       `path/_upsert_tmp/`, partitioned by `_bucket` and by
-       ``file_group``: each merge adds at most one file per touched
-       (bucket, group), and rows that differ on ``file_group`` never
-       share a file (the blocks table keeps open tail blocks apart from
-       sealed ones this way, so an append rewrites only the open files);
-    5. commit through a journal in the staging directory (written tmp +
-       os.replace, like the schema manifest): rename the staged files
-       into `_bucket=k/` (named `g<group>-part-…`: the group directories
-       of one bucket reuse file names), write the schema manifest (the
-       schema of the rows written, which read_table then reads with),
-       delete the hit files and their `.crc`, drop the staging
-       directory.
+    4. the result is written and committed by _staged_write, the
+       commit every table writer shares: staged in `path/_upsert_tmp/`,
+       partitioned by `_bucket` and by ``file_group`` (each merge adds
+       at most one file per touched (bucket, group), and rows that
+       differ on ``file_group`` never share a file: the blocks table
+       keeps open tail blocks apart from sealed ones this way, so an
+       append rewrites only the open files);
+    5. the journal renames the staged files into `_bucket=k/` as
+       `g<group>-part-…`, writes the schema manifest (the schema of the
+       rows written, which read_table then reads with; on an existing
+       table it is written before the journal), deletes the hit files
+       and their `.crc`, and drops the staging directory.
 
     Readers do not change: the table stays a plain `_bucket`-partitioned
     parquet directory holding each key once (Spark skips the
     underscore-prefixed staging directory).  Recovery (recover_upsert)
     runs at entry: a journal is rolled forward, staging without one is
     discarded.  Between a crash and the next recovery a reader can see
-    a half-committed merge.  Untouched files are never rewritten, so
-    every merge that adds rows adds files: compact_table folds them.
+    a half-committed merge: old and new files side by side.  Untouched
+    files are never rewritten, so every merge that adds rows adds
+    files: compact_table folds them.  A batch of no rows into an
+    existing table (an append whose rows were all applied already)
+    writes nothing, once the schema check has passed.
 
     Returns {touched_buckets, upserted, deleted} for the caller's
     lineage record: the batch's rows and the stored rows it replaced,
@@ -554,8 +604,6 @@ def upsert_partitioned(
     layout's shift/feature_cols contract) — the caller is responsible
     for validating it against _read_table_meta before merging.
     """
-    import glob
-    import json
     import os
     from functools import reduce
     from operator import and_
@@ -564,10 +612,9 @@ def upsert_partitioned(
     from pyspark.sql import Window as _W
 
     from gfwspark.checkpoint import bucket_of
-    from gfwspark.util import observed_rows
+    from gfwspark.util import observed_rows, release
 
     recover_upsert(path)
-    staging = os.path.join(path, _UPSERT_STAGING)
     existed = os.path.exists(path)
     meta = _read_table_meta(path) if existed else None
     if meta is not None and meta.get("n_buckets") not in (None, n_buckets):
@@ -616,10 +663,13 @@ def upsert_partitioned(
                 "null padding (Iceberg-style additive evolution), and read "
                 "the table with mergeSchema afterwards"
             )
+        if not upserted:  # nothing to write: every file stays as it is
+            release(ckpt)
+            return {"touched_buckets": [], "upserted": 0, "deleted": 0}
         schema = table.unionByName(b, allowMissingColumns=True).schema
         if hit_file_col is not None:
-            files = o_up.get["files"] if upserted else []
-        elif touched:
+            files = o_up.get["files"]
+        else:
             # eqNullSafe: MERGE key matching must treat NULL = NULL as a
             # match, or null-keyed rows duplicate on every re-upsert
             bk = b.select(*keys)
@@ -631,8 +681,6 @@ def upsert_partitioned(
                 r["_file"] for r in stored.join(bk, cond, "left_semi")
                 .select("_file").distinct().collect()
             ]
-        else:
-            files = []
         hits = sorted(unquote(urlparse(f).path) for f in files)
         if hits:
             hit = (
@@ -656,78 +704,15 @@ def upsert_partitioned(
             .observe(o_keep, F.count(F.when(~F.col("_new"), 1)).alias("n"))
             .drop("_new", "_replaced")
         )
-    group = F.lit(0) if file_group is None else file_group
-    out.withColumn("_file_group", group).write.partitionBy(
-        "_bucket", "_file_group"
-    ).parquet(staging)
-    # every read of the batch is done: release its checkpoint blocks
-    # now rather than at the next JVM GC
-    ckpt._jdf.logicalPlan().rdd().unpersist(False)
-    renames = []
-    for src in glob.glob(os.path.join(glob.escape(staging), "*", "*", "*.parquet")):
-        bucket_dir, group_dir, name = os.path.relpath(src, staging).split(os.sep)
-        prefix = "g" + group_dir.split("=", 1)[1]
-        renames.append((src, os.path.join(path, bucket_dir, f"{prefix}-{name}")))
     table_meta = _table_meta(schema, {"n_buckets": n_buckets, **(extra_meta or {})})
-    if existed:
-        # manifest BEFORE the commit: a crash mid-commit leaves mixed-
-        # schema buckets, and the already-updated manifest makes
-        # read_table read with the union schema (a manifest column not
-        # yet in any file reads as NULL; the reverse ordering would let
-        # the old manifest's narrower schema hide the evolved column
-        # and reopen the evolved-column loss)
-        _write_table_meta(path, table_meta)
-    journal = os.path.join(staging, _UPSERT_JOURNAL)
-    with open(journal + ".tmp", "w") as f:
-        json.dump({"renames": renames, "deletes": hits, "meta": table_meta}, f)
-    os.replace(journal + ".tmp", journal)
-    _upsert_commit(path)
+    try:
+        _staged_write(path, out, hits, table_meta, file_group)
+    finally:
+        # every read of the batch is done: release its checkpoint blocks
+        # now rather than at the next JVM GC
+        release(ckpt)
     deleted = observed_rows(o_hit) - observed_rows(o_keep) if hits else 0
     return {"touched_buckets": touched, "upserted": upserted, "deleted": deleted}
-
-
-def recover_rewrite(path: str, suffix: str) -> tuple[str, str]:
-    """Entry half of the crash-safe in-place rewrite protocol shared
-    by compact_table and layout.zorder_table.  Recover from a previous
-    crashed run before touching anything:
-     - old exists, path missing -> crashed between the two renames:
-       the original table is intact under `old`; put it back.
-     - old exists alongside path -> crashed before cleanup; old is a
-       superseded copy, drop it.
-     - tmp is always an incomplete/stale write at entry; drop it.
-     - an upsert cut short inside path is finished or discarded
-       (recover_upsert), so the rewrite never bakes in half a merge.
-    Returns (tmp, old) for the caller to write into / commit_rewrite."""
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + suffix + "_tmp"
-    old = path.rstrip("/") + suffix + "_old"
-    if os.path.exists(old):
-        if not os.path.exists(path):
-            os.rename(old, path)
-        else:
-            shutil.rmtree(old)
-    recover_upsert(path)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    return tmp, old
-
-
-def commit_rewrite(path: str, tmp: str, old: str) -> None:
-    """Commit half: atomically swap the completed `tmp` write into
-    `path` (rename is the atomic unit; a crash at any point is healed
-    by the next recover_rewrite).  A `path` that does not exist yet
-    (first write to a new location) is a plain rename."""
-    import os
-    import shutil
-
-    if os.path.exists(path):
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, path)
 
 
 def compact_table(
@@ -748,32 +733,21 @@ def compact_table(
     task + one open per file.  Sizing uses the on-disk byte total (not
     row counts), so compressed width is what drives the output count.
 
-    Writes to a temp sibling then atomically swaps directories —
-    Spark cannot overwrite a path it is reading, and a crash mid-write
-    must not lose the original.  Single-writer contract, like the
-    upsert sink.  Returns {files_before, files_after, bytes}."""
+    The rewrite is one journal commit (_staged_write, the upsert's
+    commit): the new files are staged inside the table, then renamed in
+    beside the old ones, which are deleted after.  A crash before the
+    journal leaves every data file as it was; after it, the next
+    writer's recover_upsert rolls the commit forward, and until then a
+    reader sees old and new files side by side (as after an upsert cut
+    short).  Sidecar directories (`_entity_stats`) stay where they are.
+    A bucketed table keeps its `_bucket=k/` directories, a flat one
+    compacts to `g0-part-*` files at its root.  Single-writer contract,
+    like the upsert sink.  Returns {files_before, files_after, bytes}."""
     import os
-    import shutil
 
-    def _stats(p: str) -> tuple[int, int]:
-        n, b = 0, 0
-        for root, dirs, files in os.walk(p):
-            # sidecar dirs (e.g. _entity_stats) are metadata, not table
-            # data: their parquet files must not count toward the
-            # compaction sizing.  Partition dirs (_bucket=k) keep the
-            # "=" and stay included.
-            dirs[:] = [
-                d for d in dirs if "=" in d or not d.startswith(("_", "."))
-            ]
-            for f in files:
-                if f.endswith(".parquet"):
-                    n += 1
-                    b += os.path.getsize(os.path.join(root, f))
-        return n, b
-
-    tmp, old = recover_rewrite(path, suffix="._compact")
-    extra = _table_extras(path)
-    files_before, total_bytes = _stats(path)
+    recover_upsert(path)
+    files = _data_files(path)
+    total_bytes = sum(os.path.getsize(f) for f in files)
     n_out = max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
     # manifest-aware read: compacting an evolved (mixed-schema) table
     # must rewrite the union schema, not one arbitrary file's
@@ -803,16 +777,9 @@ def compact_table(
         out = df.repartition(n_out)
         if sort_cols:
             out = out.sortWithinPartitions(*sort_cols)
-    w = out.write.mode("overwrite")
-    if bucketed:
-        w = w.partitionBy("_bucket")
-    w.parquet(tmp)
-    _write_schema_manifest(tmp, out.schema, extra)
-    _carry_sidecars(path, tmp)
-    commit_rewrite(path, tmp, old)
-    files_after, _ = _stats(path)
+    _staged_write(path, out, files)
     return {
-        "files_before": files_before,
-        "files_after": files_after,
+        "files_before": len(files),
+        "files_after": len(_data_files(path)),
         "bytes": total_bytes,
     }

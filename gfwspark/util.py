@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql.window import WindowSpec
 
 
@@ -56,3 +56,10 @@ def observed_rows(obs: Observation) -> int:
     ``get`` raises); callers observe only frames dropped only when
     empty, so that reads as 0 rows."""
     return obs.get["n"] if obs._jo.getRow().size() else 0
+
+
+def release(df: DataFrame) -> None:
+    """Drop the blocks of the localCheckpoint'ed frame ``df`` now rather
+    than at the next JVM GC (when the ContextCleaner would).  Nothing may
+    read ``df`` afterwards."""
+    df._jdf.logicalPlan().rdd().unpersist(False)

@@ -28,7 +28,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, Window
 
-from gfwspark.util import entity_time_window, observed_rows
+from gfwspark.util import entity_time_window, observed_rows, release
 
 
 def with_lag_lead(
@@ -673,7 +673,7 @@ def merge_append_into_blocks_table(
             spark, changed, path, hit_file_col="_file", **upsert
         )
     finally:
-        rows._jdf.logicalPlan().rdd().unpersist(False)
+        release(rows)
 
 
 def sliding_feature_window_refs(

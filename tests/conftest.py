@@ -44,6 +44,45 @@ def jobs_started(spark):
     return run
 
 
+def cut_short(monkeypatch, name, when, call):
+    """Run ``call`` with ``os.<name>`` raising on the first target that
+    ``when`` accepts (os.replace's destination, os.remove's path): a
+    table commit cut short at that step."""
+    import os
+
+    real = getattr(os, name)
+
+    def fake(p, *a, **kw):
+        if when(str(a[0] if name == "replace" else p)):
+            raise OSError(f"crash at os.{name}")
+        return real(p, *a, **kw)
+
+    monkeypatch.setattr(os, name, fake)
+    with pytest.raises(OSError, match="crash"):
+        call()
+    monkeypatch.undo()
+
+
+def file_stamps(path, suffix=""):
+    """{file under path whose name ends with ``suffix``: (inode,
+    mtime_ns)}: a file rewritten or replaced changes its stamp."""
+    import os
+
+    out = {}
+    for d, _, files in os.walk(path):
+        for name in files:
+            if name.endswith(suffix):
+                st = os.stat(os.path.join(d, name))
+                out[os.path.join(d, name)] = (st.st_ino, st.st_mtime_ns)
+    return out
+
+
+def is_journal(target):
+    """The commit journal's os.replace: a crash there is a crash before
+    the journal."""
+    return target.endswith("_journal.json")
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -885,3 +885,21 @@ def test_lazy_prepare_corpus_build_starts_no_job(spark, jobs_started):
     d, bench = _corpus_prep_inputs(spark, SF_SMALL)
     _, jobs = jobs_started(lambda: corpus.prepare_corpus(d, bench))
     assert jobs == 0
+
+
+def test_materialized_prepare_corpus_keeps_two_checkpoints(spark):
+    """The eager corpus build (materialize_survivors=True) keeps the
+    survivor and shingle checkpoints its result reads, and releases the
+    gate frame's once the survivors are materialized: it adds 2
+    persistent RDDs, not 3."""
+    from gfwspark import corpus, queries  # noqa: F401  (registry init order)
+    from gfwspark.queries_ml import _corpus_prep_inputs
+    from tests.conftest import SF_SMALL
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    d, bench = _corpus_prep_inputs(spark, SF_SMALL)
+    before = persisted()
+    corpus.prepare_corpus(d, bench, materialize_survivors=True)
+    assert len(persisted() - before) == 2

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from gfwspark import layout, tables
+from tests.conftest import cut_short, file_stamps, is_journal
 
 
 def test_partition_sorted_invariant(spark):
@@ -261,17 +262,16 @@ def test_entity_stats_roundtrip_feeds_asof_auto(spark, tmp_path):
     pd.testing.assert_frame_equal(want, got, check_dtype=False)
 
 
-def test_zorder_table_in_place_and_crash_recovery(spark, tmp_path):
-    """zorder_table must support the natural OPTIMIZE ZORDER call —
-    df reading from `path` itself — via the write-to-tmp + atomic-swap
-    protocol (a direct mode('overwrite') to the source path would
-    throw or destroy the table), and recover_rewrite must heal a crash
-    that happened between the two renames (old present, path gone)."""
+def test_zorder_table_in_place_and_crash_recovery(spark, tmp_path, monkeypatch):
+    """zorder_table supports the natural OPTIMIZE ZORDER call — df
+    reading from `path` itself — through the upsert journal: a flat
+    table is rewritten to `g0-part-*` files at its root; a Z-ordering
+    cut short before its journal leaves every data file as it was, and
+    one cut short in its delete step (old and new files side by side)
+    is rolled forward by the next writer, every row once."""
     import os
-    import shutil
 
-    from gfwspark import layout, tables
-    from gfwspark.sources import recover_rewrite
+    from gfwspark import layout, sources, tables
 
     ev = tables.load_table(spark, "/root/testdata/sf0.001", "events").select(
         "event_id", "user_id", "value"
@@ -280,34 +280,36 @@ def test_zorder_table_in_place_and_crash_recovery(spark, tmp_path):
     ev.write.parquet(path)
     n = ev.count()
 
-    # in-place rewrite: read from path, zorder back into path
-    src = spark.read.parquet(path)
-    layout.zorder_table(src, path, ["user_id", "value"], bits=3, n_files=4)
-    assert spark.read.parquet(path).count() == n
+    def zorder():
+        src = spark.read.parquet(path)
+        layout.zorder_table(src, path, ["user_id", "value"], bits=3, n_files=4)
 
-    # crash between renames: path moved aside to old, tmp gone
-    old = path + "._zorder_old"
-    shutil.move(path, old)
-    assert not os.path.exists(path)
-    recover_rewrite(path, suffix="._zorder")
-    assert os.path.exists(path) and not os.path.exists(old)
-    assert spark.read.parquet(path).count() == n
+    def ids():
+        return sorted(r[0] for r in spark.read.parquet(path).select("event_id").collect())
 
+    want = ids()
+    assert len(want) == n
+    zorder()  # in place
+    data = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert data and all(f.startswith("g0-part-") for f in data), data
+    assert ids() == want
 
-def test_recover_rewrite_drops_stale_tmp_and_superseded_old(tmp_path):
-    """Entry recovery: a stale tmp is always dropped; an old alongside
-    an intact path is a superseded copy and is dropped too."""
-    import os
+    def data_stamps():  # the manifest is rewritten before the journal
+        return {f: s for f, s in file_stamps(path, ".parquet").items()
+                if "/_upsert_tmp/" not in f}
 
-    from gfwspark.sources import recover_rewrite
+    before = data_stamps()
+    cut_short(monkeypatch, "replace", is_journal, zorder)
+    assert data_stamps() == before  # the staged files wait in _upsert_tmp
+    assert ids() == want
 
-    path = str(tmp_path / "t")
-    os.makedirs(path)
-    os.makedirs(path + "._x_tmp")
-    os.makedirs(path + "._x_old")
-    tmp, old = recover_rewrite(path, suffix="._x")
-    assert os.path.exists(path)
-    assert not os.path.exists(tmp) and not os.path.exists(old)
+    # the next Z-ordering discards that staging first
+    cut_short(monkeypatch, "remove", lambda t: t.startswith(path), zorder)
+    assert os.path.exists(os.path.join(path, "_upsert_tmp", "_journal.json"))
+    assert spark.read.parquet(path).count() == 2 * n  # old and new side by side
+    sources.compact_table(spark, path)  # the next writer rolls it forward
+    assert not os.path.exists(os.path.join(path, "_upsert_tmp"))
+    assert ids() == want
 
 
 def test_stride_blocks_at_rest_zero_shuffle_windows(spark):
@@ -424,10 +426,10 @@ def test_merge_append_counts_extended_tail_blocks(spark, tmp_path):
 
 
 def test_rewrites_preserve_entity_stats_sidecar(spark, tmp_path):
-    """r7 (ADVICE): compact_table and zorder_table must carry the
-    _entity_stats sidecar through their tmp/swap rewrite (its content
-    is layout-independent), and compaction sizing must not count the
-    sidecar's parquet files."""
+    """compact_table and zorder_table rewrite the table in place and
+    leave the _entity_stats sidecar (its content is layout-independent)
+    where it is: its files keep their inode and mtime, and compaction
+    sizing does not count them."""
     import os
 
     import pyspark.sql.functions as F
@@ -441,13 +443,15 @@ def test_rewrites_preserve_entity_stats_sidecar(spark, tmp_path):
     )
     p = str(tmp_path / "tbl")
     rows.repartition(8).write.parquet(p)
-    layout.write_entity_stats(layout.collect_entity_stats(rows), p)
+    sidecar = layout.write_entity_stats(layout.collect_entity_stats(rows), p)
+    stamps = file_stamps(sidecar)
+    assert stamps
     before = layout.read_entity_stats(spark, p).toPandas().sort_values(
         "image_id").reset_index(drop=True)
 
     r = sources.compact_table(spark, p, target_mb=1024)
-    # sidecar survived the swap and its files never counted as data
-    assert os.path.isdir(os.path.join(p, "_entity_stats"))
+    # the sidecar's files stayed as they were and never counted as data
+    assert file_stamps(sidecar) == stamps
     after = layout.read_entity_stats(spark, p).toPandas().sort_values(
         "image_id").reset_index(drop=True)
     import pandas as pd
@@ -461,7 +465,7 @@ def test_rewrites_preserve_entity_stats_sidecar(spark, tmp_path):
     layout.zorder_table(
         sources.read_table(spark, p), p, ["value"], bits=2, n_files=2
     )
-    assert os.path.isdir(os.path.join(p, "_entity_stats"))
+    assert file_stamps(sidecar) == stamps
     after_z = layout.read_entity_stats(spark, p).toPandas().sort_values(
         "image_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(before, after_z)
@@ -534,8 +538,6 @@ def test_blocks_merge_recovers_a_commit_cut_short(spark, tmp_path, monkeypatch):
     stride_blocks over all rows: no tail twice, no block_id restarted."""
     import os
 
-    import pytest
-
     from gfwspark import sources, windows
 
     S = 4
@@ -546,24 +548,15 @@ def test_blocks_merge_recovers_a_commit_cut_short(spark, tmp_path, monkeypatch):
             spark, batch, tbl, "v", S, n_buckets=2
         )
 
-    real_remove, real_replace = os.remove, os.replace
-
-    def crash_before_rename(src, dst, *a, **kw):
-        if "/_bucket=" in str(dst) and "_upsert_tmp" not in str(dst):
-            raise OSError("crash before the first rename")
-        return real_replace(src, dst, *a, **kw)
-
-    def crash_in_delete(p, *a, **kw):
-        if str(p).startswith(tbl):
-            raise OSError("crash in the delete step")
-        return real_remove(p, *a, **kw)
-
-    def crashing(batch, name, fake):
-        monkeypatch.setattr(os, name, fake)
-        with pytest.raises(OSError, match="crash"):
-            merge(batch)
-        monkeypatch.undo()
+    def crashing(batch, name, when):
+        cut_short(monkeypatch, name, when, lambda: merge(batch))
         assert os.path.exists(os.path.join(tbl, "_upsert_tmp", "_journal.json"))
+
+    def before_rename(dst):
+        return "/_bucket=" in dst and "_upsert_tmp" not in dst
+
+    def in_delete(p):
+        return p.startswith(tbl)
 
     batches = [
         _series(spark, {f"e{k}": (0, 3 + 5 * k) for k in range(6)}),
@@ -571,10 +564,10 @@ def test_blocks_merge_recovers_a_commit_cut_short(spark, tmp_path, monkeypatch):
         _series(spark, {"e0": (200, 7), "e1": (200, 4), "new": (200, 3)}),
         _series(spark, {"e0": (300, 1), "e3": (300, 2), "e4": (300, 5)}),
     ]
-    crashing(batches[0], "replace", crash_before_rename)  # the bootstrap
-    crashing(batches[1], "remove", crash_in_delete)  # rolls it forward first
+    crashing(batches[0], "replace", before_rename)  # the bootstrap
+    crashing(batches[1], "remove", in_delete)  # rolls it forward first
     sources.compact_table(spark, tbl)  # rolls the append forward first
-    crashing(batches[2], "remove", crash_in_delete)
+    crashing(batches[2], "remove", in_delete)
     merge(batches[3])
 
     allrows = batches[0]
@@ -584,6 +577,25 @@ def test_blocks_merge_recovers_a_commit_cut_short(spark, tmp_path, monkeypatch):
     got = spark.read.parquet(tbl).select(*want.columns)
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_blocks_all_late_append_writes_nothing(spark, tmp_path):
+    """An append whose rows were all applied already (every row late
+    under on_late="drop": the crash replay stream_stride_blocks_sink
+    relies on) writes nothing: every file under the table, the manifest
+    included, keeps its inode and mtime."""
+    from gfwspark import windows
+
+    tbl = str(tmp_path / "blocks")
+    batch = _series(spark, {f"e{k}": (0, 3 + 5 * k) for k in range(6)})
+    windows.merge_append_into_blocks_table(spark, batch, tbl, "v", 4, n_buckets=2)
+    before = file_stamps(tbl)
+    r = windows.merge_append_into_blocks_table(
+        spark, batch, tbl, "v", 4, n_buckets=2, on_late="drop"
+    )
+    assert r == {"touched_buckets": [], "upserted": 0, "deleted": 0}
+    assert file_stamps(tbl) == before
+    _blocks_equal_rebuild(spark, tbl, batch, 4)
 
 
 def _blocks_equal_rebuild(spark, tbl, allrows, shift):

@@ -10,7 +10,7 @@ from pathlib import Path
 import pyspark.sql.functions as F
 
 from gfwspark import sources, tables
-from tests.conftest import SF_MED
+from tests.conftest import SF_MED, cut_short, file_stamps, is_journal
 
 
 def test_read_entity_info_drops_blank_labels(spark, tmp_path):
@@ -323,19 +323,6 @@ def test_upsert_partitioned_null_entity_key(spark, tmp_path):
     assert r2["deleted"] == 1
 
 
-def _data_file_stamps(path):
-    """{data file under path: (inode, mtime_ns)}."""
-    import os
-
-    out = {}
-    for d, _, files in os.walk(path):
-        for name in files:
-            if name.endswith(".parquet"):
-                st = os.stat(os.path.join(d, name))
-                out[os.path.join(d, name)] = (st.st_ino, st.st_mtime_ns)
-    return out
-
-
 def test_upsert_insert_only_batch_rewrites_no_file(spark, tmp_path):
     """Copy-on-write is file-granular: a batch whose keys are all new
     rewrites no stored file, even in the buckets it lands in; it only
@@ -346,7 +333,7 @@ def test_upsert_insert_only_batch_rewrites_no_file(spark, tmp_path):
         "image_id string, seq int, val string",
     )
     sources.upsert_partitioned(spark, base, path, keys=["image_id", "seq"], n_buckets=4)
-    before = _data_file_stamps(path)
+    before = file_stamps(path, ".parquet")
     batch = spark.createDataFrame(
         [(f"new{i}", i, "NEW") for i in range(6)],
         "image_id string, seq int, val string",
@@ -355,7 +342,7 @@ def test_upsert_insert_only_batch_rewrites_no_file(spark, tmp_path):
         spark, batch, path, keys=["image_id", "seq"], n_buckets=4
     )
     assert (r["upserted"], r["deleted"]) == (6, 0) and r["touched_buckets"]
-    after = _data_file_stamps(path)
+    after = file_stamps(path, ".parquet")
     assert {f: after.get(f) for f in before} == before, "a stored file was rewritten"
     assert len(after) > len(before)
     assert spark.read.parquet(path).count() == 46
@@ -376,14 +363,14 @@ def test_upsert_rewrites_only_the_files_holding_a_key(spark, tmp_path):
         )
 
     upsert([(f"a{i}", i, "A") for i in range(10)])
-    first = _data_file_stamps(path)
+    first = file_stamps(path, ".parquet")
     upsert([(f"b{i}", i, "B") for i in range(10)])
-    second = {f: s for f, s in _data_file_stamps(path).items() if f not in first}
+    second = {f: s for f, s in file_stamps(path, ".parquet").items() if f not in first}
     assert len(first) == 1 and len(second) == 1
 
     r = upsert([("a3", 3, "UPDATED")])
     assert (r["upserted"], r["deleted"]) == (1, 1)
-    after = _data_file_stamps(path)
+    after = file_stamps(path, ".parquet")
     assert not set(first) & set(after), "the hit file was not replaced"
     assert {f: after.get(f) for f in second} == second, "an unhit file was rewritten"
     for back in (spark.read.parquet(path), sources.read_table(spark, path)):
@@ -443,48 +430,68 @@ def test_upsert_commit_journal_recovery(spark, tmp_path, monkeypatch):
             raise OSError("crash before the journal")
         return real_replace(src, dst, *a, **kw)
 
-    before = _data_file_stamps(path)
+    before = file_stamps(path, ".parquet")
     batch2 = spark.createDataFrame([("e2", 2, "LOST"), ("y", 0, "LOST")], schema)
     monkeypatch.setattr(os, "replace", crash_before_journal)
     with pytest.raises(OSError, match="before the journal"):
         sources.upsert_partitioned(spark, batch2, path, keys=keys, n_buckets=2)
     monkeypatch.undo()
-    assert _data_file_stamps(staging) and table() == (want, 21)
+    assert file_stamps(staging, ".parquet") and table() == (want, 21)
     sources.upsert_partitioned(spark, empty, path, keys=keys, n_buckets=2)
     assert not os.path.exists(staging)
-    assert _data_file_stamps(path) == before and table() == (want, 21)
+    assert file_stamps(path, ".parquet") == before and table() == (want, 21)
 
 
-def test_compact_table_crash_recovery(spark, tmp_path):
-    """Stale ._compact_tmp/old dirs from a crashed run do not wedge the
-    next invocation — and a crash between the two renames (no table at
-    path, original intact under ._compact_old) is recovered at entry."""
+def test_compact_table_crash_recovery(spark, tmp_path, monkeypatch):
+    """compact_table commits through the upsert journal.  A compaction
+    cut short before its journal leaves every data file as it was; one
+    cut short in its delete step (old and new files side by side) is
+    rolled forward by the next writer, here an upsert, and every row
+    appears once."""
     import os
-    import shutil
 
     path = str(tmp_path / "crash")
-    df = spark.createDataFrame(
-        [(f"e{i}", i) for i in range(100)], "image_id string, seq int"
+    staging = os.path.join(path, "_upsert_tmp")
+    keys = ["image_id", "seq"]
+    schema = "image_id string, seq int, val string"
+
+    def upsert(rows):
+        df = spark.createDataFrame(rows, schema)
+        return sources.upsert_partitioned(spark, df, path, keys=keys, n_buckets=4)
+
+    for k in range(5):  # five merges: five files in each touched bucket
+        upsert([(f"e{i}", i, f"v{k}") for i in range(k, 100, 5)])
+    want = {(f"e{i}", i): f"v{i % 5}" for i in range(100)}
+
+    def table():
+        got = spark.read.parquet(path).collect()
+        return {(r["image_id"], r["seq"]): r["val"] for r in got}, len(got)
+
+    def compact():
+        sources.compact_table(spark, path)
+
+    def data_stamps():
+        return {f: s for f, s in file_stamps(path, ".parquet").items()
+                if not f.startswith(staging)}
+
+    before = data_stamps()
+    cut_short(monkeypatch, "replace", is_journal, compact)
+    assert file_stamps(staging, ".parquet") and data_stamps() == before
+    assert table() == (want, 100)
+
+    # the next compaction discards that staging first
+    cut_short(monkeypatch, "remove", lambda t: t.startswith(path), compact)
+    assert os.path.exists(os.path.join(staging, "_journal.json"))
+    assert table()[1] == 200  # old and new files side by side
+    r = upsert([("e7", 7, "NEW"), ("x", 0, "NEWX")])
+    assert (r["upserted"], r["deleted"]) == (2, 1)
+    assert not os.path.exists(staging)
+    want.update({("e7", 7): "NEW", ("x", 0): "NEWX"})
+    assert table() == (want, 101)
+    assert all(
+        os.path.basename(f).startswith("g0-part-")
+        for f in file_stamps(path, ".parquet")
     )
-    df.repartition(8).write.mode("overwrite").parquet(path)
-    want = spark.read.parquet(path).toPandas().sort_values("seq").reset_index(drop=True)
-
-    # crash scenario A: stale tmp + stale old alongside a live table
-    os.makedirs(path + "._compact_tmp/junk")
-    shutil.copytree(path, path + "._compact_old")
-    r = sources.compact_table(spark, path, target_mb=128)
-    assert r["files_after"] == 1
-    assert not os.path.exists(path + "._compact_tmp")
-    assert not os.path.exists(path + "._compact_old")
-    got = spark.read.parquet(path).toPandas().sort_values("seq").reset_index(drop=True)
-    assert want.equals(got)
-
-    # crash scenario B: crashed between renames — table gone, old holds it
-    os.rename(path, path + "._compact_old")
-    assert not os.path.exists(path)
-    r2 = sources.compact_table(spark, path, target_mb=128)
-    got2 = spark.read.parquet(path).toPandas().sort_values("seq").reset_index(drop=True)
-    assert want.equals(got2)
 
 
 def test_upsert_schema_evolution(spark, tmp_path):
@@ -684,7 +691,9 @@ def test_zorder_refuses_schema_dropping_rewrite(spark, tmp_path):
     spark.createDataFrame(
         [(1, 10.0, "k")], "event_id long, value double, extra string"
     ).write.parquet(path)
-    sources._write_schema_manifest(path, spark.read.parquet(path).schema)
+    sources._write_table_meta(
+        path, sources._table_meta(spark.read.parquet(path).schema)
+    )
     narrow = spark.read.parquet(path).drop("extra")
     with pytest.raises(ValueError, match="manifest columns"):
         layout.zorder_table(narrow, path, ["event_id", "value"], bits=2)
