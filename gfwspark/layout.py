@@ -23,7 +23,7 @@ AQE skew-join splitting remains on as a second line of defense
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 
 
 def partition_sorted(
@@ -160,71 +160,42 @@ def zorder_key(bucket_cols: list, bits: int = 8):
 
 
 def zorder_table(
-    df: DataFrame,
+    spark: SparkSession,
     path: str,
     cols: list[str],
     bits: int = 8,
     n_files: int | None = None,
 ) -> dict:
-    """Rewrite `df` to `path` clustered by the Z-order of `cols` — the
-    OPTIMIZE ZORDER analog: one exact-quantile pass per column on the
-    driver (approxQuantile(rel=0)), map-side bucket + interleave, then
-    repartitionByRange(zkey) + sortWithinPartitions(zkey) so every
+    """Rewrite the managed table at `path` in place, clustered by the
+    Z-order of `cols` — the OPTIMIZE ZORDER analog: one exact-quantile
+    pass per column on the driver (approxQuantile(rel=0)), map-side
+    bucket + interleave, and the Morton key as the sort key of
+    compaction's rewrite (sources._rewrite_table) into `n_files`
+    range partitions (default: the default parallelism), so every
     output file owns a contiguous key range (narrow min/max envelope in
-    every dimension).  Returns the per-column boundaries for the
-    caller's lineage record.
+    every dimension).  A bucket-partitioned table is Z-clustered within
+    each bucket; file skipping still prunes on the per-bucket z-ranges.
+    Returns the per-column boundaries for the caller's lineage record.
 
-    In-place-capable and crash-safe: the rewrite replaces every data
-    file of `path` in one journal commit (sources._staged_write, the
-    upsert's commit), so `df` MAY read from `path` itself (the natural
-    OPTIMIZE ZORDER call).  A crash before the journal leaves every
-    data file as it was; after it, the next writer's
-    sources.recover_upsert rolls the commit forward, and until then a
-    reader sees old and new files side by side (as after an upsert cut
-    short), so after a crash build `df` once recover_upsert has run.
-    Sidecar directories (`_entity_stats`) stay where they are, and the
-    manifest keeps the table's other entries (n_buckets).  For a table
-    that has EVOLVED (mixed-schema files + sidecar manifest),
-    build `df` with sources.read_table — a plain spark.read.parquet
-    infers the schema from one arbitrary file; the guard below refuses
-    to rewrite with fewer columns than the manifest records (which
-    would permanently drop the evolved columns' values)."""
-    from gfwspark.sources import _read_schema_manifest, _staged_write, recover_upsert
+    The table is read after recovery, with its complete schema, so a
+    Z-ordering after a commit cut short sees every row once and an
+    evolved table keeps every column; the rewrite is one journal commit,
+    crash-safe like compact_table."""
+    from gfwspark.sources import _rewrite_table
 
-    recover_upsert(path)
-    man = _read_schema_manifest(path)
-    if man is not None and not set(man) <= set(df.columns):
-        raise ValueError(
-            f"zorder_table input is missing manifest columns "
-            f"{sorted(set(man) - set(df.columns))} recorded for {path}; "
-            "read the table via sources.read_table so the rewrite "
-            "keeps the evolved schema"
-        )
+    n_files = n_files or max(spark.sparkContext.defaultParallelism, 1)
     n_buckets = 1 << bits
     probs = [i / n_buckets for i in range(1, n_buckets)]
-    # ONE exact-quantile pass for all columns (approxQuantile takes a
-    # column list) — per-column calls would scan the table k times
-    all_bounds = df.stat.approxQuantile(cols, probs, 0.0)
-    bounds = dict(zip(cols, all_bounds))
-    buckets = [zorder_bucket(c, bounds[c]) for c in cols]
-    keyed = df.withColumn("_zkey", zorder_key(buckets, bits))
-    n_files = n_files or max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    # a bucket-partitioned upsert table must KEEP its _bucket=k/ dirs
-    # (a flat rewrite collides with the next upsert's partition dirs —
-    # same hazard compact_table guards).  Z-cluster WITHIN each bucket:
-    # range on (_bucket, _zkey) aligns partitions to bucket boundaries,
-    # partitionBy splits per dir, and file skipping still prunes on the
-    # per-bucket z-ranges.
-    bucketed = "_bucket" in df.columns
-    if bucketed:
-        out = keyed.repartitionByRange(
-            n_files, "_bucket", "_zkey"
-        ).sortWithinPartitions("_bucket", "_zkey")
-    else:
-        out = keyed.repartitionByRange(n_files, "_zkey").sortWithinPartitions(
-            "_zkey"
-        )
-    _staged_write(path, out.drop("_zkey"))
+    bounds = {}
+
+    def plan(df: DataFrame, total_bytes: int) -> tuple[list[Column], int]:
+        # ONE exact-quantile pass for all columns (approxQuantile takes a
+        # column list) — per-column calls would scan the table k times
+        bounds.update(zip(cols, df.stat.approxQuantile(cols, probs, 0.0)))
+        buckets = [zorder_bucket(c, bounds[c]) for c in cols]
+        return [zorder_key(buckets, bits)], n_files
+
+    _rewrite_table(spark, path, plan)
     return {"boundaries": bounds, "n_files": n_files}
 
 

@@ -21,6 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from gfwspark import asof, features, sessionize, tables, windows
+from gfwspark.text import STOPWORDS
 from gfwspark.util import epoch_s, epoch_us
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -817,6 +818,45 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_copies"), F.min("doc_id").alias("keep_doc_id"))
         .filter(F.col("n_copies") > 1)
     )
+
+
+# ---------------------------------------------------------------------
+# DuckDB token and lang-id SQL shared by queries_ml and queries_metrics:
+# defined above the imports below, so each module imports them from
+# here whichever of the two is imported first.
+# ---------------------------------------------------------------------
+
+# DuckDB: whitespace tokens of trimmed text (empty → [])
+_D_TOKS = (
+    "CASE WHEN length(trim(text)) = 0 THEN [] "
+    "ELSE regexp_split_to_array(trim(text), '\\s+') END"
+)
+
+_lex_values = ", ".join(
+    f"('{w}', '{lang}')" for lang, ws in STOPWORDS.items() for w in ws
+)
+_LANGID_ORACLE = f"""
+WITH lex(word, cand_lang) AS (VALUES {_lex_values}),
+toks AS (
+  SELECT doc_id,
+    lower(regexp_replace(word, '[^A-Za-z]', '', 'g')) AS word
+  FROM (SELECT doc_id, unnest({_D_TOKS}) AS word FROM documents)
+),
+hits AS (
+  SELECT t.doc_id, l.cand_lang, count(*) AS hits
+  FROM toks t JOIN lex l ON t.word = l.word
+  GROUP BY t.doc_id, l.cand_lang
+),
+best AS (
+  SELECT doc_id, cand_lang AS pred_lang, hits,
+    row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, cand_lang) AS rk
+  FROM hits
+)
+SELECT d.doc_id, d.lang,
+  coalesce(b.pred_lang, 'und') AS pred_lang,
+  coalesce(b.hits, 0) AS hits
+FROM documents d LEFT JOIN (SELECT * FROM best WHERE rk = 1) b USING (doc_id)
+"""
 
 
 # register the training-data-ops catalog (dedup/text/similarity)

@@ -997,7 +997,8 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------
 # Z-order (Morton) clustering key — the OPTIMIZE ZORDER analog
-# (layout.zorder_table rewrites files by it; the pytest pins the
+# (layout.zorder_table(spark, path, cols) re-sorts a managed table in
+# place by it, through compaction's rewrite; the pytest pins the
 # narrow-envelope property).  This query oracles the MATH: per-column
 # quantile bucketing (exact interpolated percentiles, round-6 — the
 # shared Spark percentile()/DuckDB quantile_cont() convention) and the

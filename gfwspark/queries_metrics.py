@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from gfwspark import sessionize, tables, text, windows
-from gfwspark.queries import register
+from gfwspark.queries import _LANGID_ORACLE, register
 
 # ---------------------------------------------------------------------
 # A3: score-vector consolidation + argmax (consolidate_across_dates,
@@ -142,17 +142,8 @@ def q_time_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
 # compute_vessel_metrics.py:290-304): true lang × predicted lang counts.
 # ---------------------------------------------------------------------
 
-_CONFUSION_ORACLE = None  # assembled below from the lang-id CTE
-
-
-def _langid_cte() -> str:
-    from gfwspark.queries_ml import _LANGID_ORACLE
-
-    return _LANGID_ORACLE
-
-
 _CONFUSION_ORACLE = f"""
-WITH pred AS ({_langid_cte()})
+WITH pred AS ({_LANGID_ORACLE})
 SELECT lang AS true_lang, pred_lang, count(*) AS n
 FROM pred GROUP BY lang, pred_lang
 """
@@ -172,7 +163,7 @@ def q_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------
 
 _PRF_ORACLE = f"""
-WITH pred AS ({_langid_cte()}),
+WITH pred AS ({_LANGID_ORACLE}),
 classes AS (SELECT DISTINCT lang AS cls FROM pred),
 stats AS (
   SELECT c.cls,

@@ -12,8 +12,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from gfwspark import dedup, similarity, tables, text
-from gfwspark.queries import register
-from gfwspark.text import _FP_MOD, STOPWORDS
+from gfwspark.queries import _D_TOKS, _LANGID_ORACLE, register
+from gfwspark.text import _FP_MOD
 
 # embeddings table vector width (TESTDATA.md) — passed explicitly so no
 # plan-build-time Spark job infers it
@@ -21,11 +21,6 @@ _EMB_DIM = 64
 
 # ---------------------------------------------------------------- SQL bits
 
-# DuckDB: whitespace tokens of trimmed text (empty → [])
-_D_TOKS = (
-    "CASE WHEN length(trim(text)) = 0 THEN [] "
-    "ELSE regexp_split_to_array(trim(text), '\\s+') END"
-)
 # DuckDB 32-bit md5-prefix hash of a string expression {x}
 def _d_hash32(x: str) -> str:
     return f"('0x' || substr(md5({x}), 1, 8))::BIGINT"
@@ -107,33 +102,6 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.with_quality_score(d).select(
         "doc_id", "n_chars_actual", "alpha_ratio", "punct_ratio", "quality"
     )
-
-
-_lex_values = ", ".join(
-    f"('{w}', '{lang}')" for lang, ws in STOPWORDS.items() for w in ws
-)
-_LANGID_ORACLE = f"""
-WITH lex(word, cand_lang) AS (VALUES {_lex_values}),
-toks AS (
-  SELECT doc_id,
-    lower(regexp_replace(word, '[^A-Za-z]', '', 'g')) AS word
-  FROM (SELECT doc_id, unnest({_D_TOKS}) AS word FROM documents)
-),
-hits AS (
-  SELECT t.doc_id, l.cand_lang, count(*) AS hits
-  FROM toks t JOIN lex l ON t.word = l.word
-  GROUP BY t.doc_id, l.cand_lang
-),
-best AS (
-  SELECT doc_id, cand_lang AS pred_lang, hits,
-    row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, cand_lang) AS rk
-  FROM hits
-)
-SELECT d.doc_id, d.lang,
-  coalesce(b.pred_lang, 'und') AS pred_lang,
-  coalesce(b.hits, 0) AS hits
-FROM documents d LEFT JOIN (SELECT * FROM best WHERE rk = 1) b USING (doc_id)
-"""
 
 
 @register("lang_id", _LANGID_ORACLE)

@@ -14,6 +14,8 @@ timestamps (metadata.py:418-433), and writes JSON inference rows
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -334,15 +336,6 @@ def _read_table_meta(path: str) -> dict | None:
         return json.load(f)
 
 
-def _read_schema_manifest(path: str) -> list[str] | None:
-    meta = _read_table_meta(path)
-    if meta is None:
-        return None
-    if "schema" in meta:
-        return T.StructType.fromJson(meta["schema"]).names
-    return meta["columns"]  # written before manifests recorded the schema
-
-
 def _table_meta(schema: T.StructType, extra: dict | None = None) -> dict:
     """The manifest of a table written with ``schema``: ``extra``
     (table-level metadata beyond the schema; today n_buckets for the
@@ -372,32 +365,21 @@ def _table_extras(path: str) -> dict:
     """The manifest entries of the table at ``path`` other than its
     schema, for a rewrite to pass through."""
     meta = _read_table_meta(path) or {}
-    return {k: v for k, v in meta.items() if k not in ("schema", "columns")}
+    return {k: v for k, v in meta.items() if k != "schema"}
 
 
-def read_table(
-    spark: SparkSession, path: str, force_merge: bool = False
-) -> DataFrame:
-    """Read a managed parquet table with its COMPLETE schema.  When the
-    manifest records the schema (upsert_partitioned, compact_table and
-    layout.zorder_table each record the schema they wrote), the read
-    uses it: no file footer is opened and no Spark job
-    starts, and a file written before a column was added reads that
-    column as NULL, as mergeSchema would.  A table without a manifest,
-    or with a manifest that records only column names (written before
-    the schema was recorded), is read as before: the first-file schema,
-    re-read with mergeSchema if the manifest names columns it lacks.
-    ``force_merge`` skips the manifest and always merges — for tables
-    whose schema history is unknown (no manifest)."""
-    if force_merge:
-        return spark.read.option("mergeSchema", "true").parquet(path)
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """Read a managed parquet table with its COMPLETE schema: the schema
+    its manifest records (upsert_partitioned, compact_table and
+    layout.zorder_table each record the schema they wrote), so no file
+    footer is opened, no Spark job starts, and a file written before a
+    column was added reads that column as NULL, as mergeSchema would.
+    A table without a manifest has an unknown schema history and is read
+    with mergeSchema."""
     meta = _read_table_meta(path)
-    if meta is not None and "schema" in meta:
-        return spark.read.schema(T.StructType.fromJson(meta["schema"])).parquet(path)
-    df = spark.read.parquet(path)
-    if meta is not None and not set(meta["columns"]) <= set(df.columns):
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-    return df
+    if meta is None:
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    return spark.read.schema(T.StructType.fromJson(meta["schema"])).parquet(path)
 
 
 def _data_files(path: str) -> list[str]:
@@ -430,11 +412,7 @@ def _upsert_commit(path: str) -> None:
         if os.path.exists(src):
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             os.replace(src, dst)
-    # a journal written before the manifest recorded the schema lists
-    # the column names
-    _write_table_meta(path, journal.get("meta") or {
-        **journal["extra"], "columns": sorted(journal["columns"])
-    })
+    _write_table_meta(path, journal["meta"])
     for f in journal["deletes"]:
         d, name = os.path.split(f)
         for p in (f, os.path.join(d, f".{name}.crc")):
@@ -446,13 +424,14 @@ def _upsert_commit(path: str) -> None:
 def recover_upsert(path: str) -> None:
     """Finish or discard a write cut short at ``path``: the one recovery
     of a managed table, which every writer (upsert_partitioned,
-    windows.merge_append_into_blocks_table, compact_table,
-    layout.zorder_table) runs at entry, before it reads the table.  A
-    staging directory with a journal is a commit cut short and is rolled
-    forward; one without is an unfinished write and is discarded, which
-    leaves the table as it was before that write (and no directory at
-    all when that write was the table's first).  Until then a reader
-    may see a commit cut short: old and new files side by side."""
+    windows.merge_append_into_blocks_table, and compact_table and
+    layout.zorder_table through _rewrite_table) runs at entry, before
+    it reads the table.  A staging directory with a journal is a commit
+    cut short and is rolled forward; one without is an unfinished write
+    and is discarded, which leaves the table as it was before that
+    write (and no directory at all when that write was the table's
+    first).  Until then a reader may see a commit cut short: old and
+    new files side by side."""
     import os
     import shutil
 
@@ -468,14 +447,14 @@ def recover_upsert(path: str) -> None:
 def _staged_write(
     path: str,
     out: DataFrame,
-    deletes: list[str] | None = None,
-    meta: dict | None = None,
-    group: Column | None = None,
+    deletes: list[str],
+    meta: dict,
+    group: Column | None,
 ) -> None:
     """Write ``out`` into the table at ``path`` and delete the data
     files ``deletes`` (local paths) in one journal commit: the one
     commit protocol of every managed-table writer (upsert_partitioned,
-    compact_table, layout.zorder_table).
+    and _rewrite_table for compact_table and layout.zorder_table).
 
     1. ``out`` is written to the staging directory `path/_upsert_tmp/`,
        partitioned by `_bucket` (when it has that column) and by
@@ -495,18 +474,12 @@ def _staged_write(
 
     A crash before step 4 leaves every data file as it was; from then on
     recover_upsert rolls the commit forward.  Sidecar directories are
-    never touched.  The defaults rewrite the whole table: ``deletes``
-    every data file (_data_files), ``meta`` the schema of ``out`` with
-    the table's other manifest entries."""
+    never touched."""
     import glob
     import json
     import os
 
     existed = os.path.exists(path)
-    if deletes is None:
-        deletes = _data_files(path)
-    if meta is None:
-        meta = _table_meta(out.schema, _table_extras(path))
     staging = os.path.join(path, _UPSERT_STAGING)
     parts = ["_bucket"] if "_bucket" in out.columns else []
     parts.append("_file_group")
@@ -640,19 +613,14 @@ def upsert_partitioned(
     schema = b.schema
     out, hits = b, []
     if existed:
-        # read_table consults the schema manifest: a table that holds
-        # mixed-schema files (a prior evolved upsert) is read with its
-        # recorded union schema (or, before the manifest recorded one,
-        # with mergeSchema) — otherwise Spark infers the schema from one
-        # arbitrary file, and an old-schema draw would make this merge
-        # silently rewrite the hit files without the evolved columns
-        # (permanent data loss).  A table WITHOUT a manifest has an
-        # unknown schema history (created before the sidecar existed,
-        # or by a plain parquet write): force mergeSchema once — this
-        # upsert then writes the manifest and the cheap path resumes.
-        table = read_table(
-            spark, path, force_merge=_read_schema_manifest(path) is None
-        )
+        # read_table reads a table that holds mixed-schema files (a
+        # prior evolved upsert) with its recorded union schema, and one
+        # without a manifest with mergeSchema — Spark would otherwise
+        # infer the schema from one arbitrary file, and an old-schema
+        # draw would make this merge silently rewrite the hit files
+        # without the evolved columns (permanent data loss).  This
+        # upsert then writes the manifest.
+        table = read_table(spark, path)
         new_cols = set(b.columns) - set(table.columns)
         lost_cols = set(table.columns) - set(b.columns)
         if (new_cols or lost_cols) and not allow_schema_evolution:
@@ -715,6 +683,60 @@ def upsert_partitioned(
     return {"touched_buckets": touched, "upserted": upserted, "deleted": deleted}
 
 
+def _rewrite_table(
+    spark: SparkSession,
+    path: str,
+    plan: Callable[[DataFrame, int], tuple[list[Column], int]],
+) -> dict:
+    """Rewrite every data file of the managed table at ``path`` in one
+    journal commit (_staged_write): the one body of compact_table and
+    layout.zorder_table, which differ only in ``plan``.  After
+    recover_upsert the table is read with read_table (its complete
+    schema, so an evolved table keeps every column), and ``plan(table,
+    data bytes)`` returns the rewrite's sort key and its file count.
+
+    The rows are range-partitioned on (`_bucket`, key) into that many
+    partitions and sorted within them on (`_bucket`, file group, key).
+    A bucket-partitioned table keeps its `_bucket=k/` directories (a
+    flat rewrite would leave root-level files that collide with the next
+    upsert's partition directories), a bucket bigger than one file's
+    share spans several files, and the sort already satisfies the
+    partitioned writer's required ordering, so no extra sort scrambles
+    the key's clustering.  Without a key a seeded rand spreads the rows
+    over the files; the table's content does not depend on it.  Each
+    row keeps its file group, read from its file's `g<group>-` name
+    prefix (0 for a file without one): the blocks table's open tails
+    stay out of its sealed files.  A flat table is rewritten to
+    `g<group>-part-*` files at its root.  Sidecar directories
+    (`_entity_stats`) stay where they are, and the manifest keeps the
+    table's other entries (n_buckets).  Returns {files_before,
+    files_after, bytes}."""
+    import os
+
+    recover_upsert(path)
+    files = _data_files(path)
+    total_bytes = sum(os.path.getsize(f) for f in files)
+    df = read_table(spark, path)
+    order, n_files = plan(df, total_bytes)
+    keys = {f"_key{i}": c for i, c in enumerate(order)}
+    lead = ["_bucket"] if "_bucket" in df.columns else []
+    group = F.regexp_extract("_metadata.file_name", "^g([^-]+)-", 1)
+    group = F.when(group == "", "0").otherwise(group)
+    out = (
+        df.withColumns({"_file_group": group, **keys})
+        .repartitionByRange(n_files, *lead, *(list(keys) or [F.rand(42)]))
+        .sortWithinPartitions(*lead, "_file_group", *keys)
+        .drop(*keys)
+    )
+    meta = _table_meta(df.schema, _table_extras(path))
+    _staged_write(path, out, files, meta, F.col("_file_group"))
+    return {
+        "files_before": len(files),
+        "files_after": len(_data_files(path)),
+        "bytes": total_bytes,
+    }
+
+
 def compact_table(
     spark: SparkSession,
     path: str,
@@ -731,55 +753,18 @@ def compact_table(
     accreted by per-bucket upserts / streaming commits ends up with
     thousands of KB-sized files, and every downstream scan pays one
     task + one open per file.  Sizing uses the on-disk byte total (not
-    row counts), so compressed width is what drives the output count.
+    row counts), so compressed width is what drives the output count
+    (each file group of a bucket is a file of its own on top of it).
 
-    The rewrite is one journal commit (_staged_write, the upsert's
-    commit): the new files are staged inside the table, then renamed in
-    beside the old ones, which are deleted after.  A crash before the
-    journal leaves every data file as it was; after it, the next
-    writer's recover_upsert rolls the commit forward, and until then a
-    reader sees old and new files side by side (as after an upsert cut
-    short).  Sidecar directories (`_entity_stats`) stay where they are.
-    A bucketed table keeps its `_bucket=k/` directories, a flat one
-    compacts to `g0-part-*` files at its root.  Single-writer contract,
-    like the upsert sink.  Returns {files_before, files_after, bytes}."""
-    import os
+    The rewrite is _rewrite_table's one journal commit, in place: a
+    crash before the journal leaves every data file as it was; after
+    it, the next writer's recover_upsert rolls the commit forward, and
+    until then a reader sees old and new files side by side (as after
+    an upsert cut short).  Single-writer contract, like the upsert
+    sink.  Returns {files_before, files_after, bytes}."""
 
-    recover_upsert(path)
-    files = _data_files(path)
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
-    # manifest-aware read: compacting an evolved (mixed-schema) table
-    # must rewrite the union schema, not one arbitrary file's
-    df = read_table(spark, path)
-    # a bucket-partitioned upsert table (_bucket=k/ dirs) must keep its
-    # layout: a flat rewrite would leave root-level files that collide
-    # with the next upsert's partition dirs ("conflicting directory
-    # structures") and break its partition-pruned bucket rewrites.
-    # Range-partitioning on (_bucket, <within-bucket order>) honors
-    # target_mb ACROSS buckets — a bucket bigger than target_mb spans
-    # several range partitions (several files in its dir), instead of
-    # collapsing to one oversized single-task file — and starting the
-    # within-partition sort with _bucket means the partitioned writer's
-    # required ordering is already satisfied (no extra SortExec to
-    # scramble the sort_cols clustering on spill).
-    bucketed = "_bucket" in df.columns
-    if bucketed:
-        inner = (
-            [F.col(c) for c in sort_cols] if sort_cols
-            # no requested order: seeded rand only spreads FILE
-            # assignment inside a bucket; table content is unaffected
-            else [F.rand(42)]
-        )
-        out = df.repartitionByRange(n_out, F.col("_bucket"), *inner)
-        out = out.sortWithinPartitions("_bucket", *(sort_cols or []))
-    else:
-        out = df.repartition(n_out)
-        if sort_cols:
-            out = out.sortWithinPartitions(*sort_cols)
-    _staged_write(path, out, files)
-    return {
-        "files_before": len(files),
-        "files_after": len(_data_files(path)),
-        "bytes": total_bytes,
-    }
+    def plan(df: DataFrame, total_bytes: int) -> tuple[list[Column], int]:
+        n_files = max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
+        return [F.col(c) for c in sort_cols or []], n_files
+
+    return _rewrite_table(spark, path, plan)

@@ -61,5 +61,9 @@ def observed_rows(obs: Observation) -> int:
 def release(df: DataFrame) -> None:
     """Drop the blocks of the localCheckpoint'ed frame ``df`` now rather
     than at the next JVM GC (when the ContextCleaner would).  Nothing may
-    read ``df`` afterwards."""
-    df._jdf.logicalPlan().rdd().unpersist(False)
+    read ``df`` afterwards.  SparkContext.unpersistRDD is the call
+    RDD.unpersist makes after it warns that a locally checkpointed RDD
+    cannot be recomputed: the release is intended, so it skips the
+    warning."""
+    rdd = df._jdf.logicalPlan().rdd()
+    rdd.sparkContext().unpersistRDD(rdd.id(), False)

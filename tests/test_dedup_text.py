@@ -878,7 +878,7 @@ def test_lazy_prepare_corpus_build_starts_no_job(spark, jobs_started):
     """Building the lazy corpus-prep plan (materialize_survivors=False)
     starts no Spark job: every explode operator sizes its input
     without reading a partition count."""
-    from gfwspark import corpus, queries  # noqa: F401  (registry init order)
+    from gfwspark import corpus
     from gfwspark.queries_ml import _corpus_prep_inputs
     from tests.conftest import SF_SMALL
 
@@ -892,7 +892,7 @@ def test_materialized_prepare_corpus_keeps_two_checkpoints(spark):
     survivor and shingle checkpoints its result reads, and releases the
     gate frame's once the survivors are materialized: it adds 2
     persistent RDDs, not 3."""
-    from gfwspark import corpus, queries  # noqa: F401  (registry init order)
+    from gfwspark import corpus
     from gfwspark.queries_ml import _corpus_prep_inputs
     from tests.conftest import SF_SMALL
 

@@ -131,7 +131,8 @@ def test_zorder_table_envelope_property(spark, tmp_path):
         "event_id", "user_id", "value"
     )
     path = str(tmp_path / "z")
-    r = layout.zorder_table(ev, path, ["user_id", "value"], bits=4, n_files=8)
+    ev.write.parquet(path)
+    r = layout.zorder_table(spark, path, ["user_id", "value"], bits=4, n_files=8)
     assert set(r["boundaries"]) == {"user_id", "value"}
     back = spark.read.parquet(path)
     assert back.count() == ev.count()
@@ -263,12 +264,14 @@ def test_entity_stats_roundtrip_feeds_asof_auto(spark, tmp_path):
 
 
 def test_zorder_table_in_place_and_crash_recovery(spark, tmp_path, monkeypatch):
-    """zorder_table supports the natural OPTIMIZE ZORDER call — df
-    reading from `path` itself — through the upsert journal: a flat
-    table is rewritten to `g0-part-*` files at its root; a Z-ordering
-    cut short before its journal leaves every data file as it was, and
-    one cut short in its delete step (old and new files side by side)
-    is rolled forward by the next writer, every row once."""
+    """zorder_table rewrites its table in place through the upsert
+    journal: a flat table is rewritten to `g0-part-*` files at its
+    root; a Z-ordering cut short before its journal leaves every data
+    file as it was, and one cut short in its delete step (old and new
+    files side by side) is rolled forward by the next writer, every row
+    once.  After a compaction cut short in its delete step, zorder_table
+    reads the table once its recovery has run: it succeeds, every row
+    once."""
     import os
 
     from gfwspark import layout, sources, tables
@@ -281,8 +284,7 @@ def test_zorder_table_in_place_and_crash_recovery(spark, tmp_path, monkeypatch):
     n = ev.count()
 
     def zorder():
-        src = spark.read.parquet(path)
-        layout.zorder_table(src, path, ["user_id", "value"], bits=3, n_files=4)
+        layout.zorder_table(spark, path, ["user_id", "value"], bits=3, n_files=4)
 
     def ids():
         return sorted(r[0] for r in spark.read.parquet(path).select("event_id").collect())
@@ -308,6 +310,15 @@ def test_zorder_table_in_place_and_crash_recovery(spark, tmp_path, monkeypatch):
     assert os.path.exists(os.path.join(path, "_upsert_tmp", "_journal.json"))
     assert spark.read.parquet(path).count() == 2 * n  # old and new side by side
     sources.compact_table(spark, path)  # the next writer rolls it forward
+    assert not os.path.exists(os.path.join(path, "_upsert_tmp"))
+    assert ids() == want
+
+    cut_short(
+        monkeypatch, "remove", lambda t: t.startswith(path),
+        lambda: sources.compact_table(spark, path),
+    )
+    assert spark.read.parquet(path).count() == 2 * n
+    zorder()  # rolls the compaction forward, then reads the table
     assert not os.path.exists(os.path.join(path, "_upsert_tmp"))
     assert ids() == want
 
@@ -462,9 +473,7 @@ def test_rewrites_preserve_entity_stats_sidecar(spark, tmp_path):
         data_files += sum(f.endswith(".parquet") for f in files)
     assert r["files_after"] == data_files
 
-    layout.zorder_table(
-        sources.read_table(spark, p), p, ["value"], bits=2, n_files=2
-    )
+    layout.zorder_table(spark, p, ["value"], bits=2, n_files=2)
     assert file_stamps(sidecar) == stamps
     after_z = layout.read_entity_stats(spark, p).toPandas().sort_values(
         "image_id").reset_index(drop=True)
@@ -528,6 +537,35 @@ def test_blocks_table_keeps_open_tails_in_their_own_files(spark, tmp_path):
     got = spark.read.parquet(tbl).select(*want.columns)
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_compaction_keeps_the_blocks_tables_file_groups(spark, tmp_path):
+    """compact_table keeps each row's file group (its file's
+    `g<group>-` prefix): after a compaction, the next append rewrites
+    only open-tail (`gtrue-`) files, every other file keeps its inode
+    and mtime, and the table still equals stride_blocks over all
+    rows."""
+    import os
+
+    from gfwspark import sources, windows
+
+    S = 4
+    tbl = str(tmp_path / "blocks")
+    batches = [
+        _series(spark, {f"e{k}": (0, 3 + 5 * k) for k in range(8)}),
+        _series(spark, {"e0": (100, 2), "e3": (100, 6), "e5": (100, 1), "new": (100, 9)}),
+        _series(spark, {"e0": (200, 1), "e1": (200, 4), "e7": (200, 3), "e3": (200, 5)}),
+    ]
+    for batch in batches[:2]:
+        windows.merge_append_into_blocks_table(spark, batch, tbl, "v", S, n_buckets=2)
+    sources.compact_table(spark, tbl)
+    kept = {f: s for f, s in file_stamps(tbl, ".parquet").items()
+            if not os.path.basename(f).startswith("gtrue-")}
+    assert kept
+    windows.merge_append_into_blocks_table(spark, batches[2], tbl, "v", S, n_buckets=2)
+    assert {f: s for f, s in file_stamps(tbl, ".parquet").items() if f in kept} == kept
+    allrows = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    _blocks_equal_rebuild(spark, tbl, allrows, S)
 
 
 def test_blocks_merge_recovers_a_commit_cut_short(spark, tmp_path, monkeypatch):

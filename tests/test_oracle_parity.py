@@ -72,6 +72,25 @@ def test_all_queries_have_callables():
         assert name in q
 
 
+@pytest.mark.parametrize(
+    "module",
+    ["queries", "queries_ml", "queries_metrics", "queries_extra", "queries_sampling"],
+)
+def test_query_module_imports_on_its_own(module):
+    """Each query module imports first in a fresh interpreter: no
+    module reads a name from another that is still half-initialized."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", f"import gfwspark.{module}"],
+        cwd=root, capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 0, r.stderr
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

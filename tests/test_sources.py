@@ -604,7 +604,6 @@ def test_gate_scale_pandas_raises_on_oversize(spark):
     driver-gate scale; the cap turns that convention into a raise."""
     import pytest
 
-    from gfwspark import queries  # noqa: F401  (registry init order)
     from gfwspark.queries_ml import _gate_scale_pandas
 
     df = spark.range(500)
@@ -646,10 +645,10 @@ def test_compact_preserves_bucket_partition_layout(spark, tmp_path):
 
 
 def test_upsert_merges_schema_on_manifestless_mixed_table(spark, tmp_path):
-    """A legacy mixed-schema table WITHOUT a manifest (created before
-    the sidecar existed) must be read with mergeSchema by the upsert's
-    compatibility check — otherwise an old-schema first-file draw
-    would silently rewrite touched buckets without the evolved
+    """A mixed-schema table WITHOUT a manifest (written by plain parquet
+    writes) reads with mergeSchema, through read_table and in the
+    upsert's compatibility check — otherwise an old-schema first-file
+    draw would silently rewrite touched buckets without the evolved
     column."""
     from gfwspark import sources
     from gfwspark.checkpoint import bucket_of
@@ -663,7 +662,8 @@ def test_upsert_merges_schema_on_manifestless_mixed_table(spark, tmp_path):
         [("c", 3.0, "X")], "image_id string, val double, extra string"
     ).withColumn("_bucket", bucket_of("image_id", 4))
     evolved.write.mode("append").partitionBy("_bucket").parquet(path)
-    assert sources._read_schema_manifest(path) is None
+    assert sources._read_table_meta(path) is None
+    assert "extra" in sources.read_table(spark, path).columns
 
     up = spark.createDataFrame(
         [("a", 10.0, "Y")], "image_id string, val double, extra string"
@@ -677,26 +677,6 @@ def test_upsert_merges_schema_on_manifestless_mixed_table(spark, tmp_path):
     got = {r["image_id"]: (r["val"], r["extra"]) for r in back.collect()}
     assert got["a"] == (10.0, "Y")
     assert got["c"] == (3.0, "X")  # evolved value survived the rewrite
-
-
-def test_zorder_refuses_schema_dropping_rewrite(spark, tmp_path):
-    """zorder_table must refuse a df missing columns the table's
-    manifest records — rewriting with the narrower schema would
-    permanently drop the evolved columns' values."""
-    import pytest
-
-    from gfwspark import layout, sources
-
-    path = str(tmp_path / "z")
-    spark.createDataFrame(
-        [(1, 10.0, "k")], "event_id long, value double, extra string"
-    ).write.parquet(path)
-    sources._write_table_meta(
-        path, sources._table_meta(spark.read.parquet(path).schema)
-    )
-    narrow = spark.read.parquet(path).drop("extra")
-    with pytest.raises(ValueError, match="manifest columns"):
-        layout.zorder_table(narrow, path, ["event_id", "value"], bits=2)
 
 
 def test_zorder_preserves_bucket_layout(spark, tmp_path):
@@ -713,8 +693,7 @@ def test_zorder_preserves_bucket_layout(spark, tmp_path):
         "image_id string, seq int, val double",
     )
     sources.upsert_partitioned(spark, df, path, keys=["image_id"], n_buckets=4)
-    src = sources.read_table(spark, path)
-    layout.zorder_table(src, path, ["seq", "val"], bits=3, n_files=8)
+    layout.zorder_table(spark, path, ["seq", "val"], bits=3, n_files=8)
     loose = [e for e in os.listdir(path) if not e.startswith(("_", "."))]
     assert not loose and any(
         e.startswith("_bucket=") for e in os.listdir(path)
@@ -834,5 +813,5 @@ def test_read_table_matches_merge_schema_after_evolution_and_rewrites(
     same_as_merge_schema()
     sources.compact_table(spark, path, target_mb=1024)
     same_as_merge_schema()
-    layout.zorder_table(sources.read_table(spark, path), path, ["seq"], bits=2)
+    layout.zorder_table(spark, path, ["seq"], bits=2)
     same_as_merge_schema()
